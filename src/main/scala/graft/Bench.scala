@@ -1,18 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC pins the NTZ→LTZ reinterpretation in Tables.events (and every
-      // date_format rendering) to the oracle's naive-timestamp reading —
-      // Verify/Explain set the same; bench numbers must run the same plans.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM (classloading, codegen infrastructure, parquet reader)
     // so the alphabetically-first query doesn't absorb ~5s of one-time

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic stage profiler (guide §1.1): runs one declared query with a
   * listener and prints, per completed stage, the summed task wall time,
@@ -10,20 +9,27 @@ import org.apache.spark.sql.SparkSession
   * this sandbox). Substrates are warmed by an untimed pass first, exactly
   * like Bench's rep-0, so the probe sees the steady-state per-rep cost.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.StageProbe <sfDir> name[,name] [reps]"
+  * Usage: [SPARK_GRAFT_CPUS=n] sbt "runMain graft.StageProbe <sfDir> name[,name] [reps]"
   */
 object StageProbe {
+  private val Usage = "usage: graft.StageProbe <sfDir> name[,name] [reps]"
+
+  /** (sfDir, query names, reps), or the message to print before exiting 2. */
+  private[graft] def parseArgs(args: Array[String]): Either[String, (String, Seq[String], Int)] =
+    args match {
+      case Array(sfDir, list, rest @ _*) if rest.size <= 1 =>
+        val names = list.split(",").toSeq.filter(_.nonEmpty)
+        val unknown = names.filterNot(SparkEntry.queries.contains)
+        val reps = rest.headOption.fold(Option(1))(_.toIntOption).filter(_ > 0)
+        if (names.isEmpty) Left(Usage)
+        else if (unknown.nonEmpty) Left(s"unknown query: ${unknown.mkString(",")}\n$Usage")
+        else reps.toRight(s"reps must be a positive integer\n$Usage").map((sfDir, names, _))
+      case _ => Left(Usage)
+    }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args(1).split(",").toSeq
-    val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val (sfDir, names, reps) = parseArgs(args).fold({ msg => System.err.println(msg); sys.exit(2) }, identity)
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     // JVM warm like Bench
     spark.read.parquet(s"$sfDir/region.parquet")

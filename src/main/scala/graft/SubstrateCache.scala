@@ -3,122 +3,100 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Central registry for persisted per-dataset substrates (dedup shingle
-  * table, Jaccard pair table, MinHash/SimHash signatures, LSH codes,
-  * scaled IVF embeddings). One working set per session: requesting a
-  * substrate for dataset `d` first evicts (unpersists + drops) every
-  * substrate the session holds for *other* datasets, so block-manager
-  * memory is bounded by one dataset's substrates no matter how many scale
-  * factors a long-lived JVM walks through — the round-2 caches keyed
-  * (session, sfDir) grew without bound instead.
+/** Central registry for the materialized state queries share within one
+  * (session, dataset): dedup shingle and pair tables, MinHash/SimHash
+  * signatures, LSH codes, kNN edges, intermediate tables a plan reads
+  * several times (`skipgram_pmi`'s pair census, `audience_overlap`'s
+  * memberships), and scalars derived from them (node counts that size a
+  * recurrence).
+  *
+  * One lifecycle for all of it. An entry is built once per (session,
+  * dataset, tag) under a per-key lock and then served to every caller,
+  * on any thread, until it is evicted. Requesting anything for dataset `d`
+  * first evicts every entry the session holds for another dataset, and
+  * every entry of a stopped session: block-manager memory stays bounded by
+  * one dataset's working set however many scale factors a long-lived JVM
+  * walks through. An entry is never released while its dataset is live,
+  * so a consumer running on another thread never loses its blocks
+  * mid-read.
+  *
+  * Each frame records its build seconds ([[buildSeconds]], summed by
+  * graftbench's traced run as `substrate.build_s`); leaf substrates also
+  * record the physical plan that built them ([[buildPlan]]).
   *
   * At 100 TB the durable form of a substrate is a parquet table persisted
-  * between pipeline stages; this cache is the in-session tier that keeps
-  * Bench reps and multi-query runs from recomputing signatures, not a
+  * between pipeline stages; this cache is the in-session tier, not a
   * cross-dataset store.
   */
 object SubstrateCache {
 
-  private val entries = TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private type Key = (SparkSession, String, String)
 
-  // Substrate-derived SCALARS (node/row counts used to size recurrences):
-  // the count of a materialized substrate is immutable for the life of the
-  // (session, dataset) working set, so computing it once beside the frame
-  // removes one driver job per consumer invocation (optimization round 17
-  // — the pagerank/textrank loops and the scaled-IVF consumers each paid
-  // a count() job per run).
-  private val scalars = TrieMap.empty[(SparkSession, String, String), Long]
+  /** A cached frame or scalar, the plan that built it, and the build's wall seconds. */
+  private final case class Entry(frame: Option[DataFrame], scalar: Long, plan: Option[String], secs: Double = 0)
 
-  // Build-time physical plan per substrate (spec/audit hook): consumers
-  // see only the checkpoint leaf, so the plan that COMPUTES a substrate
-  // is recorded here at build time.
-  private val buildPlans = TrieMap.empty[(SparkSession, String, String), String]
-
-  // Wall seconds each substrate build cost (bench reporting hook): the
-  // untimed warm pass absorbs shared-frame builds by design, so Bench
-  // prints these as their own JSON line to keep the totals interpretable
-  // (optimization round 18, verdict item #6).
-  private val buildSecs = TrieMap.empty[(SparkSession, String, String), Double]
-
-  /** Build seconds per substrate tag for (session, dataset) — what the
-    * timed bench numbers exclude. Bench reporting hook.
-    */
-  def buildSeconds(s: SparkSession, d: String): Map[String, Double] =
-    buildSecs.collect { case ((ss, dd, tag), secs) if (ss eq s) && dd == d => tag -> secs }.toMap
-
-  /** The physical plan that built substrate `tag`, if it was built (and
-    * not evicted) in this session. Spec/audit hook.
-    */
-  def buildPlan(s: SparkSession, d: String, tag: String): Option[String] =
-    buildPlans.get((s, d, tag))
+  private val entries = TrieMap.empty[Key, Entry]
 
   // One lock object per key: long builds (the CC fixpoint runs whole Spark
-  // jobs) must not block unrelated substrate builds behind a global
-  // monitor; only same-key callers serialize.
-  private val locks = TrieMap.empty[(SparkSession, String, String), Object]
+  // jobs) must not block unrelated builds behind a global monitor, and
+  // same-key callers must not both run the side-effecting build and strand
+  // the loser's checkpoint in the block manager.
+  private val locks = TrieMap.empty[Key, Object]
 
-  /** Get-or-build the persisted, materialized substrate `tag` for
-    * (session, dataset). Builds run eager `localCheckpoint()` so the first
-    * caller pays the materialization and later callers read the stored
-    * partitions THROUGH A LEAF PLAN (`LogicalRDD`): the substrate's full
-    * lineage (Lloyd chains, CC fixpoints, banded joins) is cut off, so
-    * every consumer action analyzes, canonicalizes and ships a one-node
-    * subtree instead of re-walking the whole build plan — measured 1.5-2x
-    * wall on the kNN-graph consumers at sf0.1 (optimization round 17,
-    * guide §5: `localCheckpoint` is the cheap lineage cut). The previous
-    * `persist()+count()` form kept the lineage attached: correct, but
-    * every reference re-analyzed and cache-matched the deep tree. At
-    * 100 TB the durable form of a substrate is a parquet table between
+  /** Build seconds per frame tag for (session, dataset). */
+  def buildSeconds(s: SparkSession, d: String): Map[String, Double] =
+    entries.collect { case ((ss, dd, tag), e) if (ss eq s) && dd == d && e.frame.isDefined => tag -> e.secs }.toMap
+
+  /** The physical plan that built leaf substrate `tag`, if it was built
+    * (and not evicted) in this session. Spec/audit hook.
+    */
+  def buildPlan(s: SparkSession, d: String, tag: String): Option[String] =
+    entries.get((s, d, tag)).flatMap(_.plan)
+
+  private def getOrBuild(s: SparkSession, d: String, tag: String)(build: => Entry): Entry = {
+    evictWhere(k => k._1.sparkContext.isStopped || ((k._1 eq s) && k._2 != d))
+    val key = (s, d, tag)
+    def built(): Entry = {
+      val t0 = System.nanoTime()
+      val e = build.copy(secs = (System.nanoTime() - t0) / 1e9)
+      entries.put(key, e)
+      e
+    }
+    entries.getOrElse(key, locks.getOrElseUpdate(key, new Object).synchronized(entries.getOrElse(key, built())))
+  }
+
+  /** Get-or-build the LEAF substrate `tag` for (session, dataset): an eager
+    * `localCheckpoint()`, so later callers read the stored partitions
+    * through a one-node `LogicalRDD` plan. The substrate's lineage (Lloyd
+    * chains, CC fixpoints, banded joins) is cut off, and no consumer action
+    * re-analyzes it — measured 1.5-2x wall on the kNN-graph consumers at
+    * sf0.1 against the `persist()+count()` form, which kept the lineage
+    * attached. At 100 TB the durable form is a parquet table between
     * pipeline stages, whose scan is exactly this kind of leaf.
     *
-    * Builds are serialized PER KEY: a concurrent `getOrElseUpdate` could
-    * otherwise run the side-effecting build twice and strand the losing
-    * checkpoint in the block manager, while a single global monitor would
-    * stall every other session/dataset behind one slow build.
-    *
-    * Cluster caveat (local-mode engine, documented per the round-17
-    * advisor): `localCheckpoint` truncates lineage with UNREPLICATED
-    * executor-local blocks — on a multi-executor cluster, losing one
-    * executor after a substrate builds makes every consumer of that
-    * (session, dataset) fail unrecoverably, and it is unsafe under
-    * dynamic allocation. The production form of a substrate is a parquet
-    * table written between pipeline stages (or `checkpoint()` to reliable
-    * storage); the local leaf is the same design one tier down and dies
-    * with the session by design.
+    * Cluster caveat: `localCheckpoint` keeps UNREPLICATED executor-local
+    * blocks. On a multi-executor cluster, losing one executor after a
+    * substrate builds makes every consumer of that (session, dataset) fail
+    * unrecoverably, and it is unsafe under dynamic allocation; there the
+    * substrate belongs in a parquet table or a reliable `checkpoint()`.
     */
-  def substrate(s: SparkSession, d: String, tag: String)(build: => DataFrame): DataFrame = {
-    evictStopped()
-    evictOthers(s, d)
-    val key = (s, d, tag)
-    entries.get(key) match {
-      case Some(df) => df
-      case None =>
-        val lock = locks.getOrElseUpdate(key, new Object)
-        lock.synchronized {
-          entries.get(key) match {
-            case Some(df) => df
-            case None =>
-              val t0 = System.nanoTime()
-              val b = build
-              // retain the BUILD's physical plan: the checkpoint leaf hides
-              // it from consumers, but plan-shape specs (and humans) still
-              // need to audit how the substrate itself is computed
-              buildPlans.put(key, b.queryExecution.executedPlan.toString)
-              val df = b.queryExecution.analyzed match {
-                // the build already materialized itself into a leaf (the
-                // fixpoint engines return checkpointed labels): adopt it —
-                // re-checkpointing a leaf would store every block twice
-                case _: org.apache.spark.sql.execution.LogicalRDD => b
-                case _ => b.localCheckpoint(true)
-              }
-              buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
-              entries.put(key, df)
-              df
-          }
-        }
-    }
-  }
+  def substrate(s: SparkSession, d: String, tag: String)(build: => DataFrame): DataFrame =
+    getOrBuild(s, d, tag) {
+      val b = build
+      // the leaf hides the build from consumers, so plan-shape specs (and
+      // humans) audit how the substrate is computed through this record
+      val plan = b.queryExecution.executedPlan.toString
+      val leaf = b.queryExecution.analyzed match {
+        // the build already materialized itself into a leaf (the fixpoint
+        // engines return checkpointed labels): re-checkpointing it would
+        // store every block twice
+        case _: LogicalRDD => b
+        case _ => b.localCheckpoint(true)
+      }
+      Entry(Some(leaf), 0L, Some(plan))
+    }.frame.get
 
   /** Get-or-build a COLUMNAR substrate: `persist()+count()` keeps the SQL
     * columnar cache (per-column compressed storage, column pruning at
@@ -130,154 +108,60 @@ object SubstrateCache {
     * leaf scan deserializes whole rows, arrays included. Narrow,
     * deep-lineage substrates (knn/CC/Lloyd families) want [[substrate]].
     */
-  def substrateColumnar(s: SparkSession, d: String, tag: String)(build: => DataFrame): DataFrame = {
-    evictStopped()
-    evictOthers(s, d)
-    val key = (s, d, tag)
-    entries.get(key) match {
-      case Some(df) => df
-      case None =>
-        val lock = locks.getOrElseUpdate(key, new Object)
-        lock.synchronized {
-          entries.get(key) match {
-            case Some(df) => df
-            case None =>
-              val t0 = System.nanoTime()
-              val df = build.persist()
-              df.count()
-              buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
-              entries.put(key, df)
-              df
-          }
-        }
-    }
-  }
+  def substrateColumnar(s: SparkSession, d: String, tag: String)(build: => DataFrame): DataFrame =
+    getOrBuild(s, d, tag) {
+      val df = build.persist()
+      df.count()
+      Entry(Some(df), 0L, None)
+    }.frame.get
 
   /** Get-or-compute a substrate-derived scalar (a count) for
-    * (session, dataset). Same lifecycle as [[substrate]] frames: evicted
-    * when the session switches datasets or stops.
+    * (session, dataset): it is immutable while the working set lives, so
+    * computing it once removes one driver job per consumer invocation.
     */
-  def scalar(s: SparkSession, d: String, tag: String)(build: => Long): Long = {
-    evictStopped()
-    evictOthers(s, d)
-    scalars.getOrElseUpdate((s, d, tag), build)
-  }
+  def scalar(s: SparkSession, d: String, tag: String)(build: => Long): Long =
+    getOrBuild(s, d, tag)(Entry(None, build, None)).scalar
 
-  // PER-INVOCATION scratch leaves: queries that materialize a shared
-  // mid-plan frame per run (a frame their own plan references 3-12x —
-  // NOT a cross-consumer substrate) register the leaf here so the next
-  // invocation releases its predecessor's blocks. Without this each rep
-  // leaks one checkpointed RDD until the ContextCleaner happens to
-  // collect it (the round-17 advisor's audience_overlap finding) —
-  // block-manager growth is now bounded at one leaf per (session,
-  // dataset, tag).
-  private val scratch = TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** Eagerly checkpoint `build` as this invocation's scratch leaf for
-    * (session, dataset, tag), releasing the PREVIOUS invocation's leaf.
-    * The caller must be done consuming the previous result before
-    * rebuilding (true for Bench reps and Verify, which materialize each
-    * query's output before the next invocation).
-    */
-  def scratchLeaf(s: SparkSession, d: String, tag: String)(build: => DataFrame): DataFrame = {
-    val df = build.localCheckpoint(true)
-    scratch.put((s, d, tag), df).foreach(release(_))
-    df
-  }
-
-  /** Unpersist a substrate's storage. A localCheckpointed Dataset's blocks
+  /** Unpersist a frame's storage. A localCheckpointed Dataset's blocks
     * belong to the RDD inside its `LogicalRDD` leaf (Dataset.unpersist only
     * consults the SQL cache manager and would silently leak them), so the
-    * release goes through the leaf's RDD handle; the legacy `persist()`
-    * path stays as the fallback for any non-checkpointed entry.
+    * release goes through the leaf's RDD handle; the `persist()` path stays
+    * as the fallback for any non-checkpointed frame.
     *
-    * `private[graft]` so loop engines (the CC fixpoints) and per-invocation
-    * scratch leaves can release superseded round state instead of pinning
-    * dead blocks until the ContextCleaner happens to collect them.
+    * `private[graft]` so loop engines (the CC fixpoints, BPE training) can
+    * release superseded round state instead of pinning dead blocks until
+    * the ContextCleaner happens to collect them.
     */
   private[graft] def release(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking)
+      case l: LogicalRDD => l.rdd.unpersist(blocking)
       case _ => df.unpersist(blocking)
     }
 
-  /** Unpersist and drop every substrate of `s` cached for a dataset other
-    * than `d`.
-    */
-  def evictOthers(s: SparkSession, d: String): Unit = {
-    entries.keySet.toList.foreach { k =>
-      if ((k._1 eq s) && k._2 != d) {
-        entries.remove(k).foreach(release(_, blocking = true))
-        locks.remove(k)
-      }
-    }
-    scalars.keySet.toList.foreach { k =>
-      if ((k._1 eq s) && k._2 != d) scalars.remove(k)
-    }
-    buildPlans.keySet.toList.foreach { k =>
-      if ((k._1 eq s) && k._2 != d) buildPlans.remove(k)
-    }
-    buildSecs.keySet.toList.foreach { k =>
-      if ((k._1 eq s) && k._2 != d) buildSecs.remove(k)
-    }
-    scratch.keySet.toList.foreach { k =>
-      if ((k._1 eq s) && k._2 != d) scratch.remove(k).foreach(release(_, blocking = true))
-    }
-  }
+  /** Unpersist and drop every entry of `s` cached for a dataset other than `d`. */
+  def evictOthers(s: SparkSession, d: String): Unit = evictWhere(k => (k._1 eq s) && k._2 != d)
 
-  /** Drop every substrate of session `s` (call on session stop). */
-  def evictSession(s: SparkSession): Unit = {
-    entries.keySet.toList.foreach { k =>
-      if (k._1 eq s) {
-        entries.remove(k).foreach { df =>
-          if (!s.sparkContext.isStopped) release(df, blocking = true)
-        }
-        locks.remove(k)
-      }
-    }
-    scalars.keySet.toList.foreach { k => if (k._1 eq s) scalars.remove(k) }
-    buildPlans.keySet.toList.foreach { k => if (k._1 eq s) buildPlans.remove(k) }
-    buildSecs.keySet.toList.foreach { k => if (k._1 eq s) buildSecs.remove(k) }
-    scratch.keySet.toList.foreach { k =>
-      if (k._1 eq s) scratch.remove(k).foreach { df =>
-        if (!s.sparkContext.isStopped) release(df, blocking = true)
-      }
-    }
-  }
+  /** Drop every entry of session `s` (call on session stop). */
+  def evictSession(s: SparkSession): Unit = evictWhere(_._1 eq s)
 
-  /** Release map entries of stopped/replaced sessions so a churned session
-    * never pins its DataFrames (their cached blocks died with the context,
-    * but the strong map key would otherwise keep the plans on the heap).
+  /** Drop every entry (and lock) whose key matches, releasing its blocks
+    * unless the context is already stopped (they died with it; dropping
+    * the entry keeps the strong key from pinning the session on the heap).
     */
-  private def evictStopped(): Unit = {
-    entries.keySet.toList.foreach { k =>
-      if (k._1.sparkContext.isStopped) {
-        entries.remove(k)
-        locks.remove(k)
+  private def evictWhere(pred: Key => Boolean): Unit = {
+    locks.keySet.filter(pred).foreach(locks.remove)
+    entries.keySet.filter(pred).foreach { k =>
+      entries.remove(k).flatMap(_.frame).foreach { df =>
+        if (!k._1.sparkContext.isStopped) release(df, blocking = true)
       }
-    }
-    scalars.keySet.toList.foreach { k =>
-      if (k._1.sparkContext.isStopped) scalars.remove(k)
-    }
-    // build plans/times too: a stopped session's (potentially multi-MB)
-    // executedPlan strings would otherwise pin the session on the heap —
-    // exactly what this method exists to prevent (round-17 advisor).
-    buildPlans.keySet.toList.foreach { k =>
-      if (k._1.sparkContext.isStopped) buildPlans.remove(k)
-    }
-    buildSecs.keySet.toList.foreach { k =>
-      if (k._1.sparkContext.isStopped) buildSecs.remove(k)
-    }
-    scratch.keySet.toList.foreach { k =>
-      if (k._1.sparkContext.isStopped) scratch.remove(k)
     }
   }
 
   /** Datasets this session currently holds substrates for (spec hook). */
   def liveDatasets(s: SparkSession): Set[String] =
-    entries.keySet.collect { case (ss, d, _) if ss eq s => d }.toSet
+    entries.collect { case ((ss, d, _), e) if (ss eq s) && e.frame.isDefined => d }.toSet
 
   /** Live substrate count for a session (spec hook). */
   def liveCount(s: SparkSession): Int =
-    entries.keySet.count(_._1 eq s)
+    entries.count { case ((ss, _, _), e) => (ss eq s) && e.frame.isDefined }
 }

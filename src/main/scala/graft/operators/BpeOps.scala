@@ -110,12 +110,14 @@ object BpeOps extends QueryModule {
         val next = syms
           .withColumn("syms", applyMerge(col("syms"), a, b))
           .localCheckpoint()
-        syms.unpersist()
+        // a checkpoint leaf's blocks belong to its RDD: Dataset.unpersist
+        // would leave every round's symbol table in the block manager
+        graft.SubstrateCache.release(syms)
         syms = next
         r += 1
       }
     }
-    syms.unpersist()
+    graft.SubstrateCache.release(syms)
     merges.toSeq
   }
 

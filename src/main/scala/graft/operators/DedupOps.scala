@@ -1224,17 +1224,8 @@ object DedupOps extends QueryModule {
     // a data-independent loop doesn't need the lesson.
     var ranks = nodes.select(col("node"), lit(PrScale / n).as("r"))
     for (_ <- 1 to iters) {
-      // MERGE hint: the edge table is stored hash-partitioned on da (the
-      // columnar substrate preserves it) and the rank frame is already
-      // hash-partitioned on node by the previous round's aggregation, so
-      // the sort-merge join needs NO exchange on either side — only the
-      // post-join contribution aggregation shuffles (node-keyed, the
-      // inherent transpose). Un-hinted the planner broadcasts the rank
-      // side: a per-round broadcast-build job locally, and an impossible
-      // plan at 100 TB where ranks are graph-sized (guide §3.1 — pick
-      // the strategy deliberately).
       ranks = ewd
-        .join(ranks.hint("merge"), ewd("da") === ranks("node"))
+        .join(ranks, ewd("da") === ranks("node"))
         .select(col("db").as("node"), expr("r DIV deg").as("c"))
         .groupBy("node")
         .agg(sum(col("c")).as("sc"))

@@ -803,16 +803,16 @@ object RelationalOps extends QueryModule {
       // same single-shuffle trick as retention_cohort, applied per branch
       // (the self-join recomputes the subtree; without a cache the two
       // branches are separate pipelines)
-      // materialized (optimization round 17): the membership frame feeds
-      // FOUR arms (sizes, hot users, both self-join sides) — left lazy,
-      // the events scan + distinct ran 4x per invocation. Round 18: the
-      // leaf is registered as a scratch leaf so each invocation releases
-      // its predecessor's blocks (the round-17 advisor's leak finding);
-      // note the leaf does NOT preserve the user partitioning (checkpoint
-      // leaves advertise UnknownPartitioning) — the win is the 4x scan
+      // materialized: the membership frame feeds FOUR arms (sizes, hot
+      // users, both self-join sides) — left lazy, the events scan +
+      // distinct ran 4x per invocation. It is a pure function of the
+      // dataset, so it is a substrate: built once per (session, dataset)
+      // and shared by every later invocation, concurrent ones included.
+      // The leaf does NOT preserve the user partitioning (checkpoint
+      // leaves advertise UnknownPartitioning) — the win is the scan
       // removal, and the downstream re-exchanges are of the already-
       // reduced distinct frame.
-      val m = graft.SubstrateCache.scratchLeaf(s, d, "audience-membership") {
+      val m = graft.SubstrateCache.substrate(s, d, "audience-membership") {
         events(s, d)
           .select(col("event_type"), col("user_id"))
           .repartition(col("user_id"))

@@ -28,8 +28,8 @@ class CcSpec extends SparkSpec {
     val (starDf, rounds) = DedupOps.starContract(nodesDf, pairsDf, maxRounds = 64)
     val propDf = DedupOps.minLabelPropagation(nodesDf, pairsDf, maxRounds = propRounds)
     val (star, prop) = (labelsOf(starDf), labelsOf(propDf))
-    starDf.unpersist()
-    propDf.unpersist()
+    SubstrateCache.release(starDf)
+    SubstrateCache.release(propDf)
     (star, prop, rounds)
   }
 
@@ -39,7 +39,7 @@ class CcSpec extends SparkSpec {
     val pairsDf = (0L until n - 1).map(i => (i, i + 1)).toDF("da", "db")
     val (labels, rounds) = DedupOps.starContract(nodesDf, pairsDf, maxRounds = 64)
     val got = labelsOf(labels)
-    labels.unpersist()
+    SubstrateCache.release(labels)
     assert(got.size == n && got.values.forall(_ == 0L), "chain is one component rooted at 0")
     // propagation would need 999 rounds here; star contraction halves
     // depth (or better) per round — pin 2·log2(1000) with slack

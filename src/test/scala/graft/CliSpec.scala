@@ -101,4 +101,17 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Seq("create-users", "--zone", "z", "--dist", "cdh"), spark) == 2)
     assert(Cli.run(Seq("create-users", "--dist", "cdh", "t"), spark) == 2)
   }
+
+  test("StageProbe rejects a missing query list, unknown queries and bad reps with its usage") {
+    val usage = "usage: graft.StageProbe"
+    for (bad <- Seq(Array.empty[String], Array("/d"), Array("/d", ","), Array("/d", "q", "1", "x")))
+      assert(StageProbe.parseArgs(bad).left.exists(_.startsWith(usage)), bad.mkString(" "))
+    val unknown = StageProbe.parseArgs(Array("/d", "skipgram_pmi,no_such_query"))
+    assert(unknown.left.exists(m => m.contains("unknown query: no_such_query") && m.contains(usage)), unknown)
+    for (reps <- Seq("0", "-1", "two"))
+      assert(StageProbe.parseArgs(Array("/d", "skipgram_pmi", reps)).left.exists(_.contains(usage)), reps)
+    assert(StageProbe.parseArgs(Array("/d", "skipgram_pmi,audience_overlap")) ==
+      Right(("/d", Seq("skipgram_pmi", "audience_overlap"), 1)))
+    assert(StageProbe.parseArgs(Array("/d", "skipgram_pmi", "3")) == Right(("/d", Seq("skipgram_pmi"), 3)))
+  }
 }

@@ -783,8 +783,9 @@ class PlanAssertionsSpec extends SparkSpec {
 
     // skipgram_pmi: the distance-1 arm must stay on the native pair
     // kernel (the distance-2 zip_with arm is census-cleared, see
-    // SCALE.md)
-    val sp = planOf("skipgram_pmi")
+    // SCALE.md); the arms run inside the pair-table substrate's build
+    planOf("skipgram_pmi") // triggers the substrate build
+    val sp = buildPlanOf("skipgram-bi")
     assert(sp.contains("graft_gram_pairs"),
       "distance-1 arm must use the pair kernel:\n" + sp.take(800))
 

@@ -353,7 +353,7 @@ class StreamingSpec extends SparkSpec {
     val (full, _) = graft.operators.DedupOps
       .starContract(docs.select(col("doc_id").as("node")), allPairs, 20)
     val fullSet = full.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    full.unpersist()
+    SubstrateCache.release(full)
     val maintainedSet = maintained.collect().map(r => (r.getAs[Long]("node"), r.getAs[Long]("lbl"))).toSet
     assert(maintainedSet == fullSet, "incremental labels must equal the full fixpoint")
 
@@ -473,7 +473,7 @@ class StreamingSpec extends SparkSpec {
     val (full, _) = graft.operators.DedupOps
       .starContract(docs.select(col("doc_id").as("node")), allPairs, 20)
     val fullSet = full.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    full.unpersist()
+    SubstrateCache.release(full)
     val maintainedSet =
       maintained.collect().map(r => (r.getAs[Long]("node"), r.getAs[Long]("lbl"))).toSet
     assert(maintainedSet == fullSet, "resumed incremental labels must equal the full fixpoint")
