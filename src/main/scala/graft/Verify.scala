@@ -3,12 +3,30 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val Usage = "usage: graft.Verify <sfDir> <outDir>  (env SPARK_GRAFT_ONLY=name,name to run a subset)"
+
+  /** (sfDir, outDir, the SPARK_GRAFT_ONLY subset), or the message to print
+    * before exiting 2.
+    */
+  private[graft] def parseArgs(
+      args: Array[String],
+      only: Option[String],
+  ): Either[String, (String, String, Option[Set[String]])] =
+    args match {
+      case Array(sfDir, outDir) =>
+        val names = only.map(_.split(",").toSet.filter(_.nonEmpty))
+        val unknown = names.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+        if (unknown.nonEmpty) Left(s"unknown query in SPARK_GRAFT_ONLY: ${unknown.toSeq.sorted.mkString(",")}\n$Usage")
+        else Right((sfDir, outDir, names))
+      case _ => Left(Usage)
+    }
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir, only) =
+      parseArgs(args, sys.env.get("SPARK_GRAFT_ONLY")).fold({ msg => System.err.println(msg); sys.exit(2) }, identity)
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Queries are independent jobs; running a few concurrently keeps all
     // cores busy across each query's serial phases (plan, small stages).
     val par = sys.env.getOrElse("SPARK_GRAFT_PAR", "4").toInt

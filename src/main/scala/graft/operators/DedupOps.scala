@@ -469,8 +469,8 @@ object DedupOps extends QueryModule {
   private val simhashEst = DeclaredQuery(
     "simhash_est",
     (s, d) => {
-      // 1-row scalar, sizes the sample rate (memoized per session/dataset)
-      val nd = graft.SubstrateCache.scalar(s, d, "documents-n")(documents(s, d).count())
+      // 1-row scalar, sizes the sample rate (cached per session/dataset)
+      val nd = graft.SubstrateCache.value(s, d, "documents-n")(documents(s, d).count())
       val rate = math.max(1L, (nd + 4999L) / 5000L)
       val cand = simhashPairs(s, d, EstMaxHd)
         .filter(pmod(col("da") * 31L + col("db"), lit(rate)) === 0L)
@@ -1213,7 +1213,7 @@ object DedupOps extends QueryModule {
     val nodes = ewd.select(col("da").as("node")).distinct()
     // n is one scalar job on the node set (graph-sized, not corpus-sized)
     // — folding it into literals removes a broadcast join per round.
-    // Substrate-backed callers pass the memoized count (nKnown) so the
+    // Substrate-backed callers pass the cached count (nKnown) so the
     // job runs once per session/dataset instead of once per invocation.
     val n = nKnown.getOrElse(nodes.count())
     if (n == 0) return nodes.select(col("node"), lit(0L).as("r"))
@@ -1381,7 +1381,7 @@ object DedupOps extends QueryModule {
         sym.join(sym.groupBy("da").agg(count(lit(1)).as("deg")), Seq("da"))
           .repartition(col("da"))
       }
-      val n = graft.SubstrateCache.scalar(s, d, "fuzzy-sym-deg:1:n") {
+      val n = graft.SubstrateCache.value(s, d, "fuzzy-sym-deg:1:n") {
         ewd.select(col("da")).distinct().count()
       }
       pagerankSymmetric(ewd, PrIters, Some(n))

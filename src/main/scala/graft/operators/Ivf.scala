@@ -67,7 +67,7 @@ object Ivf extends QueryModule {
     // the count is substrate metadata: computed once beside the frame
     // (was one cached-scan job per CONSUMER invocation — the scaled
     // ANN/semantic family calls this on every run)
-    (e, graft.SubstrateCache.scalar(s, d, "ivf-scaled-n")(e.count()))
+    (e, graft.SubstrateCache.value(s, d, "ivf-scaled-n")(e.count()))
   }
 
   /** One nearest-centroid pass: (vec_id, cid). Same windowless
@@ -361,43 +361,20 @@ object Ivf extends QueryModule {
     * its int8 codes beside the full-precision copy, so a probe reads
     * only its cells' directories (planning-time `PartitionFilters`) and
     * ranks them with the 4×-smaller integer codes before any float work.
-    * Written once per (JVM, dataset) into a fresh temp directory — the
-    * in-repo stand-in for the parquet table a pipeline would persist
-    * between stages.
+    * Written once per (session, dataset) as a [[graft.SubstrateCache]]
+    * layout — the in-repo stand-in for the parquet table a pipeline
+    * would persist between stages.
     */
-  private val quantizedLayouts = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Temp layouts are per-JVM scratch; without this a long-lived session
-    * (repeated test/bench runs in one container) accumulates one
-    * directory per dataset forever.
-    */
-  private[operators] def deleteRecursivelyOnExit(dir: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import scala.jdk.CollectionConverters._
-      val root = Path.of(dir)
-      if (Files.exists(root)) {
-        val all = Files.walk(root).iterator().asScala.toSeq
-        all.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
-    }))
-
-  private[operators] def quantizedCellLayout(s: SparkSession, d: String): String =
-    quantizedLayouts.synchronized {
-      quantizedLayouts.getOrElseUpdate(
-        d, {
-          val dir = java.nio.file.Files.createTempDirectory("graft-ivf-sq8").toString
-          deleteRecursivelyOnExit(dir)
-          cellAssignment(s, d)
-            .join(QuantizeOps.sq8Codes(s, d), Seq("vec_id"))
-            .select(col("cid"), col("vec_id"), col("dvec"), col("qv"))
-            .write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .partitionBy("cid")
-            .parquet(dir)
-          dir
-        },
-      )
+  private[graft] def quantizedCellLayout(s: SparkSession, d: String): String =
+    graft.SubstrateCache.layout(s, d, "graft-ivf-sq8") { dir =>
+      cellAssignment(s, d)
+        .join(QuantizeOps.sq8Codes(s, d), Seq("vec_id"))
+        .select(col("cid"), col("vec_id"), col("dvec"), col("qv"))
+        .write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("cid")
+        .parquet(dir)
+      dir
     }
 
   /** SQ8-inside-IVF search (`ivf_quantized_topk`): per query, rank cells

@@ -61,67 +61,6 @@ object KMeansOps extends QueryModule {
     Tables.embeddings(s, d).select(col("vec_id"), col("label"), expr(QuantSql).as("q"))
   }
 
-  /** Driver-value twin of [[graft.SubstrateCache]]: the Lloyd centroids,
-    * the principal direction, and the moment struct are k·D-bounded
-    * driver values shared by several declared queries (assign/cost/
-    * centroids all need the same centroids; both pca queries need the
-    * same moments) — memoizing them per (session, dataset) makes the
-    * suite pay each corpus pass once, exactly like the DataFrame
-    * substrates. Values are ≤ a few KB, so no eviction pressure; the
-    * one-dataset-per-session hygiene is kept anyway. A lost race just
-    * recomputes a pure value — no persist() to strand, so no per-key
-    * locking is needed here.
-    */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), AnyRef]
-
-  /** Session → stable opaque id, WEAKLY keyed: the memo's keys carry the
-    * id string, never the SparkSession, so a long-lived gateway JVM
-    * hosting short-lived sessions cannot pin dead session object graphs
-    * for the process lifetime (round-13 judge finding). When a session
-    * is collected (or its context stops) its id drops out of the live
-    * set and the next [[memoized]] call sweeps its entries.
-    */
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, String]()
-
-  private def sessionId(s: SparkSession): String = sessionIds.synchronized {
-    var id = sessionIds.get(s)
-    if (id == null) { id = java.util.UUID.randomUUID().toString; sessionIds.put(s, id) }
-    id
-  }
-
-  private def liveIds: Set[String] = sessionIds.synchronized {
-    import scala.jdk.CollectionConverters._
-    sessionIds.entrySet().asScala.collect {
-      case e if !e.getKey.sparkContext.isStopped => e.getValue
-    }.toSet
-  }
-
-  private def memoized[T <: AnyRef](s: SparkSession, d: String, tag: String)(build: => T): T = {
-    val id = sessionId(s)
-    val live = liveIds
-    // evict other-dataset keys for THIS session (one-dataset hygiene) AND
-    // every key whose session is gone — GC'd out of the weak registry or
-    // backed by a stopped context
-    memo.keys
-      .filter(k => (k._1 == id && k._2 != d) || !live.contains(k._1))
-      .foreach(memo.remove)
-    memo.getOrElseUpdate((id, d, tag), build).asInstanceOf[T]
-  }
-
-  /** Test hooks for the memo's lifecycle discipline. `memoForgetSession`
-    * drops the weak-registry entry exactly as GC would (in local mode a
-    * child session is pinned by Spark's inheritable active-session
-    * thread-locals in long-lived task threads, so a test cannot force
-    * real collection — the sweep path is identical either way).
-    */
-  private[graft] def memoSessionId(s: SparkSession): Option[String] =
-    sessionIds.synchronized(Option(sessionIds.get(s)))
-  private[graft] def memoHoldsId(id: String): Boolean = memo.keys.exists(_._1 == id)
-  private[graft] def memoForgetSession(s: SparkSession): Unit =
-    sessionIds.synchronized { sessionIds.remove(s); () }
-
   /** Exact integer squared distance of the vector column to one centroid
     * literal — the native codegen kernel
     * ([[graft.functions.IntSqDist]]). The HOF spelling
@@ -155,7 +94,7 @@ object KMeansOps extends QueryModule {
     * assignment is one more [[assignTo]] under them.
     */
   private[graft] def lloydCentroids(s: SparkSession, d: String): Seq[Array[Long]] =
-    memoized(s, d, "kmeans-centroids") { lloydCentroidsBuild(s, d) }
+    graft.SubstrateCache.value(s, d, "kmeans-centroids") { lloydCentroidsBuild(s, d) }
 
   /** One Lloyd update's distributed half: the per-cluster `(Σq, n)`
     * PARTIALS under the given standing centroids — a (cluster, s,
@@ -231,12 +170,12 @@ object KMeansOps extends QueryModule {
   }
 
   /** The lowid Lloyd chain at an ARBITRARY k — the elbow sweep's per-k
-    * runs ([[lloydCentroids]] is the k=K instance and shares its memo
+    * runs ([[lloydCentroids]] is the k=K instance and shares its cache
     * slot, so the declared k=8 family never recomputes).
     */
   private[graft] def lloydCentroidsK(s: SparkSession, d: String, k: Int): Seq[Array[Long]] =
     if (k == K) lloydCentroids(s, d)
-    else memoized(s, d, s"kmeans-centroids-k$k") { lloydCentroidsBuild(s, d, k) }
+    else graft.SubstrateCache.value(s, d, s"kmeans-centroids-k$k") { lloydCentroidsBuild(s, d, k) }
 
   /** The shared avalanche hash of `vec_id` (the `dsir_resample` chain:
     * Knuth multiply, xor-fold, odd-constant multiply — identical text in
@@ -260,7 +199,7 @@ object KMeansOps extends QueryModule {
     * coreset first; the RULE is what's declared and compared).
     */
   private[graft] def ppSeeds(s: SparkSession, d: String): Seq[Array[Long]] =
-    memoized(s, d, "kmeanspp-seeds") {
+    graft.SubstrateCache.value(s, d, "kmeanspp-seeds") {
       val q = quantized(s, d)
         .withColumn("a", expr(ASql))
         .withColumn("h", expr(HashSql))
@@ -285,7 +224,7 @@ object KMeansOps extends QueryModule {
     * [[ppSeeds]] — the identical update path as the lowid chain.
     */
   private[graft] def ppCentroids(s: SparkSession, d: String): Seq[Array[Long]] =
-    memoized(s, d, "kmeanspp-centroids") {
+    graft.SubstrateCache.value(s, d, "kmeanspp-centroids") {
       val q = quantized(s, d)
       var cents = ppSeeds(s, d)
       var r = 0
@@ -432,8 +371,8 @@ object KMeansOps extends QueryModule {
     * same `Rounds` Lloyd updates at k = 2, 4, 8 — THE diagnostic a
     * clustering pipeline reads before pinning k (the production knob
     * `semantic_dedup`/IVF docs point at). Each k is an independent
-    * memoized chain sharing [[updateRound]]; the k=8 row is the
-    * declared family's exact chain (shared memo slot, zero recompute).
+    * cached chain sharing [[updateRound]]; the k=8 row is the
+    * declared family's exact chain (shared cache slot, zero recompute).
     * At 100 TB the sweep is (#k values) × the Lloyd cost — runs as one
     * driver loop over the same persisted quantized projection.
     */
@@ -570,7 +509,7 @@ object KMeansOps extends QueryModule {
   private val PowerRounds = 12
 
   /** The exact (Σqᵢ, Σqᵢqⱼ, n) moments — one corpus pass, shared by all
-    * PCA queries via the driver-value memo. Since the round-15 census
+    * PCA queries via one cached driver value. Since the round-15 census
     * this is the slice-bounded wide pass ([[ExactMoments.exact]]): the
     * single-group Long fold died at ~10⁶ vectors of this magnitude
     * (|q| ≤ 4×10⁶ ⇒ per-row products ≤ 1.6×10¹³), so slices of ≤ 2¹⁷
@@ -579,7 +518,7 @@ object KMeansOps extends QueryModule {
     * bit-identical where the old tier was valid.
     */
   private def momentsOf(s: SparkSession, d: String): (Seq[BigInt], Seq[BigInt], Long) =
-    memoized(s, d, "pca-moments") {
+    graft.SubstrateCache.value(s, d, "pca-moments") {
       ExactMoments.exact(quantized(s, d), "q", Dim)
     }
 
@@ -652,11 +591,11 @@ object KMeansOps extends QueryModule {
     * corpus-size-free either way.
     */
   private[graft] def principalE6(s: SparkSession, d: String): Array[Long] =
-    memoized(s, d, "pca-principal") { powerIterate(momentMatrix(s, d)) }
+    graft.SubstrateCache.value(s, d, "pca-principal") { powerIterate(momentMatrix(s, d)) }
 
-  /** The 64×64 BigInt matrix M = n²·Cov rebuilt from the memoized moment
+  /** The 64×64 BigInt matrix M = n²·Cov rebuilt from the cached moment
     * struct — 64² driver multiplies, so cheap enough to rebuild per
-    * caller (the memo holds the corpus-pass moments, not this).
+    * caller (the cache holds the corpus-pass moments, not this).
     */
   private def momentMatrix(s: SparkSession, d: String): Array[Array[BigInt]] = {
     val (sm, pr, n) = momentsOf(s, d)
@@ -693,7 +632,7 @@ object KMeansOps extends QueryModule {
   }
 
   /** The dominant direction from a raw moment triple — the batch
-    * [[principalE6]] is exactly this over the memoized corpus moments;
+    * [[principalE6]] is exactly this over the cached corpus moments;
     * the streaming refresh serves it over ADDITIVELY MERGED per-batch
     * moments, and the two are bit-identical because the moments are.
     */
@@ -741,10 +680,10 @@ object KMeansOps extends QueryModule {
     * matrix: D = M̂ − λ̂·(v₁v₁′)/(v₁′v₁) with λ̂ = v₁′M̂v₁/(v₁′v₁), every
     * division truncating BigInt (≡ DuckDB `//` toward zero), then the
     * SAME `PowerRounds` iteration as pc1. Deflation is 64² driver
-    * arithmetic on the memoized moments — no second corpus pass.
+    * arithmetic on the cached moments — no second corpus pass.
     */
   private[graft] def principal2E6(s: SparkSession, d: String): Array[Long] =
-    memoized(s, d, "pca-principal2") {
+    graft.SubstrateCache.value(s, d, "pca-principal2") {
       val ms = scaledMatrix(momentMatrix(s, d))
       val v1 = principalE6(s, d).map(BigInt(_))
       val vv = v1.map(x => x * x).sum
@@ -921,7 +860,7 @@ object KMeansOps extends QueryModule {
     * subspace is on average; this names the individual vectors it
     * represents worst — the screen a curation dashboard reads next to
     * `embedding_outliers`' distance-from-mean tier). All inputs are the
-    * memoized exact-integer driver values (μ as per-dim ⌊S/n⌋, both
+    * cached exact-integer driver values (μ as per-dim ⌊S/n⌋, both
     * projections via the codegen [[graft.functions.IntDot]] kernel, the
     * centered distance via [[graft.functions.IntSqDist]]); every Long is
     * < 2⁵³ so the Long→DOUBLE casts are exact, and the residual chain is
@@ -1157,7 +1096,7 @@ object KMeansOps extends QueryModule {
     * Rayleigh quotients ON THE SCALED matrix M̂ (trace share is
     * scale-invariant up to the shared truncation; M̂ keeps the λ̂₂·10⁶
     * product under HUGEINT at any n — the same bound argument as
-    * [[scaledMatrix]]). The corpus pass is the SAME memoized moment
+    * [[scaledMatrix]]). The corpus pass is the SAME cached moment
     * struct; everything else is 64²-bounded driver arithmetic. (The
     * two-step truncating division is the defined computation both
     * engines replicate — within 10⁻⁶ + truncation of the real ratio.)
@@ -1237,13 +1176,13 @@ object KMeansOps extends QueryModule {
     * standing min-distance frame is persisted once and updated against
     * only the newest center (previous round unpersisted), so vectors
     * never shuffle and driver traffic is k rows. The picks are a
-    * k·D-bounded memoized driver value (the Lloyd-centroid class), so
+    * k·D-bounded cached driver value (the Lloyd-centroid class), so
     * bench reps and downstream consumers pay the traversal once.
     */
   private val KcK = 8
 
   private[graft] def kcenterPicks(s: SparkSession, d: String): Seq[(Long, Seq[Long], Long)] =
-    memoized(s, d, "kcenter-picks") {
+    graft.SubstrateCache.value(s, d, "kcenter-picks") {
       val q = quantized(s, d).select("vec_id", "q")
       val seed = q.orderBy("vec_id").limit(1).collect()(0)
       var picked = Vector[(Long, Seq[Long], Long)]((seed.getLong(0), seed.getSeq[Long](1), 0L))

@@ -179,9 +179,9 @@ object PlanOps extends QueryModule {
       // two 1-row scalar fetches size the scenario (bounded driver
       // traffic, the collected-probe precedent) — the capacity formula
       // must match the oracle's `cap` CTE exactly
-      val np = graft.SubstrateCache.scalar(s, d, "part-n")(graft.Tables.part(s, d).count())
+      val np = graft.SubstrateCache.value(s, d, "part-n")(graft.Tables.part(s, d).count())
       val ns =
-        graft.SubstrateCache.scalar(s, d, "supplier-n")(graft.Tables.supplier(s, d).count())
+        graft.SubstrateCache.value(s, d, "supplier-n")(graft.Tables.supplier(s, d).count())
       val shardCapacity = np / NShards + ns
       val demand = graft.Tables
         .part(s, d)

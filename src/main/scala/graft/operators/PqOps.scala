@@ -303,30 +303,23 @@ object PqOps extends QueryModule {
 
   /** Durable IVF-PQ cell layout — one directory per IVF cell
     * (`partitionBy(cid)`), each vector carrying its 8 PQ codes beside
-    * the full-precision copy. Written once per (JVM, dataset); the
-    * in-repo stand-in for the persisted FAISS-style IVF-PQ index.
+    * the full-precision copy. Written once per (session, dataset) as a
+    * [[graft.SubstrateCache]] layout; the in-repo stand-in for the
+    * persisted FAISS-style IVF-PQ index.
     */
-  private val pqLayouts = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[operators] def pqCellLayout(s: SparkSession, d: String): String =
-    pqLayouts.synchronized {
-      pqLayouts.getOrElseUpdate(
-        d, {
-          val dir = java.nio.file.Files.createTempDirectory("graft-ivf-pq").toString
-          Ivf.deleteRecursivelyOnExit(dir)
-          val (e, _) = Ivf.scaledEmbeddings(s, d)
-          Ivf
-            .cellAssignment(s, d)
-            .join(codes(s, d), Seq("vec_id"))
-            .join(e.select("vec_id", "dvec"), Seq("vec_id"))
-            .select(col("cid"), col("vec_id"), col("dvec"), col("carr"))
-            .write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .partitionBy("cid")
-            .parquet(dir)
-          dir
-        },
-      )
+    graft.SubstrateCache.layout(s, d, "graft-ivf-pq") { dir =>
+      val (e, _) = Ivf.scaledEmbeddings(s, d)
+      Ivf
+        .cellAssignment(s, d)
+        .join(codes(s, d), Seq("vec_id"))
+        .join(e.select("vec_id", "dvec"), Seq("vec_id"))
+        .select(col("cid"), col("vec_id"), col("dvec"), col("carr"))
+        .write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("cid")
+        .parquet(dir)
+      dir
     }
 
   /** IVF-PQ search (`ivf_pq_topk`): rank IVF cells by centroid cosine,

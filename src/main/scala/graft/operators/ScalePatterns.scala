@@ -153,79 +153,47 @@ object ScalePatterns extends QueryModule {
     */
   private val JoinBuckets = 8
 
-  // One bucket layout per dataset per SESSION: saveAsTable is
-  // side-effecting, so the build is memoized exactly like Ivf's durable
-  // cell layouts. Weak keys so a discarded session never pins its plans
-  // on the heap, and a per-session token in the catalog table names so
-  // two sessions sharing one catalog in a JVM can't overwrite each
+  // Build sequence number in the catalog table names: two sessions (or
+  // two datasets) sharing one catalog in a JVM never overwrite each
   // other's external bucket tables.
-  private val bucketLayouts =
-    new java.util.WeakHashMap[
-      org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, (String, String)],
-    ]
-  private val sessionSeq = new java.util.concurrent.atomic.AtomicLong()
-  private val sessionTokens =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]
+  private val bucketBuilds = new java.util.concurrent.atomic.AtomicLong()
 
   /** Write customer + orders bucketed and sorted by the shared key into
-    * EXTERNAL tables under a temp location (one layout per dataset per
-    * session). This is the pay-once side of the trade the declared query
-    * cashes in: the shuffle happens here, at layout time, and every
-    * subsequent join/aggregation on the key runs exchange-free.
+    * EXTERNAL tables under a [[graft.SubstrateCache]] layout (one per
+    * dataset per session; eviction drops the tables with their files).
+    * This is the pay-once side of the trade the declared query cashes
+    * in: the shuffle happens here, at layout time, and every subsequent
+    * join/aggregation on the key runs exchange-free.
     */
-  private[operators] def bucketedPair(
+  private[graft] def bucketedPair(
       s: org.apache.spark.sql.SparkSession,
       d: String,
   ): (String, String) =
-    bucketLayouts.synchronized {
-      val token = {
-        val t = sessionTokens.get(s)
-        if (t != null) t
-        else {
-          val t2 = "s" + sessionSeq.incrementAndGet()
-          sessionTokens.put(s, t2)
-          t2
-        }
-      }
-      val perSession = {
-        var m = bucketLayouts.get(s)
-        if (m == null) {
-          m = scala.collection.mutable.Map.empty[String, (String, String)]
-          bucketLayouts.put(s, m)
-        }
-        m
-      }
-      perSession.getOrElseUpdate(
-        d, {
-          val tag = token + "_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-          val base = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
-          Ivf.deleteRecursivelyOnExit(base)
-          val ct = s"graft_bkt_customer_$tag"
-          val ot = s"graft_bkt_orders_$tag"
-          graft.Tables
-            .customer(s, d)
-            .select("c_custkey", "c_name")
-            .write
-            .mode(SaveMode.Overwrite)
-            .option("path", s"$base/customer")
-            .bucketBy(JoinBuckets, "c_custkey")
-            .sortBy("c_custkey")
-            .format("parquet")
-            .saveAsTable(ct)
-          graft.Tables
-            .orders(s, d)
-            .select(col("o_custkey").as("c_custkey"), col("o_totalprice"))
-            .write
-            .mode(SaveMode.Overwrite)
-            .option("path", s"$base/orders")
-            .bucketBy(JoinBuckets, "c_custkey")
-            .sortBy("c_custkey")
-            .format("parquet")
-            .saveAsTable(ot)
-          (ct, ot)
-        },
-      )
+    graft.SubstrateCache.layout(s, d, "graft-bucketed", { case (ct: String, ot: String) => Seq(ct, ot) }) { base =>
+      val tag = s"s${bucketBuilds.incrementAndGet()}_" + d.replaceAll("[^a-zA-Z0-9]", "_")
+      val ct = s"graft_bkt_customer_$tag"
+      val ot = s"graft_bkt_orders_$tag"
+      graft.Tables
+        .customer(s, d)
+        .select("c_custkey", "c_name")
+        .write
+        .mode(SaveMode.Overwrite)
+        .option("path", s"$base/customer")
+        .bucketBy(JoinBuckets, "c_custkey")
+        .sortBy("c_custkey")
+        .format("parquet")
+        .saveAsTable(ct)
+      graft.Tables
+        .orders(s, d)
+        .select(col("o_custkey").as("c_custkey"), col("o_totalprice"))
+        .write
+        .mode(SaveMode.Overwrite)
+        .option("path", s"$base/orders")
+        .bucketBy(JoinBuckets, "c_custkey")
+        .sortBy("c_custkey")
+        .format("parquet")
+        .saveAsTable(ot)
+      (ct, ot)
     }
 
   /** Declared co-located join over the durable bucket layout: customer ⋈
@@ -262,10 +230,6 @@ object ScalePatterns extends QueryModule {
             GROUP BY 1 ORDER BY 1"""),
   )
 
-  // One date-partitioned layout per dataset per JVM, like bucketLayouts.
-  private val dayLayouts =
-    scala.collection.mutable.Map.empty[(org.apache.spark.sql.SparkSession, String), String]
-
   /** Write events into a `partitionBy(day)` directory tree — the #1
     * physical layout of every production fact table: one directory per
     * day, so a date-range predicate prunes at PLANNING time and untouched
@@ -273,25 +237,19 @@ object ScalePatterns extends QueryModule {
     * losslessly through the layout, so queries over it are exactly
     * queries over the source table.
     */
-  private[operators] def dayPartitionedEvents(
+  private[graft] def dayPartitionedEvents(
       s: org.apache.spark.sql.SparkSession,
       d: String,
   ): String =
-    dayLayouts.synchronized {
-      dayLayouts.getOrElseUpdate(
-        (s, d), {
-          val dir = java.nio.file.Files.createTempDirectory("graft-events-byday").toString
-          Ivf.deleteRecursivelyOnExit(dir)
-          graft.Tables
-            .events(s, d)
-            .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-            .write
-            .mode(SaveMode.Overwrite)
-            .partitionBy("day")
-            .parquet(dir)
-          dir
-        },
-      )
+    graft.SubstrateCache.layout(s, d, "graft-events-byday") { dir =>
+      graft.Tables
+        .events(s, d)
+        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+        .write
+        .mode(SaveMode.Overwrite)
+        .partitionBy("day")
+        .parquet(dir)
+      dir
     }
 
   /** Week-2 window over the 30-day synthetic stream. ISO date strings
@@ -543,29 +501,20 @@ object ScalePatterns extends QueryModule {
       s"CAST(${zBits(s"least(user_id div $ZGridUserW, 7)")} + " +
         s"2 * ${zBits(s"least((datediff(CAST(ts AS DATE), DATE '1970-01-01') - $ZEpochDay) div $ZGridDayW, 7)")} AS INT)")
 
-  private val zLayouts =
-    scala.collection.mutable.Map.empty[(org.apache.spark.sql.SparkSession, String), String]
-
   private[operators] def zorderedEvents(
       s: org.apache.spark.sql.SparkSession,
       d: String,
   ): String =
-    zLayouts.synchronized {
-      zLayouts.getOrElseUpdate(
-        (s, d), {
-          val dir = java.nio.file.Files.createTempDirectory("graft-events-zorder").toString
-          Ivf.deleteRecursivelyOnExit(dir)
-          graft.Tables
-            .events(s, d)
-            .withColumn("zcell", zcellExpr)
-            .sortWithinPartitions("zcell", "user_id", "ts") // row-group clustering inside cells
-            .write
-            .mode(SaveMode.Overwrite)
-            .partitionBy("zcell")
-            .parquet(dir)
-          dir
-        },
-      )
+    graft.SubstrateCache.layout(s, d, "graft-events-zorder") { dir =>
+      graft.Tables
+        .events(s, d)
+        .withColumn("zcell", zcellExpr)
+        .sortWithinPartitions("zcell", "user_id", "ts") // row-group clustering inside cells
+        .write
+        .mode(SaveMode.Overwrite)
+        .partitionBy("zcell")
+        .parquet(dir)
+      dir
     }
 
   /** The declared 2-D box: users [4, 35] × days [2024-01-09, 2024-01-16]

@@ -234,7 +234,7 @@ object SimilarityOps extends QueryModule {
       import s.implicits._
       val b = nearDupBlocks(
         s,
-        graft.SubstrateCache.scalar(s, d, "embeddings-n")(embeddings(s, d).count()),
+        graft.SubstrateCache.value(s, d, "embeddings-n")(embeddings(s, d).count()),
       )
       val replicated = embeddings(s, d)
         .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("dvec"))
@@ -2431,7 +2431,7 @@ object SimilarityOps extends QueryModule {
         sym.join(sym.groupBy("da").agg(count(lit(1)).as("deg")), Seq("da"))
           .repartition(col("da"))
       }
-      val n = graft.SubstrateCache.scalar(s, d, "knn-sym-deg:1:n") {
+      val n = graft.SubstrateCache.value(s, d, "knn-sym-deg:1:n") {
         ewd.select(col("da")).distinct().count()
       }
       DedupOps.pagerankSymmetric(ewd, DedupOps.PrIters, Some(n))

@@ -1262,46 +1262,22 @@ object TextOps extends QueryModule {
     * top-20 by (pmi desc, pair). Tokenizer vocab-merge decisions and
     * multi-word-entity detection both read exactly this table.
     *
-    * Plan: ONE corpus pass builds the bigram table (zip_with over
-    * shifted slices — the bigram_logprob substrate shape); both
-    * marginals and the N scalar are rollups OF that table (bigram-
-    * cardinality aggs, never a second corpus scan). The marginal joins
-    * are un-hinted — w₁/w₂ marginals are vocabulary-cardinality, the
-    * repo-wide no-forced-broadcast rule — and the result is a
-    * TakeOrderedAndProject top-k, so only (pair, counts) rows ever
-    * shuffle. Cross-engine: the four-ln sum is one shared expression
-    * text over exact BIGINTs, ×10⁶-floored; ln of products is avoided
-    * so no BIGINT multiply can overflow at corpus scale (c₁₂·N at
-    * 10¹⁰ bigrams would).
+    * Plan: the adjacent pairs are the `c_adj > 0` rows of `skipgram_pmi`'s
+    * pair-census substrate (its distance-1 arm is the same
+    * `graft_gram_pairs` kernel, `c_adj` its count), so the corpus is read
+    * once per (session, dataset) for both queries; marginals, N and the
+    * scoring are [[pmiTop20]] over that table. Cross-engine: the four-ln
+    * sum is one shared expression text over exact BIGINTs, ×10⁶-floored;
+    * ln of products is avoided so no BIGINT multiply can overflow at
+    * corpus scale (c₁₂·N at 10¹⁰ bigrams would).
     */
   private val cooccurrencePmi = DeclaredQuery(
     "cooccurrence_pmi",
-    (s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      val pairs = documents(s, d)
-        .withColumn("toks", split(col("text"), " "))
-        // native pair kernel — same strings as the zip_with HOF, inside
-        // whole-stage codegen (round-14 kernel census)
-        .select(explode(expr("graft_gram_pairs(toks)")).as("p"))
-        .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      val bi = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      val lm = bi.groupBy("w1").agg(sum("c12").as("c1"))
-      val rm = bi.groupBy("w2").agg(sum("c12").as("c2"))
-      val n = bi.agg(sum("c12").as("nn"))
-      bi.filter(col("c12") >= 5)
-        .join(lm, Seq("w1")) // un-hinted: vocabulary-cardinality
-        .join(rm, Seq("w2"))
-        .crossJoin(broadcast(n)) // 1×1 scalar
-        .withColumn(
-          "pmi_s",
-          expr("""CAST(floor((ln(CAST(c12 AS DOUBLE)) + ln(CAST(nn AS DOUBLE))
-                 |            - ln(CAST(c1 AS DOUBLE)) - ln(CAST(c2 AS DOUBLE)))
-                 |           * 1000000.0 + 0.5) AS BIGINT)""".stripMargin),
-        )
-        .select("w1", "w2", "c12", "c1", "c2", "pmi_s")
-        .orderBy(col("pmi_s").desc, col("w1"), col("w2"))
-        .limit(20)
-    },
+    (s, d) =>
+      pmiTop20(
+        skipgramBi(s, d).filter(col("c_adj") > 0).withColumn("c12", col("c_adj")),
+        "w1", "w2", "c12", "c1", "c2", "pmi_s",
+      ),
     Some("""WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
             pr AS (SELECT unnest(CASE WHEN len(toks) >= 2
                           THEN list_transform(generate_series(1, len(toks) - 1),
@@ -1321,6 +1297,67 @@ object TextOps extends QueryModule {
             WHERE c12 >= 5
             ORDER BY pmi_s DESC, bi.w1, bi.w2 LIMIT 20"""),
   )
+
+  /** The ±2-window pair census (w1, w2, c12, c_adj, c_skip), shared by
+    * both PMI queries. MATERIALIZED: each query references it four times
+    * (itself + both marginals + N), and column pruning makes the four
+    * subtrees physically DIFFERENT, so exchange reuse never fires —
+    * without the leaf the corpus explode + pair aggregation ran 4x per
+    * run (4 concurrent 2-task stages, the inverse-core-scaling
+    * signature). The table is a pure function of the dataset, so it is a
+    * substrate, built once per (session, dataset). At 100 TB it is the
+    * written stage hand-off between the pair census and the scoring.
+    */
+  private def skipgramBi(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.SubstrateCache.substrate(s, d, "skipgram-bi") {
+      graft.functions.GraftFunctions.register(s)
+      val toks = documents(s, d).withColumn("toks", split(col("text"), " "))
+      val o1 = toks
+        .select(explode(expr("graft_gram_pairs(toks)")).as("p"))
+        .select(col("p.w1").as("w1"), col("p.w2").as("w2"), lit(1).as("o"))
+      val o2 = toks
+        .select(
+          explode(
+            expr("""zip_with(slice(toks, 1, greatest(size(toks) - 2, 0)),
+                   |         slice(toks, 3, greatest(size(toks) - 2, 0)),
+                   |         (a, b) -> named_struct('w1', a, 'w2', b))""".stripMargin),
+          ).as("p"),
+        )
+        .select(col("p.w1").as("w1"), col("p.w2").as("w2"), lit(2).as("o"))
+      o1.unionByName(o2)
+        .groupBy("w1", "w2")
+        .agg(
+          count(lit(1)).as("c12"),
+          sum(when(col("o") === 1, 1L).otherwise(0L)).as("c_adj"),
+          sum(when(col("o") === 2, 1L).otherwise(0L)).as("c_skip"),
+        )
+    }
+
+  /** Top-20 PMI over a pair table `bi` (w1, w2, c12, ...): positional
+    * marginals c1/c2 and the pair total N are rollups OF `bi`
+    * (pair-cardinality aggs, never a second corpus scan), the min-count-5
+    * pairs join them un-hinted (vocabulary-cardinality — the repo-wide
+    * no-forced-broadcast rule), and the result is a TakeOrderedAndProject
+    * top-k, so only (pair, counts) rows ever shuffle.
+    */
+  private def pmiTop20(bi: org.apache.spark.sql.DataFrame, out: String*) = {
+    val lm = bi.groupBy("w1").agg(sum("c12").as("c1"))
+    val rm = bi.groupBy("w2").agg(sum("c12").as("c2"))
+    val n = bi.agg(sum("c12").as("nn"))
+    bi.filter(col("c12") >= 5)
+      .join(lm, Seq("w1")) // un-hinted: vocabulary-cardinality
+      .join(rm, Seq("w2"))
+      .crossJoin(broadcast(n)) // 1×1 scalar
+      .withColumn(
+        "pmi_s",
+        expr("""CAST(floor((ln(CAST(c12 AS DOUBLE)) + ln(CAST(nn AS DOUBLE))
+               |            - ln(CAST(c1 AS DOUBLE)) - ln(CAST(c2 AS DOUBLE)))
+               |           * 1000000.0 + 0.5) AS BIGINT)""".stripMargin),
+      )
+      .select(out.map(col): _*)
+      .orderBy(col("pmi_s").desc, col("w1"), col("w2"))
+      .limit(20)
+  }
 
   /** Windowed skip-gram PMI — `cooccurrence_pmi` widened to the ±2
     * window word2vec/GloVe actually train on (adjacent-only PMI finds
@@ -1343,56 +1380,7 @@ object TextOps extends QueryModule {
     */
   private val skipgramPmi = DeclaredQuery(
     "skipgram_pmi",
-    (s, d) => {
-      // MATERIALIZE the pair table: the plan references `bi` four times
-      // (itself + both marginals + N), and column pruning makes the four
-      // subtrees physically DIFFERENT, so exchange reuse never fires —
-      // without the leaf the corpus explode + pair aggregation ran 4x per
-      // run (4 concurrent 2-task stages, the inverse-core-scaling
-      // signature; guide §2.4/§5). The table is a pure function of the
-      // dataset, so it is a substrate, built once per (session, dataset).
-      // At 100 TB `bi` is the written stage hand-off between the pair
-      // census and the PMI scoring.
-      val bi = graft.SubstrateCache.substrate(s, d, "skipgram-bi") {
-        graft.functions.GraftFunctions.register(s)
-        val toks = documents(s, d).withColumn("toks", split(col("text"), " "))
-        val o1 = toks
-          .select(explode(expr("graft_gram_pairs(toks)")).as("p"))
-          .select(col("p.w1").as("w1"), col("p.w2").as("w2"), lit(1).as("o"))
-        val o2 = toks
-          .select(
-            explode(
-              expr("""zip_with(slice(toks, 1, greatest(size(toks) - 2, 0)),
-                     |         slice(toks, 3, greatest(size(toks) - 2, 0)),
-                     |         (a, b) -> named_struct('w1', a, 'w2', b))""".stripMargin),
-            ).as("p"),
-          )
-          .select(col("p.w1").as("w1"), col("p.w2").as("w2"), lit(2).as("o"))
-        o1.unionByName(o2)
-          .groupBy("w1", "w2")
-          .agg(
-            count(lit(1)).as("c12"),
-            sum(when(col("o") === 1, 1L).otherwise(0L)).as("c_adj"),
-            sum(when(col("o") === 2, 1L).otherwise(0L)).as("c_skip"),
-          )
-      }
-      val lm = bi.groupBy("w1").agg(sum("c12").as("c1"))
-      val rm = bi.groupBy("w2").agg(sum("c12").as("c2"))
-      val n = bi.agg(sum("c12").as("nn"))
-      bi.filter(col("c12") >= 5)
-        .join(lm, Seq("w1")) // un-hinted: vocabulary-cardinality
-        .join(rm, Seq("w2"))
-        .crossJoin(broadcast(n)) // 1×1 scalar
-        .withColumn(
-          "pmi_s",
-          expr("""CAST(floor((ln(CAST(c12 AS DOUBLE)) + ln(CAST(nn AS DOUBLE))
-                 |            - ln(CAST(c1 AS DOUBLE)) - ln(CAST(c2 AS DOUBLE)))
-                 |           * 1000000.0 + 0.5) AS BIGINT)""".stripMargin),
-        )
-        .select("w1", "w2", "c12", "c_adj", "c_skip", "pmi_s")
-        .orderBy(col("pmi_s").desc, col("w1"), col("w2"))
-        .limit(20)
-    },
+    (s, d) => pmiTop20(skipgramBi(s, d), "w1", "w2", "c12", "c_adj", "c_skip", "pmi_s"),
     Some("""WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
             p1 AS (SELECT unnest(CASE WHEN len(toks) >= 2
                           THEN list_transform(generate_series(1, len(toks) - 1),
@@ -1632,7 +1620,7 @@ object TextOps extends QueryModule {
           .repartition(col("da"))
       }
       val nodes = ewd.select(col("da").as("node")).distinct()
-      val n = graft.SubstrateCache.scalar(s, d, "textrank-sym-edges:n")(nodes.count())
+      val n = graft.SubstrateCache.value(s, d, "textrank-sym-edges:n")(nodes.count())
       val base = (15L * TrScale) / (100L * math.max(n, 1L))
       var ranks = nodes.select(col("node"), lit(TrScale / math.max(n, 1L)).as("r"))
       for (_ <- 1 to TrIters) {

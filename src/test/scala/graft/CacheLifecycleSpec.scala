@@ -1,16 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-/** Substrate-cache lifecycle: block-manager memory must stay bounded by
-  * ONE dataset's substrates when a long-lived session walks multiple scale
-  * factors (the round-2 caches accumulated instead), everything recorded
-  * beside a substrate (build plan, build seconds, derived scalars) goes
-  * with it, and concurrent consumers on one session share entries without
-  * losing blocks.
+/** Substrate-cache lifecycle: block-manager memory and disk must stay
+  * bounded by ONE dataset's entries when a long-lived session walks
+  * multiple scale factors (the round-2 caches accumulated instead),
+  * everything recorded beside a substrate (build plan, build seconds,
+  * driver values, layout directories and tables) goes with it, and
+  * concurrent consumers on one session share entries without losing
+  * blocks or building them twice.
   */
 class CacheLifecycleSpec extends SparkSpec {
 
@@ -22,7 +27,7 @@ class CacheLifecycleSpec extends SparkSpec {
     // substrates for dA, which would inflate countA vs countB
     SubstrateCache.evictSession(spark)
     var scalarBuilds = 0
-    def probe(d: String): Long = SubstrateCache.scalar(spark, d, "lifecycle-probe") { scalarBuilds += 1; 7L }
+    def probe(d: String): Long = SubstrateCache.value(spark, d, "lifecycle-probe") { scalarBuilds += 1; 7L }
     // populate several substrates for dataset A
     SparkEntry.queries("ngram_jaccard")(spark, dA).count()
     SparkEntry.queries("minhash_near_dup")(spark, dA).count()
@@ -81,5 +86,90 @@ class CacheLifecycleSpec extends SparkSpec {
       assert(SubstrateCache.buildPlan(spark, dA, "skipgram-bi").isDefined)
       assert(SubstrateCache.buildPlan(spark, dA, "audience-membership").isDefined)
     } finally pool.shutdown()
+  }
+
+  /** Jobs started in job group `group` while `body` runs, counted once the
+    * listener has seen no new one for a second.
+    */
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val started = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var (last, quiet) = (-1, 0)
+      while (quiet < 10) {
+        Thread.sleep(100)
+        val now = started.get
+        quiet = if (now == last) quiet + 1 else 0
+        last = now
+      }
+      started.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("4 threads asking for the Lloyd centroids on one session build them once") {
+    def inGroup[T](g: String)(f: => T): T = {
+      spark.sparkContext.setJobGroup(g, g)
+      try f
+      finally spark.sparkContext.clearJobGroup()
+    }
+    SubstrateCache.evictSession(spark)
+    val single = jobsIn("lloyd-one")(inGroup("lloyd-one")(operators.KMeansOps.lloydCentroids(spark, dA)))
+    assert(single > 0)
+    SubstrateCache.evictSession(spark)
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      var got = Seq.empty[Seq[Array[Long]]]
+      val four = jobsIn("lloyd-four") {
+        val runs = Seq.fill(4)(Future(inGroup("lloyd-four")(operators.KMeansOps.lloydCentroids(spark, dA))))
+        got = Await.result(Future.sequence(runs), Duration.Inf)
+      }
+      // a second build would run every job of the chain again
+      assert(four < 2 * single, s"4 concurrent callers ran $four jobs, one cold build runs $single")
+      assert(got.forall(_ eq got.head), "every caller must get the one cached value")
+    } finally pool.shutdown()
+    SubstrateCache.evictSession(spark)
+  }
+
+  test("a dataset switch deletes layout directories and drops the bucket tables") {
+    SubstrateCache.evictSession(spark)
+    def bucketTables: Set[String] =
+      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_bkt_")).toSet
+    val sq8 = operators.Ivf.quantizedCellLayout(spark, dA)
+    val byDay = operators.ScalePatterns.dayPartitionedEvents(spark, dA)
+    val (ct, ot) = operators.ScalePatterns.bucketedPair(spark, dA)
+    assert(Paths.get(sq8).getFileName.toString.startsWith("graft-ivf-sq8"), sq8)
+    assert(Paths.get(byDay).getFileName.toString.startsWith("graft-events-byday"), byDay)
+    assert(Seq(sq8, byDay).forall(p => Files.isDirectory(Paths.get(p))))
+    assert(Set(ct, ot).subsetOf(bucketTables))
+    assert(operators.Ivf.quantizedCellLayout(spark, dA) == sq8, "a layout is written once per dataset")
+    assert(operators.ScalePatterns.bucketedPair(spark, dA) == ((ct, ot)))
+
+    SubstrateCache.value(spark, dB, "lifecycle-switch")(1L) // any request for B switches
+    assert(Seq(sq8, byDay).forall(p => !Files.exists(Paths.get(p))), "A's layout directories must be deleted")
+    assert(bucketTables.intersect(Set(ct, ot)).isEmpty, "A's bucket tables must be dropped with their files")
+    SubstrateCache.evictSession(spark)
+  }
+
+  test("evictSession(child) drops the child session's values and leaves the parent's") {
+    SubstrateCache.evictSession(spark)
+    val child = spark.newSession()
+    val childCents = operators.KMeansOps.lloydCentroids(child, dA)
+    val parentCents = operators.KMeansOps.lloydCentroids(spark, dA)
+    assert(!(childCents eq parentCents), "values are per session")
+    assert(SubstrateCache.value[Seq[Array[Long]]](child, dA, "kmeans-centroids")(fail("rebuilt")) eq childCents)
+
+    SubstrateCache.evictSession(child)
+    var rebuilt = false
+    SubstrateCache.value(child, dA, "kmeans-centroids") { rebuilt = true; Seq.empty[Array[Long]] }
+    assert(rebuilt, "the child's value must be gone after evictSession(child)")
+    assert(operators.KMeansOps.lloydCentroids(spark, dA) eq parentCents, "the parent's value must survive")
+    SubstrateCache.evictSession(child)
+    SubstrateCache.evictSession(spark)
   }
 }

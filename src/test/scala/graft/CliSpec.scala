@@ -114,4 +114,27 @@ class CliSpec extends SparkSpec {
       Right(("/d", Seq("skipgram_pmi", "audience_overlap"), 1)))
     assert(StageProbe.parseArgs(Array("/d", "skipgram_pmi", "3")) == Right(("/d", Seq("skipgram_pmi"), 3)))
   }
+
+  test("Explain rejects unknown queries and extra arguments with its usage") {
+    val usage = "usage: graft.Explain"
+    for (bad <- Seq(Array.empty[String], Array("/d", ","), Array("/d", "q", "x")))
+      assert(Explain.parseArgs(bad).left.exists(_.startsWith(usage)), bad.mkString(" "))
+    val unknown = Explain.parseArgs(Array("/d", "skipgram_pmi,no_such_query"))
+    assert(unknown.left.exists(m => m.contains("unknown query: no_such_query") && m.contains(usage)), unknown)
+    assert(Explain.parseArgs(Array("/d")) == Right(("/d", SparkEntry.queries.keys.toSeq.sorted)))
+    assert(Explain.parseArgs(Array("/d", "skipgram_pmi,audience_overlap")) ==
+      Right(("/d", Seq("skipgram_pmi", "audience_overlap"))))
+  }
+
+  test("Verify rejects a wrong argument count and unknown SPARK_GRAFT_ONLY entries with its usage") {
+    val usage = "usage: graft.Verify"
+    for (bad <- Seq(Array.empty[String], Array("/d"), Array("/d", "/o", "x")))
+      assert(Verify.parseArgs(bad, None).left.exists(_.startsWith(usage)), bad.mkString(" "))
+    val unknown = Verify.parseArgs(Array("/d", "/o"), Some("skipgram_pmi,no_such_query"))
+    assert(unknown.left.exists(m => m.contains("unknown query in SPARK_GRAFT_ONLY: no_such_query") && m.contains(usage)),
+      unknown)
+    assert(Verify.parseArgs(Array("/d", "/o"), None) == Right(("/d", "/o", None)))
+    assert(Verify.parseArgs(Array("/d", "/o"), Some("skipgram_pmi,audience_overlap")) ==
+      Right(("/d", "/o", Some(Set("skipgram_pmi", "audience_overlap")))))
+  }
 }

@@ -9,9 +9,11 @@ package graft
   * renumbering from an unrelated subtree change is not a regression);
   * operator names, ordering, and nesting must match exactly.
   *
-  * On failure: if the change is INTENDED, regenerate the dump —
-  * `sbt "runMain graft.Explain /root/testdata/sf0.1 <names>"` — and
-  * re-wrap it under the PLANS.md header; if not, the diff in the failure
+  * Both sides come from [[Explain.planSection]], so the dump and this spec
+  * print a section the same way.
+  *
+  * On failure: if the change is INTENDED, regenerate the drifted sections
+  * with `tools/replans.sh name1,name2`; if not, the diff in the failure
   * message is the regression.
   */
 class PlansDriftSpec extends SparkSpec {
@@ -115,32 +117,22 @@ class PlansDriftSpec extends SparkSpec {
     assert(sections.nonEmpty, "PLANS.md has no query sections")
     val unknown = sections.map(_.takeWhile(_ != ' ')).filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"PLANS.md names unknown queries: $unknown")
+    // Output-schema fingerprint (round-16): a declared dtype change — the
+    // round-15 decimal-output driver-gate class — must show up as a
+    // reviewable PLANS.md diff, so each section carries a `schema:` line
+    // that is diffed like the tree.
+    def schemaOf(text: String): String =
+      text.linesIterator.find(_.startsWith("schema: ")).getOrElse("<missing>")
     val drifted = sections.flatMap { sec =>
       val name = sec.takeWhile(_ != ' ')
-      val dumped = treeOf(sec).map(normalize)
-      val df = SparkEntry.queries(name)(spark, PlanSf)
-      val fresh = treeOf(
-        df.queryExecution
-          .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")),
-      ).map(normalize)
-      // Output-schema fingerprint (round-16): a declared dtype change —
-      // the round-15 decimal-output driver-gate class — must show up as
-      // a reviewable PLANS.md diff, so each section carries a `schema:`
-      // line that is diffed like the tree.
-      val dumpedSchema = sec.linesIterator.find(_.startsWith("schema: "))
-      val freshSchema = Explain.schemaLine(df)
+      val fresh = Explain.planSection(spark, PlanSf, name)
       val schemaDrift =
-        if (dumpedSchema.contains(freshSchema)) None
-        else
-          Some(
-            s"== $name (schema) ==\nfresh:  $freshSchema\ndumped: ${dumpedSchema.getOrElse("<missing>")}",
-          )
+        if (schemaOf(fresh) == schemaOf(sec)) None
+        else Some(s"== $name (schema) ==\nfresh:  ${schemaOf(fresh)}\ndumped: ${schemaOf(sec)}")
+      val (freshTree, dumpedTree) = (treeOf(fresh).map(normalize), treeOf(sec).map(normalize))
       val treeDrift =
-        if (fresh == dumped) None
-        else
-          Some(
-            s"== $name ==\nfresh:\n${fresh.mkString("\n")}\ndumped:\n${dumped.mkString("\n")}",
-          )
+        if (freshTree == dumpedTree) None
+        else Some(s"== $name ==\nfresh:\n${freshTree.mkString("\n")}\ndumped:\n${dumpedTree.mkString("\n")}")
       schemaDrift ++ treeDrift
     }
     assert(
@@ -148,5 +140,7 @@ class PlansDriftSpec extends SparkSpec {
       s"${drifted.size} plan(s) drifted from the PLANS.md dump — regenerate it or fix the regression:\n" +
         drifted.mkString("\n\n"),
     )
+    val undumped = SparkEntry.queries.keys.toSeq.sorted.diff(sections.map(_.takeWhile(_ != ' ')))
+    assert(undumped.isEmpty, s"PLANS.md has no section for: ${undumped.mkString(",")}")
   }
 }

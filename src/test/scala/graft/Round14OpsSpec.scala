@@ -3,30 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-14 hardening: the round-13 ADVICE items that survive only as
-  * runtime behavior — memo lifecycle, the empty-stream refresh guard,
-  * and the schema-preserving assignment contract.
+  * runtime behavior — the empty-stream refresh guard and the
+  * schema-preserving assignment contract.
   */
 class Round14OpsSpec extends SparkSpec {
-
-  test("KMeans memo does not pin dead sessions (weak registry + live-set sweep)") {
-    // Build a memoized driver value under a CHILD session; the memo key
-    // carries an opaque id string, never the session, and the weak
-    // registry entry is the ONLY strong-ish path — drop it (as GC would;
-    // real collection can't be forced here because Spark's inheritable
-    // active-session thread-locals pin child sessions in local-mode task
-    // threads) and verify the next memoized call sweeps the orphans.
-    val child = spark.newSession()
-    operators.KMeansOps.lloydCentroids(child, sfDir)
-    val id = operators.KMeansOps.memoSessionId(child).get
-    assert(operators.KMeansOps.memoHoldsId(id), "child session's value must be memoized")
-
-    operators.KMeansOps.memoForgetSession(child)
-
-    // any memoized call now sweeps entries whose session left the live set
-    operators.KMeansOps.lloydCentroids(spark, sfDir)
-    assert(!operators.KMeansOps.memoHoldsId(id),
-      "entries of a dead session must be evicted on the next memo pass")
-  }
 
   test("refreshedCentroids on a never-committed state dir returns the standing centroids") {
     val standing = Seq(Array.fill(64)(1000000L), Array.fill(64)(2000000L))
