@@ -2,11 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen'd cosine similarity over two array<double> columns.
@@ -24,36 +23,16 @@ import org.apache.spark.sql.SparkSessionExtensions
   * silently poison downstream comparisons); array elements are assumed
   * non-null (enforce upstream with a cast), matching the HOF fold, which
   * would propagate element nulls differently. Mismatched array lengths
-  * raise (DuckDB's list_inner_product oracle errors on unequal lengths —
-  * silently truncating to min(n) would be a cross-engine divergence).
+  * raise, as DuckDB's list_inner_product oracle does.
   */
-case class CosineSimilarity(left: Expression, right: Expression) extends BinaryExpression {
+case class CosineSimilarity(left: Expression, right: Expression)
+    extends ArrayPairKernel(DoubleType) {
 
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<double> arguments, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}",
-      )
-  }
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"cosine_similarity: array length mismatch ($n vs ${y.numElements()})",
-      )
+  override protected def fold(x: ArrayData, y: ArrayData, n: Int): Any = {
     var dot = 0.0
     var nx = 0.0
     var ny = 0.0
@@ -70,40 +49,29 @@ case class CosineSimilarity(left: Expression, right: Expression) extends BinaryE
     else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => {
-        val n = ctx.freshName("n")
-        val dot = ctx.freshName("dot")
-        val nx = ctx.freshName("nx")
-        val ny = ctx.freshName("ny")
-        val i = ctx.freshName("i")
-        val xv = ctx.freshName("xv")
-        val yv = ctx.freshName("yv")
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  throw new IllegalArgumentException(
-           |    "cosine_similarity: array length mismatch (" + $n + " vs " + $b.numElements() + ")");
-           |}
-           |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $xv = $a.getDouble($i);
-           |  double $yv = $b.getDouble($i);
-           |  $dot += $xv * $yv;
-           |  $nx += $xv * $xv;
-           |  $ny += $yv * $yv;
-           |}
-           |if ($nx == 0.0 || $ny == 0.0) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-           |}
-         """.stripMargin
-      },
-    )
+  override protected def javaFold(ctx: CodegenContext, ev: ExprCode, a: String, b: String, n: String): String = {
+    val dot = ctx.freshName("dot")
+    val nx = ctx.freshName("nx")
+    val ny = ctx.freshName("ny")
+    val i = ctx.freshName("i")
+    val xv = ctx.freshName("xv")
+    val yv = ctx.freshName("yv")
+    s"""
+       |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  double $xv = $a.getDouble($i);
+       |  double $yv = $b.getDouble($i);
+       |  $dot += $xv * $yv;
+       |  $nx += $xv * $xv;
+       |  $ny += $yv * $yv;
+       |}
+       |if ($nx == 0.0 || $ny == 0.0) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
+       |}
+     """.stripMargin
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression,

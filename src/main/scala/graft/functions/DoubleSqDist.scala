@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native codegen'd double squared euclidean distance over two
   * array<double> columns — the PQ training/encoding kernel
@@ -24,31 +23,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Null contract mirrors [[IntDot]]: null-safe on the array arguments,
   * length mismatch raises.
   */
-case class DoubleSqDist(left: Expression, right: Expression) extends BinaryExpression {
+case class DoubleSqDist(left: Expression, right: Expression) extends ArrayPairKernel(DoubleType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<double> arguments, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}",
-      )
-  }
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_double_sqdist"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"graft_double_sqdist: array length mismatch ($n vs ${y.numElements()})",
-      )
+  override protected def fold(x: ArrayData, y: ArrayData, n: Int): Any = {
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -59,30 +39,19 @@ case class DoubleSqDist(left: Expression, right: Expression) extends BinaryExpre
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => {
-        val n = ctx.freshName("n")
-        val acc = ctx.freshName("acc")
-        val i = ctx.freshName("i")
-        val d = ctx.freshName("d")
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  throw new IllegalArgumentException(
-           |    "graft_double_sqdist: array length mismatch (" + $n + " vs " + $b.numElements() + ")");
-           |}
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $d = $a.getDouble($i) - $b.getDouble($i);
-           |  $acc += $d * $d;
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      },
-    )
+  override protected def javaFold(ctx: CodegenContext, ev: ExprCode, a: String, b: String, n: String): String = {
+    val acc = ctx.freshName("acc")
+    val i = ctx.freshName("i")
+    val d = ctx.freshName("d")
+    s"""
+       |double $acc = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  double $d = $a.getDouble($i) - $b.getDouble($i);
+       |  $acc += $d * $d;
+       |}
+       |${ev.value} = $acc;
+     """.stripMargin
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression,

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native codegen'd integer dot product over two array<bigint> columns —
   * the coarse-ranking kernel of the SQ8 search path
@@ -26,31 +25,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * the one evaluation strategy that silently corrupts past the
   * documented magnitude bounds instead of failing like both oracles.
   */
-case class IntDot(left: Expression, right: Expression) extends BinaryExpression {
+case class IntDot(left: Expression, right: Expression) extends ArrayPairKernel(LongType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType): Boolean = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> arguments, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}",
-      )
-  }
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_int_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"graft_int_dot: array length mismatch ($n vs ${y.numElements()})",
-      )
+  override protected def fold(x: ArrayData, y: ArrayData, n: Int): Any = {
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -60,29 +40,18 @@ case class IntDot(left: Expression, right: Expression) extends BinaryExpression 
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => {
-        val n = ctx.freshName("n")
-        val acc = ctx.freshName("acc")
-        val i = ctx.freshName("i")
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  throw new IllegalArgumentException(
-           |    "graft_int_dot: array length mismatch (" + $n + " vs " + $b.numElements() + ")");
-           |}
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc = java.lang.Math.addExact($acc,
-           |    java.lang.Math.multiplyExact($a.getLong($i), $b.getLong($i)));
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      },
-    )
+  override protected def javaFold(ctx: CodegenContext, ev: ExprCode, a: String, b: String, n: String): String = {
+    val acc = ctx.freshName("acc")
+    val i = ctx.freshName("i")
+    s"""
+       |long $acc = 0L;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  $acc = java.lang.Math.addExact($acc,
+       |    java.lang.Math.multiplyExact($a.getLong($i), $b.getLong($i)));
+       |}
+       |${ev.value} = $acc;
+     """.stripMargin
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression,

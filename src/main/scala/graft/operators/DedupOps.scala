@@ -1193,17 +1193,52 @@ object DedupOps extends QueryModule {
   private[graft] val PrScale = 1000000000000L
   private[graft] val PrIters = 5
 
-  /** The symmetric-graph PageRank loop behind `fuzzy_pagerank`. `ewd` must
-    * be a (da, db, deg) edge table containing BOTH directions of every
-    * undirected pair (the declared query constructs this by unioning the
-    * reversed frame, so the invariant holds structurally). Under that
-    * invariant every node has out-degree ≥ 1 (no dangling mass to
-    * redistribute) and in-degree ≥ 1 (the contribution aggregation already
-    * covers all nodes), which is why this loop can skip both the
-    * dangling-mass term and the per-round node re-join. Pointing it at a
-    * DIRECTED edge list silently leaks rank mass — use [[pagerank]] for
-    * that, which carries the dangling term. An empty graph short-circuits
-    * to an empty (node, r) frame instead of dividing by zero.
+  /** The symmetric rank engine behind `fuzzy_pagerank`, `knn_pagerank`
+    * and `textrank_keywords`: weighted PageRank over the undirected edge
+    * frame `edges` (a, b, w), one row per pair. The symmetrized edge table
+    * is built once per (session, dataset) under `tag` and its node count
+    * is cached as `tag:n`. Returns unordered (node, r).
+    */
+  private[graft] def symmetricRank(s: SparkSession, d: String, tag: String)(
+      edges: => DataFrame,
+  ): DataFrame = {
+    // COLUMNAR pin, not the leaf: a checkpoint leaf advertises
+    // UnknownPartitioning and every round would re-exchange the edge table
+    // on da (the round-17 after-plans proved it); InMemoryRelation keeps
+    // the repartition(da), so the loop's largest frame never re-enters an
+    // exchange — at 100 TB that is 5 graph-sized shuffles removed. The
+    // frame is narrow and its build lineage shallow.
+    val ewd = graft.SubstrateCache.substrateColumnar(s, d, tag)(symmetricEdges(edges))
+    val n = graft.SubstrateCache.value(s, d, tag + ":n")(ewd.select(col("da")).distinct().count())
+    pagerankSymmetric(ewd, PrIters, Some(n))
+  }
+
+  /** Both directions of every undirected (a, b, w) pair as (da, db, w),
+    * with the weighted out-degree `wdeg = Σ w` of `da`, hash-partitioned on
+    * the loop's join key. The degree is a window over da, so its one
+    * shuffle is also the repartition(da): no degree join, whose build side
+    * flips with the frame's width and then needs its own exchange.
+    */
+  private[graft] def symmetricEdges(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val sym = edges
+      .select(col("a").as("da"), col("b").as("db"), col("w"))
+      .unionByName(edges.select(col("b").as("da"), col("a").as("db"), col("w")))
+    sym.withColumn("wdeg", sum("w").over(Window.partitionBy("da"))).repartition(col("da"))
+  }
+
+  /** The weighted symmetric PageRank loop over a [[symmetricEdges]] table
+    * (da, db, w, wdeg): r'(b) = base + 85·(Σ_a (r(a) DIV wdeg(a))·w(a,b))
+    * DIV 100. Each term is ≤ r(a) because w(a,b) ≤ wdeg(a), so the sum is
+    * bounded by Σr ≈ 10¹² — BIGINT-safe at any graph size, unlike the
+    * naive r·w ordering whose product crosses 2⁶³ once weights reach 10⁷.
+    * With w = 1 it is the unweighted recurrence. Because both directions
+    * of every pair are present, every node has out-degree ≥ 1 (no
+    * dangling mass) and in-degree ≥ 1 (the contribution aggregation
+    * covers all nodes), so the loop skips both the dangling term and the
+    * per-round node re-join. A DIRECTED edge list silently leaks rank
+    * mass here — use [[pagerank]], which carries the dangling term. An
+    * empty graph short-circuits to an empty (node, r) frame.
     */
   private[graft] def pagerankSymmetric(
       ewd: DataFrame,
@@ -1226,12 +1261,34 @@ object DedupOps extends QueryModule {
     for (_ <- 1 to iters) {
       ranks = ewd
         .join(ranks, ewd("da") === ranks("node"))
-        .select(col("db").as("node"), expr("r DIV deg").as("c"))
+        .select(col("db").as("node"), expr("(r DIV wdeg) * w").as("c"))
         .groupBy("node")
         .agg(sum(col("c")).as("sc"))
         .select(col("node"), (lit(base) + expr("(85 * sc) DIV 100")).as("r"))
     }
-    ranks.orderBy("node")
+    ranks
+  }
+
+  /** The oracle's [[PrIters]] rounds of the same recurrence, unrolled as
+    * DuckDB CTEs `pr1`… over CTEs `nodes`, `nn` (node count) and `pr0`:
+    * edge CTE `e` (da, db) joined to degree CTE `deg` on da. `sc` spells
+    * the neighbor sum from the previous round's name, text following
+    * "SELECT e.db AS node,".
+    */
+  private[graft] def rankRoundsDuck(e: String, deg: String)(sc: String => String): String = {
+    val base = s"(15 * $PrScale) // (100 * (SELECT n FROM nn))"
+    (1 to PrIters)
+      .map { i =>
+        val p = s"pr${i - 1}"
+        s"""pr$i AS (SELECT nodes.node,
+           |               CAST($base + (85 * coalesce(s.sc, 0)) // 100 AS BIGINT) AS r
+           |        FROM nodes LEFT JOIN (
+           |          SELECT $e.db AS node,${sc(p)} AS sc
+           |          FROM $e JOIN $p ON $e.da = $p.node
+           |                 JOIN $deg ON $deg.da = $e.da
+           |          GROUP BY $e.db) s USING (node))""".stripMargin
+      }
+      .mkString(",\n")
   }
 
   /** PageRank over an arbitrary DIRECTED edge list — the reusable form of
@@ -1348,56 +1405,21 @@ object DedupOps extends QueryModule {
     * node in an entity-resolution graph is the canonical-record candidate,
     * the link-analysis twin of `cluster_keeper`'s quality policy).
     *
-    * Each iteration is one join (edges ⋈ ranks, keyed on the node) and one
-    * aggregation — the textbook Pregel round as two shuffles. Unlike the
-    * CC loop the round count is FIXED, so lineage is bounded and the whole
-    * computation stays one lazy plan (no per-round checkpoint
-    * materialization). Isolated suppliers are out of the graph by construction
-    * (nodes = edge endpoints), so every node has out-degree ≥ 1 in the
-    * symmetric edge view and no dangling-mass term is needed (directed
-    * graphs go through [[pagerank]], which carries it). The oracle
-    * UNROLLS the same 5 iterations as chained CTEs — DuckDB's recursive
-    * CTEs cannot aggregate over the recursive table, and unrolling states
-    * the identical integer arithmetic declaratively.
-    *
-    * At 100 TB: per-iteration cost is one hash join on node id + one
-    * partial+final agg; ranks are (node, long) pairs — the text never
-    * moves, and rounds are O(iterations), not data-dependent.
+    * It runs on [[symmetricRank]] with unit weights: isolated suppliers
+    * are out of the graph by construction (nodes = edge endpoints), so
+    * the symmetric edge view has no dangling node. The oracle UNROLLS the
+    * same 5 iterations as chained CTEs — DuckDB's recursive CTEs cannot
+    * aggregate over the recursive table, and unrolling states the
+    * identical integer arithmetic declaratively.
     */
   private val fuzzyPagerank = DeclaredQuery(
     "fuzzy_pagerank",
     (s, d) => {
-      val e = fuzzyPairs(s, d).select("da", "db")
-      val sym = e.unionByName(e.select(col("db").as("da"), col("da").as("db")))
-      // (src, dst, deg) edge table, built once and persisted for the loop.
-      // COLUMNAR pin, not the leaf: a checkpoint leaf advertises
-      // UnknownPartitioning and every PageRank round would re-exchange
-      // the edge table on da (the round-17 after-plans proved it);
-      // InMemoryRelation preserves the repartition(da), so the loop's
-      // largest frame never re-enters an exchange (guide §2.4) — at
-      // 100 TB that is 5 graph-sized shuffles removed. Narrow frame
-      // (3 longs), shallow build lineage over the fuzzy-pairs leaf.
-      val ewd = graft.SubstrateCache.substrateColumnar(s, d, "fuzzy-sym-deg:1") {
-        sym.join(sym.groupBy("da").agg(count(lit(1)).as("deg")), Seq("da"))
-          .repartition(col("da"))
-      }
-      val n = graft.SubstrateCache.value(s, d, "fuzzy-sym-deg:1:n") {
-        ewd.select(col("da")).distinct().count()
-      }
-      pagerankSymmetric(ewd, PrIters, Some(n))
+      symmetricRank(s, d, "rank-edges:fuzzy") {
+        fuzzyPairs(s, d).select(col("da").as("a"), col("db").as("b"), lit(1L).as("w"))
+      }.orderBy("node")
     }, {
-      val base = s"(15 * $PrScale) // (100 * (SELECT n FROM nn))"
-      val steps = (1 to PrIters)
-        .map { i =>
-          s"""pr$i AS (SELECT nodes.node,
-             |               CAST($base + (85 * coalesce(s.sc, 0)) // 100 AS BIGINT) AS r
-             |        FROM nodes LEFT JOIN (
-             |          SELECT e.db AS node, sum(pr${i - 1}.r // deg.deg) AS sc
-             |          FROM e JOIN pr${i - 1} ON e.da = pr${i - 1}.node
-             |                 JOIN deg ON deg.da = e.da
-             |          GROUP BY e.db) s USING (node))""".stripMargin
-        }
-        .mkString(",\n")
+      val steps = rankRoundsDuck("e", "deg")(p => s" sum($p.r // deg.deg)")
       Some(s"""WITH p AS (SELECT a.s_suppkey AS da, b.s_suppkey AS db
                FROM supplier a JOIN supplier b ON a.s_suppkey < b.s_suppkey
                WHERE levenshtein(a.s_name, b.s_name) <= 1),
@@ -1415,7 +1437,7 @@ object DedupOps extends QueryModule {
     * `(doc_id, text)` docs — one row per trigram OCCURRENCE (pos =
     * starting word index, 0-based).
     */
-  private[graft] def gramPosRowsOf(docs: DataFrame): DataFrame = {
+  private def gramPosRowsOf(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("ghs", expr("graft_gram_hashes_pos(split(text, ' '))"))
@@ -1427,7 +1449,7 @@ object DedupOps extends QueryModule {
     * need every occurrence. Same row width and scale class: O(corpus
     * tokens) narrow rows, text never leaves the scan.
     */
-  private def gramPosRows(s: SparkSession, d: String): DataFrame =
+  private[graft] def gramPosRows(s: SparkSession, d: String): DataFrame =
     graft.SubstrateCache.substrate(s, d, "gram-pos-rows")(gramPosRowsOf(documents(s, d)))
 
   /** Coalesce marked gram positions `(doc_id, pos, ...)` into maximal

@@ -40,6 +40,37 @@ object SimilarityOps extends QueryModule {
     expr("cosine_similarity(qv, cv)")
   }
 
+  /** The top-`k` rows per `q` of `pairs` (which carry qv and cv) by exact
+    * cosine, ties broken on `c`: (q, rank, c, extra…, sim), unordered.
+    */
+  private def topByCosine(
+      s: SparkSession,
+      pairs: DataFrame,
+      q: String,
+      c: String,
+      k: Int,
+      extra: String*,
+  ): DataFrame =
+    pairs
+      .withColumn("sim", Disp.roundz(simExpr(s), 6))
+      .withColumn(
+        "rank",
+        row_number().over(org.apache.spark.sql.expressions.Window.partitionBy(q).orderBy(col("sim").desc, col(c))),
+      )
+      .filter(col("rank") <= k)
+      .select(Seq(col(q), col("rank").cast("long").as("rank"), col(c)) ++ extra.map(col) :+ col("sim"): _*)
+
+  /** One row per 4-bit band of the 16-bit sign code in column `code`,
+    * (…, band, bv): two codes within hamming ≤ 3 agree on ≥ 1 band.
+    */
+  private def bandRows(df: DataFrame, code: String): DataFrame =
+    df.select(
+      col("*"),
+      posexplode(
+        array((0 until 4).map(b => expr(s"shiftright($code, ${4 * b}) & 15")): _*),
+      ).as(Seq("band", "bv")),
+    )
+
   /** The exact brute-force ranking (qid, rank, cid, sim), rank ≤ 10,
     * unordered — shared by the declared `cosine_topk` and the
     * `ann_recall` ground-truth arm, so the exact baseline cannot drift.
@@ -50,19 +81,7 @@ object SimilarityOps extends QueryModule {
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("dvec").as("qv"))
     val c = e.select(col("vec_id").as("cid"), col("dvec").as("cv"))
-    broadcast(q)
-      .join(c, col("qid") =!= col("cid"))
-      .withColumn("sim", Disp.roundz(simExpr(s), 6))
-      .withColumn(
-        "rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("qid")
-            .orderBy(col("sim").desc, col("cid")),
-        ),
-      )
-      .filter(col("rank") <= 10)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"), col("sim"))
+    topByCosine(s, broadcast(q).join(c, col("qid") =!= col("cid")), "qid", "cid", 10)
   }
 
   private val cosineTopk = DeclaredQuery(
@@ -97,76 +116,34 @@ object SimilarityOps extends QueryModule {
     * drift from the measurement.
     */
   private def lshRanked(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val e0 = embeddings(s, d)
-        .withColumn("dvec", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      // Sign codes as 16 codegen'd sum aggregates over the exploded dims
-      // (one partial-agg pass; an exploded vector never crosses a partition
-      // boundary, so each sum accumulates in ascending-k order and agrees
-      // bit-for-bit with the oracle's sequential fold).
-      val dims = e0.select(col("vec_id"), posexplode(col("dvec")).as(Seq("k", "v")))
-      val sumCols = (0 until 16).map { j =>
-        val plane = ((lit(j.toLong * 73856093L) + col("k").cast("long") * 19349663L) % 10007L)
-          .cast("double") / 10007.0 - 0.5
-        sum(col("v") * plane).as(s"s$j")
-      }
-      val codes = dims
-        .groupBy("vec_id")
-        .agg(sumCols.head, sumCols.tail: _*)
-        .select(
-          col("vec_id"),
-          (0 until 16)
-            .map(j => when(col(s"s$j") >= 0d, lit(1L << j)).otherwise(lit(0L)))
-            .reduce(_ + _)
-            .as("code"),
-        )
-      // materialize once per (session, dataset): both sides of the
-      // query/candidate join reuse it, and repeated invocations don't
-      // stack persisted copies
-      val e = graft.SubstrateCache.substrate(s, d, "lsh-codes")(e0.join(codes, "vec_id"))
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("dvec").as("qv"), col("code").as("qc"))
-      // Banded candidate generation (the bucketed code space named in
-      // SCALE.md): split the 16-bit code into 4 four-bit bands — a pair
-      // within hamming ≤ 3 MUST agree exactly on ≥ 1 band (pigeonhole:
-      // 3 bit errors cannot touch all 4 bands), so an equi-join on
-      // (band, value) finds every qualifying pair without ever comparing
-      // a query against the full corpus. The exact hamming filter then
-      // discards band-collision false positives, so the result set is
-      // IDENTICAL to the all-pairs formulation the oracle states. The
-      // band shuffle carries (id, code, 2 small ints) — never vectors.
-      def bandRows(df: org.apache.spark.sql.DataFrame, code: String) =
-        df.select(
-          col("*"),
-          posexplode(
-            array((0 until 4).map(b => expr(s"shiftright($code, ${4 * b}) & 15")): _*),
-          ).as(Seq("band", "bv")),
-        )
-      val qBands = bandRows(q.select(col("qid"), col("qc")), "qc")
-      val cBands = bandRows(e.select(col("vec_id").as("cid"), col("code").as("cc")), "cc")
-      val cand = broadcast(qBands)
-        .join(cBands, Seq("band", "bv"))
-        .filter(col("qid") =!= col("cid"))
-        .withColumn("code_hd", expr("CAST(bit_count(qc ^ cc) AS BIGINT)"))
-        .filter(col("code_hd") <= 3)
-        .select("qid", "cid", "code_hd")
-        .dropDuplicates("qid", "cid")
-      // only confirmed candidates pay the float work: vectors join back
-      // AFTER banding + hamming, queries broadcast, corpus side served
-      // from the same substrate
-      cand
-        .join(broadcast(q.select(col("qid"), col("qv"))), Seq("qid"))
-        .join(e.select(col("vec_id").as("cid"), col("dvec").as("cv")), Seq("cid"))
-        .withColumn("sim", Disp.roundz(simExpr(s), 6))
-        .withColumn(
-          "rank",
-          row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("qid")
-              .orderBy(col("sim").desc, col("cid")),
-          ),
-        )
-        .filter(col("rank") <= 5)
-        .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"), col("code_hd"), col("sim"))
+    val e = knnCoded(s, d)
+    val q = e.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("qid"), col("dvec").as("qv"), col("code").as("qc"))
+    // Banded candidate generation (the bucketed code space named in
+    // SCALE.md): split the 16-bit code into 4 four-bit bands — a pair
+    // within hamming ≤ 3 MUST agree exactly on ≥ 1 band (pigeonhole:
+    // 3 bit errors cannot touch all 4 bands), so an equi-join on
+    // (band, value) finds every qualifying pair without ever comparing
+    // a query against the full corpus. The exact hamming filter then
+    // discards band-collision false positives, so the result set is
+    // IDENTICAL to the all-pairs formulation the oracle states. The
+    // band shuffle carries (id, code, 2 small ints) — never vectors.
+    val qBands = bandRows(q.select(col("qid"), col("qc")), "qc")
+    val cBands = bandRows(e.select(col("vec_id").as("cid"), col("code").as("cc")), "cc")
+    val cand = broadcast(qBands)
+      .join(cBands, Seq("band", "bv"))
+      .filter(col("qid") =!= col("cid"))
+      .withColumn("code_hd", expr("CAST(bit_count(qc ^ cc) AS BIGINT)"))
+      .filter(col("code_hd") <= 3)
+      .select("qid", "cid", "code_hd")
+      .dropDuplicates("qid", "cid")
+    // only confirmed candidates pay the float work: vectors join back
+    // AFTER banding + hamming, queries broadcast, corpus side served
+    // from the same substrate
+    val pairs = cand
+      .join(broadcast(q.select(col("qid"), col("qv"))), Seq("qid"))
+      .join(e.select(col("vec_id").as("cid"), col("dvec").as("cv")), Seq("cid"))
+    topByCosine(s, pairs, "qid", "cid", 5, "code_hd")
   }
 
   private val cosineLshAnn = DeclaredQuery(
@@ -958,25 +935,7 @@ object SimilarityOps extends QueryModule {
       val q = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("qid"), col("dvec").as("qv"), col("label").as("qlabel"))
       val c = e.select(col("vec_id").as("cid"), col("dvec").as("cv"), col("label").as("neg_label"))
-      broadcast(q)
-        .join(c, col("qlabel") =!= col("neg_label"))
-        .withColumn("sim", Disp.roundz(simExpr(s), 6))
-        .withColumn(
-          "rank",
-          row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("qid")
-              .orderBy(col("sim").desc, col("cid")),
-          ),
-        )
-        .filter(col("rank") <= 5)
-        .select(
-          col("qid"),
-          col("rank").cast("long").as("rank"),
-          col("cid"),
-          col("neg_label"),
-          col("sim"),
-        )
+      topByCosine(s, broadcast(q).join(c, col("qlabel") =!= col("neg_label")), "qid", "cid", 5, "neg_label")
         .orderBy("qid", "rank")
     },
     Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS dvec,
@@ -1018,14 +977,16 @@ object SimilarityOps extends QueryModule {
     * both consume it, so the banded candidate join runs once per session.
     */
   /** The sign-coded corpus (vec_id, embedding, dvec, code) behind the
-    * whole LSH family — the SAME "lsh-codes" session substrate
-    * `lshRanked` builds (identical AST, so whichever runs first feeds
-    * the other); factored out so the asymmetric incremental path can
-    * filter it without rebuilding codes.
+    * whole LSH family (`lshRanked`, the kNN graph, the asymmetric
+    * incremental path), materialized once per (session, dataset).
     */
   private[graft] def knnCoded(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val e0 = embeddings(s, d)
       .withColumn("dvec", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+    // Sign codes as 16 codegen'd sum aggregates over the exploded dims
+    // (one partial-agg pass; an exploded vector never crosses a partition
+    // boundary, so each sum accumulates in ascending-k order and agrees
+    // bit-for-bit with the oracle's sequential fold).
     val dims = e0.select(col("vec_id"), posexplode(col("dvec")).as(Seq("k", "v")))
     val sumCols = (0 until 16).map { j =>
       val plane = ((lit(j.toLong * 73856093L) + col("k").cast("long") * 19349663L) % 10007L)
@@ -1048,13 +1009,6 @@ object SimilarityOps extends QueryModule {
   private def knnEdges(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
     graft.SubstrateCache.substrate(s, d, "knn-edges") {
       val e = knnCoded(s, d)
-      def bandRows(df: org.apache.spark.sql.DataFrame, code: String) =
-        df.select(
-          col("*"),
-          posexplode(
-            array((0 until 4).map(b => expr(s"shiftright($code, ${4 * b}) & 15")): _*),
-          ).as(Seq("band", "bv")),
-        )
       val srcB = bandRows(e.select(col("vec_id").as("src"), col("code").as("sc")), "sc")
       val nbrB = bandRows(e.select(col("vec_id").as("nbr"), col("code").as("nc")), "nc")
       val cand = srcB
@@ -1077,20 +1031,10 @@ object SimilarityOps extends QueryModule {
         .withColumn("code_hd", expr("CAST(bit_count(sc ^ nc) AS BIGINT)"))
         .filter(col("code_hd") <= 3)
         .select("src", "nbr", "code_hd")
-      cand
+      val pairs = cand
         .join(e.select(col("vec_id").as("src"), col("dvec").as("qv")), Seq("src"))
         .join(e.select(col("vec_id").as("nbr"), col("dvec").as("cv")), Seq("nbr"))
-        .withColumn("sim", Disp.roundz(simExpr(s), 6))
-        .withColumn(
-          "rank",
-          row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("src")
-              .orderBy(col("sim").desc, col("nbr")),
-          ),
-        )
-        .filter(col("rank") <= 3)
-        .select(col("src"), col("rank").cast("long").as("rank"), col("nbr"), col("code_hd"), col("sim"))
+      topByCosine(s, pairs, "src", "nbr", 3, "code_hd")
     }
 
   /** The knn edge derivation as DuckDB CTEs ending in `r` (filter
@@ -1356,34 +1300,16 @@ object SimilarityOps extends QueryModule {
       newB: org.apache.spark.sql.DataFrame,
       corpus: org.apache.spark.sql.DataFrame,
   ): org.apache.spark.sql.DataFrame = {
-    def bandRows(df: org.apache.spark.sql.DataFrame, code: String) =
-      df.select(
-        col("*"),
-        posexplode(
-          array((0 until 4).map(b => expr(s"shiftright($code, ${4 * b}) & 15")): _*),
-        ).as(Seq("band", "bv")),
-      )
     val cand = bandRows(newB.select("src", "sc"), "sc")
       .join(bandRows(corpus.select("nbr", "nc"), "nc"), Seq("band", "bv"))
       .withColumn("code_hd", expr("CAST(bit_count(sc ^ nc) AS BIGINT)"))
       .filter(col("code_hd") <= 3)
       .select("src", "nbr", "code_hd")
       .dropDuplicates("src", "nbr")
-    cand
+    val pairs = cand
       .join(newB.select("src", "qv"), Seq("src"))
       .join(corpus.select("nbr", "cv"), Seq("nbr"))
-      .withColumn("sim", Disp.roundz(simExpr(s), 6))
-      .withColumn(
-        "rank",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("src")
-            .orderBy(col("sim").desc, col("nbr")),
-        ),
-      )
-      .filter(col("rank") <= 3)
-      .select(col("src"), col("rank").cast("long").as("rank"), col("nbr"), col("code_hd"), col("sim"))
-      .orderBy("src", "rank")
+    topByCosine(s, pairs, "src", "nbr", 3, "code_hd").orderBy("src", "rank")
   }
 
   private val incrementalKnn = DeclaredQuery(
@@ -2407,47 +2333,24 @@ object SimilarityOps extends QueryModule {
     * prioritizer that `cluster_keeper`'s min-id convention cannot
     * express. Unlike the |types|²-bounded centrality pair (driver
     * folds), this graph is CORPUS-sized — so it runs on the distributed
-    * symmetric engine ([[graft.operators.DedupOps.pagerankSymmetric]],
-    * the `fuzzy_pagerank` recurrence: exact ×10¹² integer ranks, floor
-    * division, 5 fixed rounds = one lazy bounded-lineage plan), which is
-    * exactly the engine-selection boundary the centrality scaladocs
-    * state, exercised from the other side.
+    * symmetric engine ([[graft.operators.DedupOps.symmetricRank]] with
+    * unit weights: exact ×10¹² integer ranks, floor division, 5 fixed
+    * rounds = one lazy bounded-lineage plan), which is exactly the
+    * engine-selection boundary the centrality scaladocs state, exercised
+    * from the other side.
     *
-    * Scale: the symmetrized (da, db, deg) table is substrate-pinned
-    * (built once per session/dataset); per round one node-keyed hash
-    * join + agg over n·k-bounded edges. Degrees are cell-bounded, so no
-    * skew salting is needed.
+    * Scale: per round one node-keyed hash join + agg over n·k-bounded
+    * edges. Degrees are cell-bounded, so no skew salting is needed.
     */
   private val knnPagerank = DeclaredQuery(
     "knn_pagerank",
     (s, d) => {
       val ue = knnEdgesScaled(s, d)
-        .select(least(col("src"), col("nbr")).as("da"), greatest(col("src"), col("nbr")).as("db"))
+        .select(least(col("src"), col("nbr")).as("a"), greatest(col("src"), col("nbr")).as("b"))
         .distinct()
-      val sym = ue.unionByName(ue.select(col("db").as("da"), col("da").as("db")))
-      // columnar pin so the repartition(da) survives into consumer plans
-      // (a checkpoint leaf would drop it) — see fuzzy-sym-deg:1
-      val ewd = graft.SubstrateCache.substrateColumnar(s, d, "knn-sym-deg:1") {
-        sym.join(sym.groupBy("da").agg(count(lit(1)).as("deg")), Seq("da"))
-          .repartition(col("da"))
-      }
-      val n = graft.SubstrateCache.value(s, d, "knn-sym-deg:1:n") {
-        ewd.select(col("da")).distinct().count()
-      }
-      DedupOps.pagerankSymmetric(ewd, DedupOps.PrIters, Some(n))
+      DedupOps.symmetricRank(s, d, "rank-edges:knn")(ue.withColumn("w", lit(1L))).orderBy("node")
     }, {
-      val base = s"(15 * ${DedupOps.PrScale}) // (100 * (SELECT n FROM nn))"
-      val steps = (1 to DedupOps.PrIters)
-        .map { i =>
-          s"""pr$i AS (SELECT nodes.node,
-             |               CAST($base + (85 * coalesce(s.sc, 0)) // 100 AS BIGINT) AS r
-             |        FROM nodes LEFT JOIN (
-             |          SELECT se.db AS node, sum(pr${i - 1}.r // deg.deg) AS sc
-             |          FROM se JOIN pr${i - 1} ON se.da = pr${i - 1}.node
-             |                 JOIN deg ON deg.da = se.da
-             |          GROUP BY se.db) s USING (node))""".stripMargin
-        }
-        .mkString(",\n")
+      val steps = DedupOps.rankRoundsDuck("se", "deg")(p => s" sum($p.r // deg.deg)")
       // `se`, not `e`: the knnScaledDuckCtes prefix already owns `e`
       Some(s"""WITH $knnScaledDuckCtes,
                ke AS (SELECT src, nbr FROM r WHERE rank <= 3),

@@ -1561,42 +1561,25 @@ object TextOps extends QueryModule {
     * `token_topk`/`tfidf_keywords`: centrality promotes terms that
     * CONNECT the vocabulary, not just frequent ones.
     *
-    * Exact integer recurrence (the `fuzzy_pagerank` discipline, ranks
-    * ×10¹²): r'(b) = base + 85·(Σ_a (r(a) DIV wdeg(a))·w(a,b)) DIV 100.
-    * Each contribution term is ≤ r(a) because w(a,b) ≤ wdeg(a) = Σ w(a,·),
-    * so the neighbor sum is bounded by Σr ≈ 10¹² — BIGINT-safe at ANY
-    * corpus size with no wide tier, unlike the naive r·w ordering whose
-    * product crosses 2⁶³ once pair counts reach 10⁷. Floor division in
-    * both engines (operands non-negative).
+    * Ranks come from the weighted symmetric engine
+    * ([[DedupOps.symmetricRank]], co-occurrence counts as the weights):
+    * exact ×10¹² integer ranks, floor division in both engines.
     *
     * Scale: the graph is bigram-vocabulary-bounded (Heaps-law sublinear,
     * never corpus-sized); pair aggregation is one map-side-combined
     * groupBy off the doc scan (zip_with over shifted slices — no
     * per-index lambda); each of the 5 fixed iterations is one node-keyed
     * join + agg over the vocabulary-sized edge list (at 10⁹-term vocab
-    * you'd key on a 64-bit term hash instead of the string). The edge
-    * table persists once (SubstrateCache); lineage is bounded by the
-    * fixed iteration count.
+    * you'd key on a 64-bit term hash instead of the string).
     */
-  private val TrScale = 1000000000000L
-  private val TrIters = 5
   private val TrMinCo = 3
   private val TrTopK = 10
 
   private val textrankKeywords = DeclaredQuery(
     "textrank_keywords",
     (s, d) => {
-      // COLUMNAR pin, not the leaf: a checkpoint leaf advertises
-      // UnknownPartitioning, so every one of the 5 unrolled rounds would
-      // re-exchange the edge table on da (the round-17 after-plans proved
-      // the leaf form does exactly that); InMemoryRelation preserves the
-      // repartition(da) below, so the per-round rank join needs NO edge-
-      // side exchange — at 100 TB that is 5 graph-sized shuffles removed
-      // (guide §2.4). The frame is narrow (two terms + two longs), so the
-      // wide-substrate deserialization objection doesn't apply, and the
-      // build lineage kept in consumer plans is shallow.
-      val ewd = graft.SubstrateCache.substrateColumnar(s, d, "textrank-sym-edges") {
-        val pairs = documents(s, d)
+      val ranks = DedupOps.symmetricRank(s, d, "rank-edges:textrank") {
+        documents(s, d)
           .withColumn("ws", split(col("text"), " "))
           .select(
             explode(
@@ -1606,30 +1589,11 @@ object TextOps extends QueryModule {
               ),
             ).as("p"),
           )
-          .select(col("p.wa").as("wa"), col("p.wb").as("wb"))
-          .filter(col("wa") =!= col("wb"))
-          .groupBy("wa", "wb")
+          .select(col("p.wa").as("a"), col("p.wb").as("b"))
+          .filter(col("a") =!= col("b"))
+          .groupBy("a", "b")
           .agg(count(lit(1)).as("w"))
           .filter(col("w") >= TrMinCo)
-        val sym = pairs
-          .select(col("wa").as("da"), col("wb").as("db"), col("w"))
-          .unionByName(pairs.select(col("wb").as("da"), col("wa").as("db"), col("w")))
-        // hash-partitioned on the loop's join key; the columnar cache
-        // preserves this partitioning for every consumer round
-        sym.join(sym.groupBy("da").agg(sum("w").as("wdeg")), Seq("da"))
-          .repartition(col("da"))
-      }
-      val nodes = ewd.select(col("da").as("node")).distinct()
-      val n = graft.SubstrateCache.value(s, d, "textrank-sym-edges:n")(nodes.count())
-      val base = (15L * TrScale) / (100L * math.max(n, 1L))
-      var ranks = nodes.select(col("node"), lit(TrScale / math.max(n, 1L)).as("r"))
-      for (_ <- 1 to TrIters) {
-        ranks = ewd
-          .join(ranks, ewd("da") === ranks("node"))
-          .select(col("db").as("node"), expr("(r DIV wdeg) * w").as("c"))
-          .groupBy("node")
-          .agg(sum(col("c")).as("sc"))
-          .select(col("node"), (lit(base) + expr("(85 * sc) DIV 100")).as("r"))
       }
       ranks
         .orderBy(col("r").desc, col("node"))
@@ -1641,19 +1605,9 @@ object TextOps extends QueryModule {
         .select(col("rank"), col("node").as("term"), col("r"))
         .orderBy("rank")
     }, {
-      val base = s"(15 * $TrScale) // (100 * (SELECT n FROM nn))"
-      val steps = (1 to TrIters)
-        .map { i =>
-          s"""pr$i AS (SELECT nodes.node,
-             |               CAST($base + (85 * coalesce(s.sc, 0)) // 100 AS BIGINT) AS r
-             |        FROM nodes LEFT JOIN (
-             |          SELECT e.db AS node,
-             |                 CAST(sum((pr${i - 1}.r // wd.wdeg) * e.w) AS BIGINT) AS sc
-             |          FROM e JOIN pr${i - 1} ON e.da = pr${i - 1}.node
-             |                 JOIN wd ON wd.da = e.da
-             |          GROUP BY e.db) s USING (node))""".stripMargin
-        }
-        .mkString(",\n")
+      val steps = DedupOps.rankRoundsDuck("e", "wd") { p =>
+        s"\n                 CAST(sum(($p.r // wd.wdeg) * e.w) AS BIGINT)"
+      }
       Some(s"""WITH w0 AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
                t AS (SELECT doc_id, generate_subscripts(ws, 1) AS i, unnest(ws) AS term FROM w0),
                p0 AS (SELECT least(a.term, b.term) AS wa, greatest(a.term, b.term) AS wb
@@ -1666,11 +1620,11 @@ object TextOps extends QueryModule {
                wd AS (SELECT da, CAST(sum(w) AS BIGINT) AS wdeg FROM e GROUP BY 1),
                nodes AS (SELECT DISTINCT da AS node FROM e),
                nn AS (SELECT count(*) AS n FROM nodes),
-               pr0 AS (SELECT node, CAST($TrScale // (SELECT n FROM nn) AS BIGINT) AS r FROM nodes),
+               pr0 AS (SELECT node, CAST(${DedupOps.PrScale} // (SELECT n FROM nn) AS BIGINT) AS r FROM nodes),
                $steps,
                top AS (SELECT node, r,
                               CAST(row_number() OVER (ORDER BY r DESC, node) AS BIGINT) AS rank
-                       FROM pr$TrIters)
+                       FROM pr${DedupOps.PrIters})
                SELECT rank, node AS term, r FROM top WHERE rank <= $TrTopK ORDER BY rank""")
     },
   )
@@ -1702,9 +1656,7 @@ object TextOps extends QueryModule {
   private val goodTuring = DeclaredQuery(
     "good_turing",
     (s, d) => {
-      val occ = graft.SubstrateCache.substrate(s, d, "gram-pos-rows")(
-        DedupOps.gramPosRowsOf(documents(s, d)),
-      )
+      val occ = DedupOps.gramPosRows(s, d)
       val counts = occ.groupBy("gh").agg(count(lit(1)).as("r"))
       val nr = counts.groupBy("r").agg(count(lit(1)).as("n_r"))
       val tot = occ.agg(count(lit(1)).as("t_occ"))

@@ -58,53 +58,68 @@ class CosineSimilaritySpec extends SparkSpec {
     }
   }
 
-  test("null inputs yield null, mismatched types are rejected") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    val row = Seq((Seq(1.0, 2.0), Option.empty[Seq[Double]]))
-      .toDF("a", "b")
-      .select(expr("cosine_similarity(a, b)"))
-      .collect()
-      .head
-    assert(row.isNullAt(0))
-    intercept[Exception] {
-      Seq((1, 2)).toDF("a", "b").select(expr("cosine_similarity(a, b)")).collect()
-    }
-  }
+  /** Every array-pair kernel with its element type. */
+  private val kernels = Seq(
+    "cosine_similarity" -> "double",
+    "graft_int_dot" -> "bigint",
+    "graft_int_sqdist" -> "bigint",
+    "graft_double_sqdist" -> "double",
+  )
 
-  test("zero-norm vectors yield null (not NaN), mismatched lengths raise") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    // codegen path
-    val z = Seq((Seq(0.0, 0.0), Seq(1.0, 2.0)), (Seq(1.0, 2.0), Seq(0.0, 0.0)))
-      .toDF("a", "b")
-      .select(expr("cosine_similarity(a, b)"))
-      .collect()
-    assert(z.forall(_.isNullAt(0)), "zero-norm must be null, not NaN")
-    val mismatch = intercept[Exception] {
-      Seq((Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0)))
-        .toDF("a", "b")
-        .select(expr("cosine_similarity(a, b)"))
-        .collect()
-    }
-    assert(mismatch.getMessage.contains("length mismatch")
-      || mismatch.getCause != null && mismatch.getCause.getMessage.contains("length mismatch"))
-    // interpreted path agrees
+  /** `kernel(x, y)` over a one-row range: the arrays derive from `id`, so
+    * nothing constant-folds and the kernel runs in the executed plan.
+    */
+  private def run(kernel: String, t: String, x: String, y: String) =
+    spark.range(1).select(expr(s"$kernel(CAST($x AS array<$t>), CAST($y AS array<$t>))")).collect().head
+
+  /** Run `body` once on the whole-stage codegen path, then once interpreted. */
+  private def bothPaths(body: => Unit): Unit = {
+    body
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     try {
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
       spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val zi = Seq((Seq(0.0, 0.0), Seq(1.0, 2.0)))
-        .toDF("a", "b")
-        .select(expr("cosine_similarity(a, b)"))
-        .collect()
-      assert(zi.head.isNullAt(0))
+      body
     } finally {
       spark.conf.set("spark.sql.codegen.wholeStage", prev)
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
 
+  private def causes(e: Throwable): Iterator[Throwable] = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+
+  test("null inputs yield null, mismatched types are rejected") {
+    GraftFunctions.register(spark)
+    bothPaths {
+      kernels.foreach { case (k, t) =>
+        assert(run(k, t, "array(id + 1, id + 2)", "NULL").isNullAt(0), s"$k(x, NULL)")
+        assert(run(k, t, "NULL", "array(id + 1, id + 2)").isNullAt(0), s"$k(NULL, y)")
+      }
+    }
+    kernels.foreach { case (k, t) =>
+      val other = if (t == "double") "bigint" else "double"
+      val e = intercept[Exception](run(k, other, "array(id + 1)", "array(id + 2)"))
+      assert(e.getMessage.contains(s"requires two array<$t> arguments"), s"$k: ${e.getMessage}")
+      intercept[Exception] {
+        spark.range(1).select(expr(s"$k(id, id)")).collect()
+      }
+    }
+  }
+
+  test("zero-norm vectors yield null (not NaN), mismatched lengths raise") {
+    GraftFunctions.register(spark)
+    bothPaths {
+      assert(run("cosine_similarity", "double", "array(id, id)", "array(id + 1, id + 2)").isNullAt(0))
+      assert(run("cosine_similarity", "double", "array(id + 1, id + 2)", "array(id, id)").isNullAt(0))
+      kernels.foreach { case (k, t) =>
+        val e = intercept[Exception](run(k, t, "array(id + 1, id + 2)", "array(id + 1, id + 2, id + 3)"))
+        assert(
+          causes(e).exists(c => c.getMessage != null && c.getMessage.contains(s"$k: array length mismatch (2 vs 3)")),
+          s"$k: ${e.getMessage}",
+        )
+      }
+    }
+  }
   test("integer kernels fail LOUDLY on overflow — codegen and interpreted paths") {
     GraftFunctions.register(spark)
     import spark.implicits._
@@ -148,25 +163,18 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("interpreted (non-codegen) eval path matches too") {
     GraftFunctions.register(spark)
-    val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      import spark.implicits._
-      val got = Seq((Seq(1.0, 2.0, 3.0), Seq(2.0, 3.0, 4.0)))
-        .toDF("a", "b")
-        .select(expr("cosine_similarity(a, b)"))
-        .as[Double]
-        .collect()
-        .head
-      val exp = {
-        val dot = 1.0 * 2 + 2.0 * 3 + 3.0 * 4
-        dot / (math.sqrt(1 + 4 + 9) * math.sqrt(4 + 9 + 16))
+    val dot = 1.0 * 2 + 2.0 * 3 + 3.0 * 4
+    val want = Map(
+      "cosine_similarity" -> dot / (math.sqrt(1 + 4 + 9) * math.sqrt(4 + 9 + 16)),
+      "graft_int_dot" -> 20L,
+      "graft_int_sqdist" -> 3L,
+      "graft_double_sqdist" -> 3.0,
+    )
+    bothPaths {
+      kernels.foreach { case (k, t) =>
+        val got = run(k, t, "array(id + 1, id + 2, id + 3)", "array(id + 2, id + 3, id + 4)").get(0)
+        assert(got == want(k), s"$k: $got vs ${want(k)}")
       }
-      assert(got == exp)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", prev)
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
 }

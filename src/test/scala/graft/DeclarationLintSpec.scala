@@ -153,6 +153,30 @@ class DeclarationLintSpec extends SparkSpec {
       s"bare round( in Scala code (use Disp.roundz): ${offenders.mkString(", ")}")
   }
 
+  test("each literal substrate tag is built at one call site") {
+    // Two builders of one tag race: whichever runs first fills the entry
+    // and the other's build is silently ignored, so the two can drift
+    // apart without any test noticing. A shared tag goes through one
+    // function that every consumer calls.
+    import scala.jdk.CollectionConverters._
+    val call = """SubstrateCache\.(?:substrate|substrateColumnar|value|layout)\(\s*[^,()]+,\s*[^,()]+,\s*"([^"]*)"""".r
+    val sites = java.nio.file.Files
+      .walk(java.nio.file.Paths.get("src/main/scala/graft"))
+      .iterator()
+      .asScala
+      .filter(_.toString.endsWith(".scala"))
+      .toSeq
+      .flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        call.findAllMatchIn(text).map { m =>
+          m.group(1) -> s"${p.getFileName}:${text.substring(0, m.start).count(_ == '\n') + 1}"
+        }
+      }
+    assert(sites.nonEmpty, "the call-site scan found no substrate calls")
+    val shared = sites.groupBy(_._1).collect { case (tag, ss) if ss.size > 1 => s"$tag at ${ss.map(_._2).mkString(", ")}" }
+    assert(shared.isEmpty, s"substrate tags built at more than one call site: ${shared.mkString("; ")}")
+  }
+
   test("oracles reference only driver testdata tables") {
     val tables = Set(
       "region", "nation", "customer", "supplier", "part",

@@ -1,18 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
 
 /** PageRank engines: the general directed form (`DedupOps.pagerank`) must
-  * carry the dangling-mass term the symmetric fast path is allowed to skip
+  * carry the dangling-mass term the symmetric engine is allowed to skip
   * — a directed graph fed to the symmetric recurrence silently leaks rank
   * mass toward the teleport floor, which is exactly the bug class the
   * dangling term exists to prevent. Both engines are pinned against a
   * sequential reference that replays the identical exact-integer
   * arithmetic (ranks ×10¹², floor division), so every assertion is
-  * equality, not tolerance.
+  * equality, not tolerance. The symmetric engine is weighted (textrank
+  * passes co-occurrence counts), so the reference is too.
   */
 class PageRankSpec extends SparkSpec {
 
@@ -20,31 +20,36 @@ class PageRankSpec extends SparkSpec {
 
   private val Scale = 1000000000000L
 
-  /** Sequential replay of the integer recurrence. `dangling = false`
-    * reproduces the symmetric fast path's update (no redistribution, no
-    * zero-in-degree coverage is lost here because we still iterate all
-    * nodes with sc = 0) — used only to measure the leak.
+  /** Sequential replay of the integer recurrence over weighted directed
+    * edges (src, dst, w): each edge carries (r(src) / wdeg(src)) · w, with
+    * wdeg the summed out-weight. `dangling = false` reproduces the
+    * symmetric engine's update (no redistribution, no zero-in-degree
+    * coverage is lost here because we still iterate all nodes with
+    * sc = 0) — used only to measure the leak.
     */
   private def seqPagerank(
-      edges: Seq[(Long, Long)],
+      edges: Seq[(Long, Long, Long)],
       iters: Int,
       dangling: Boolean,
   ): Map[Long, Long] = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
     val n = nodes.size.toLong
-    val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._3).sum }
     val base = (15L * Scale) / (100L * n)
     var r = nodes.map(_ -> Scale / n).toMap
     for (_ <- 1 to iters) {
       val sc = edges
         .groupBy(_._2)
-        .map { case (dst, es) => dst -> es.map(e => r(e._1) / deg(e._1)).sum }
+        .map { case (dst, es) => dst -> es.map(e => r(e._1) / deg(e._1) * e._3).sum }
       val dshare =
         if (dangling) nodes.filterNot(deg.contains).map(r).sum / n else 0L
       r = nodes.map(v => v -> (base + (85L * (sc.getOrElse(v, 0L) + dshare)) / 100L)).toMap
     }
     r
   }
+
+  private def unit(edges: Seq[(Long, Long)]): Seq[(Long, Long, Long)] =
+    edges.map { case (a, b) => (a, b, 1L) }
 
   private def ranksOf(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("r")).toMap
@@ -53,10 +58,10 @@ class PageRankSpec extends SparkSpec {
     // 1 → 2 → 3: node 3 is dangling (out-degree 0), node 1 has in-degree 0
     val edges = Seq((1L, 2L), (2L, 3L))
     val got = ranksOf(DedupOps.pagerank(edges.toDF("src", "dst"), iters = 5))
-    val want = seqPagerank(edges, iters = 5, dangling = true)
+    val want = seqPagerank(unit(edges), iters = 5, dangling = true)
     assert(got == want, s"distributed != sequential reference: $got vs $want")
     // leak evidence: without the dangling term the same graph loses mass
-    val leaked = seqPagerank(edges, iters = 5, dangling = false)
+    val leaked = seqPagerank(unit(edges), iters = 5, dangling = false)
     assert(
       leaked.values.sum < want.values.sum,
       s"dropping the dangling term must lose mass: ${leaked.values.sum} vs ${want.values.sum}",
@@ -76,22 +81,35 @@ class PageRankSpec extends SparkSpec {
     // hub 0 points at 1..6; all six leaves are dangling, hub in-degree 0
     val edges = (1L to 6L).map(i => (0L, i))
     val got = ranksOf(DedupOps.pagerank(edges.toDF("src", "dst"), iters = 4))
-    assert(got == seqPagerank(edges, iters = 4, dangling = true))
+    assert(got == seqPagerank(unit(edges), iters = 4, dangling = true))
   }
 
   test("symmetric graph: general pagerank reduces to the symmetric fast path") {
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (3L, 1L))
     val sym = pairs ++ pairs.map(_.swap)
-    val symDf = sym.toDF("da", "db")
-    val ewd = symDf.join(
-      symDf.groupBy("da").agg(count(lit(1)).as("deg")),
-      Seq("da"),
-    )
+    val ewd = DedupOps.symmetricEdges(unit(pairs).toDF("a", "b", "w"))
     val fast = ranksOf(DedupOps.pagerankSymmetric(ewd, iters = 5))
-    val general = ranksOf(DedupOps.pagerank(symDf.toDF("src", "dst"), iters = 5))
-    val want = seqPagerank(sym, iters = 5, dangling = true)
-    assert(fast == want, "symmetric fast path must match the sequential reference")
+    val general = ranksOf(DedupOps.pagerank(sym.toDF("src", "dst"), iters = 5))
+    val want = seqPagerank(unit(sym), iters = 5, dangling = true)
+    assert(fast == want, "symmetric engine with w = 1 must match the sequential reference")
     assert(general == want, "general form must reduce to the same ranks on a symmetric view")
+  }
+
+  test("weighted symmetric engine matches the weighted sequential reference") {
+    // a triangle with a pendant and a separate weighted pair: unequal
+    // weights move mass, so unit-weight ranks would differ
+    val pairs = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 5L), (1L, 4L, 7L), (5L, 6L, 2L))
+    val sym = pairs ++ pairs.map { case (a, b, w) => (b, a, w) }
+    val want = seqPagerank(sym, iters = 5, dangling = true)
+    val pure = ranksOf(DedupOps.pagerankSymmetric(DedupOps.symmetricEdges(pairs.toDF("a", "b", "w"))))
+    assert(pure == want, s"weighted engine diverged: $pure vs $want")
+    assert(want != seqPagerank(unit(sym.map(e => (e._1, e._2))), iters = 5, dangling = true))
+    // the pinned entry point (edge table + node count cached under the tag)
+    // serves the same ranks, on the first call and on a cache hit
+    val tag = "rank-edges:spec-weighted"
+    val edges = pairs.toDF("a", "b", "w")
+    assert(ranksOf(DedupOps.symmetricRank(spark, sfDir, tag)(edges)) == want)
+    assert(ranksOf(DedupOps.symmetricRank(spark, sfDir, tag)(edges)) == want)
   }
 
   test("driver fold (pagerankLocal) is bit-identical to the distributed engine") {
@@ -113,7 +131,7 @@ class PageRankSpec extends SparkSpec {
   test("empty graph short-circuits to an empty frame instead of dividing by zero") {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(DedupOps.pagerank(empty).count() == 0L)
-    val emptyEwd = Seq.empty[(Long, Long, Long)].toDF("da", "db", "deg")
+    val emptyEwd = DedupOps.symmetricEdges(Seq.empty[(Long, Long, Long)].toDF("a", "b", "w"))
     val out = DedupOps.pagerankSymmetric(emptyEwd)
     assert(out.count() == 0L)
     assert(out.columns.toSeq == Seq("node", "r"))
