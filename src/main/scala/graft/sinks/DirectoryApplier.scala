@@ -27,7 +27,7 @@ import org.apache.spark.sql.DataFrame
   * children; a distributed apply has no global order, so mkdir uses
   * create-parents semantics (`Files.createDirectories`) and every row's
   * own metadata write touches only that row's path — tasks never contend
-  * on the same file. Rows go through [[RetryingSink.foreachRowWithRetry]],
+  * on the same file. Rows go through [[RetryingSink.foreachRowWithRetryStateful]],
   * so a transient target error retries per-row without restarting the
   * task.
   */

@@ -37,7 +37,7 @@ import org.apache.spark.sql.DataFrame
   *    group that burned to a different gid mid-apply is still resolved
   *    correctly;
   *  - the auth-cache flush fires exactly once per apply, after every row
-  *    (identities.py:185-186): the default epilogue bumps a
+  *    (identities.py:185-186): the epilogue bumps a
   *    `.authcache_epoch` counter in the db so the flush itself is
   *    observable.
   *
@@ -120,7 +120,7 @@ object IdentityApplier {
       m.toSeq.sortBy(_._1).map { case (n, (u, p)) => s"$n:$u:$p" },
     )
 
-  /** Default epilogue: bump the auth-cache epoch counter (the observable
+  /** The epilogue: bump the auth-cache epoch counter (the observable
     * flush — identities.py:185-186 flushes exactly once after all rows).
     * The read-modify-write takes the same db lock as every other mutation
     * so concurrent applies cannot lose a flush record.
@@ -145,7 +145,6 @@ object IdentityApplier {
       dbDir: String,
       maxRetries: Int = 5,
       backoffMs: Long = 10L,
-      epilogue: Option[String => Unit] = None,
   ): ApplyStats = {
     val sc = plan.sparkSession.sparkContext
     val groups = sc.longAccumulator("graft.apply.groups")
@@ -241,7 +240,7 @@ object IdentityApplier {
     } { d => if (d.applied) proxies.add(1L) }
 
     // C6 epilogue: exactly once per apply, strictly after every phase
-    epilogue.getOrElse((d: String) => bumpAuthEpoch(Paths.get(d)))(dbStr)
+    bumpAuthEpoch(Paths.get(dbStr))
     ApplyStats(groups.value, users.value, members.value, proxies.value, burns.value)
   }
 

@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.DedupOps
 
@@ -34,12 +35,6 @@ object DocIngest {
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
 
-  /** Run the ingest loop over `docs` until no files remain
-    * (`Trigger.AvailableNow`). `onPairs` receives each batch's pair
-    * table (new_id, other_id, shared, j) and must consume it before
-    * returning (the standing state it reads from is rotated right
-    * after).
-    */
   /** A running ingest loop; `close()` releases the final standing
     * generation once the query terminated.
     */
@@ -65,19 +60,11 @@ object DocIngest {
       checkpointDir: String,
   )(onPairs: DataFrame => Unit): StreamingQuery = {
     val spark = docs.sparkSession
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val corpus = spark.read.parquet(sigDir)
-        onPairs(DedupOps.nearDupsAgainstGrams(corpus, batch, minJ))
-        DedupOps
-          .gramRowsOf(batch)
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(sigDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.drive(docs, checkpointDir) { (batch, _) =>
+      val corpus = spark.read.parquet(sigDir)
+      onPairs(DedupOps.nearDupsAgainstGrams(corpus, batch, minJ))
+      DedupOps.gramRowsOf(batch).write.mode(SaveMode.Append).parquet(sigDir)
+    }
   }
 
   /** Durable variant that ALSO maintains the connected-component label
@@ -121,40 +108,24 @@ object DocIngest {
       maxRounds: Int = 20,
   )(onPairs: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = docs.sparkSession
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val batchDir = s"$sigDir/batch_$batchId"
-        // corpus = seed part-files + every earlier batch dir; the CURRENT
-        // batch's dir is excluded so a replay never pairs the batch
-        // against its own previous half-write
-        val entries = Option(new java.io.File(sigDir).listFiles()).getOrElse(Array.empty)
-        val corpusPaths = entries.collect {
-          case f if f.isDirectory && f.getName != s"batch_$batchId" => f.toString
-          case f if f.isFile && f.getName.endsWith(".parquet") => f.toString
-        }
-        val corpus = spark.read.parquet(corpusPaths.toIndexedSeq: _*)
-        val pairs = DedupOps.nearDupsAgainstGrams(corpus, batch, minJ).localCheckpoint()
-        onPairs(pairs, batchId)
-        val prev = spark.read.parquet(labelsDir)
-        val updated = DedupOps.incrementalCcLabels(
-          prev,
-          batch.select(org.apache.spark.sql.functions.col("doc_id").as("node")),
-          pairs.select(
-            org.apache.spark.sql.functions.col("new_id").as("da"),
-            org.apache.spark.sql.functions.col("other_id").as("db"),
-          ),
-          maxRounds,
-        )
-        updated.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(labelsDir)
-        DedupOps
-          .gramRowsOf(batch)
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(batchDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.drive(docs, checkpointDir) { (batch, batchId) =>
+      val batchDir = s"$sigDir/batch_$batchId"
+      // corpus = seed part-files + every earlier batch dir; the CURRENT
+      // batch's dir is excluded so a replay never pairs the batch
+      // against its own previous half-write
+      val earlier = BatchDirs.listBatchDirs(spark, sigDir).filterNot(_.endsWith(s"/batch_$batchId"))
+      val corpus = spark.read.parquet(s"$sigDir/*.parquet" +: earlier: _*)
+      val pairs = DedupOps.nearDupsAgainstGrams(corpus, batch, minJ).localCheckpoint()
+      onPairs(pairs, batchId)
+      val updated = DedupOps.incrementalCcLabels(
+        spark.read.parquet(labelsDir),
+        batch.select(col("doc_id").as("node")),
+        pairs.select(col("new_id").as("da"), col("other_id").as("db")),
+        maxRounds,
+      )
+      updated.write.mode(SaveMode.Overwrite).parquet(labelsDir)
+      DedupOps.gramRowsOf(batch).write.mode(SaveMode.Overwrite).parquet(batchDir)
+    }
   }
 
   /** Seed the durable label table: every corpus doc labels itself, then
@@ -169,13 +140,12 @@ object DocIngest {
       labelsDir: String,
       maxRounds: Int = 20,
   ): Unit = {
-    import org.apache.spark.sql.functions.col
     val nodes = corpusDocs.select(col("doc_id").as("node"))
     val empty = nodes.limit(0).select(col("node"), col("node").as("lbl"))
     DedupOps
       .incrementalCcLabels(empty, nodes, corpusPairs, maxRounds)
       .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .mode(SaveMode.Overwrite)
       .parquet(labelsDir)
   }
 
@@ -195,14 +165,9 @@ object DocIngest {
       benchGrams: DataFrame,
       checkpointDir: String,
   )(onFlags: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        onFlags(
-          graft.operators.RetrievalOps.leakedCounts(DedupOps.gramRowsOf(batch), benchGrams))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.drive(docs, checkpointDir) { (batch, _) =>
+      onFlags(graft.operators.RetrievalOps.leakedCounts(DedupOps.gramRowsOf(batch), benchGrams))
+    }
 
   /** Streaming repeated-span screen — the ingest-time twin of
     * `repeated_spans`: each document micro-batch's positional grams are
@@ -219,13 +184,7 @@ object DocIngest {
       corpusGhs: DataFrame,
       checkpointDir: String,
   )(onSpans: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        onSpans(DedupOps.spansAgainst(corpusGhs, batch))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.drive(docs, checkpointDir)((batch, _) => onSpans(DedupOps.spansAgainst(corpusGhs, batch)))
 
   /** Streaming quality screen — the stateless model filter applied at
     * ingest: each micro-batch is scored by the fastText-style linear
@@ -241,16 +200,9 @@ object DocIngest {
       minQuality: Double,
       checkpointDir: String,
   )(onKept: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        onKept(
-          graft.operators.TextOps
-            .qualityScored(batch)
-            .filter(org.apache.spark.sql.functions.col("quality") >= minQuality))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.drive(docs, checkpointDir) { (batch, _) =>
+      onKept(graft.operators.TextOps.qualityScored(batch).filter(col("quality") >= minQuality))
+    }
 
   /** Hard-threshold rule screen at ingest — the streaming twin of the
     * declared `gopher_rules` query: each micro-batch is scored by the
@@ -264,25 +216,24 @@ object DocIngest {
       docs: DataFrame,
       checkpointDir: String,
   )(onKept: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        onKept(
-          graft.operators.CurationOps
-            .gopherRuled(batch)
-            .filter(org.apache.spark.sql.functions.col("keep")))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.drive(docs, checkpointDir) { (batch, _) =>
+      onKept(graft.operators.CurationOps.gopherRuled(batch).filter(col("keep")))
+    }
 
   /** Seed a durable signature table from a standing corpus (once). */
   def seedSignatures(corpus: DataFrame, sigDir: String): Unit =
     DedupOps
       .gramRowsOf(corpus)
       .write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .mode(SaveMode.Overwrite)
       .parquet(sigDir)
 
+  /** Run the ingest loop over `docs` until no files remain
+    * ([[BatchDirs.drive]]). `onPairs` receives each batch's pair
+    * table (new_id, other_id, shared, j) and must consume it before
+    * returning (the standing state it reads from is rotated right
+    * after).
+    */
   def start(
       docs: DataFrame,
       initialCorpusGrams: DataFrame,
@@ -292,18 +243,14 @@ object DocIngest {
     val initial = initialCorpusGrams.select("doc_id", "n", "gh").persist()
     initial.count()
     val standing = new AtomicReference[DataFrame](initial)
-    val query = docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val corpus = standing.get()
-        onPairs(DedupOps.nearDupsAgainstGrams(corpus, batch, minJ))
-        val appended = corpus.unionByName(DedupOps.gramRowsOf(batch)).persist()
-        appended.count()
-        corpus.unpersist()
-        standing.set(appended)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val query = BatchDirs.drive(docs, checkpointDir) { (batch, _) =>
+      val corpus = standing.get()
+      onPairs(DedupOps.nearDupsAgainstGrams(corpus, batch, minJ))
+      val appended = corpus.unionByName(DedupOps.gramRowsOf(batch)).persist()
+      appended.count()
+      corpus.unpersist()
+      standing.set(appended)
+    }
     Ingest(query, standing)
   }
 
@@ -313,14 +260,8 @@ object DocIngest {
     * family: per micro-batch, reduce the document slice to its (w, wc)
     * vocab partial (the SHARED [[graft.operators.BpeOps.vocabOf]] — the
     * same corpus-to-vocab reduction the batch `bpe_*`/`unigram_logprob`
-    * queries ride) and land it as an idempotent batch dir. Word counts
-    * over a disjoint document partition are purely ADDITIVE — the same
-    * algebra as the checksum store, the centroid partials, and the
-    * moment partials — so the batch dirs must be an exact partition of
-    * the stream: the identical bid-0 wipe enforces it (a fresh
-    * checkpoint lineage can only enter batch 0 before any later batch
-    * committed, so whatever is in the state dir then is a stale prior
-    * lineage).
+    * queries ride) and land it as a [[BatchDirs]] store. Word counts
+    * over a disjoint document partition are purely ADDITIVE.
     *
     * Unlike the centroid/moment twins, whose merged state is k·D driver
     * values, the vocab is VOCABULARY-CARDINALITY — so the merge
@@ -338,56 +279,21 @@ object DocIngest {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.BpeOps
-          .vocabOf(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(docs, stateDir, checkpointDir)(graft.operators.BpeOps.vocabOf)
 
   /** Continuous DSIR model refresh — the last additive model family
     * without a streaming twin (round-14 verdict item 6): the DSIR
     * target/raw per-bucket counts are plain hashed sums
     * ([[graft.operators.PipelineOps.dsirBucketCounts]]), so per-batch
-    * partials land as idempotent `batch_<bid>` dirs (overwrite keyed by
-    * batch id ⇒ crash-replay safe) and merge by groupBy-sum. The same
-    * bid-0 stale-lineage wipe as every additive store ([[
-    * startVocabPartials]]). State is ≤ DsirBuckets rows per batch dir —
-    * corpus-independent.
+    * partials land in a [[BatchDirs]] store and merge by groupBy-sum.
+    * State is ≤ DsirBuckets rows per batch dir — corpus-independent.
     */
   def startDsirPartials(
       docs: DataFrame,
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.PipelineOps
-          .dsirBucketCounts(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(docs, stateDir, checkpointDir)(graft.operators.PipelineOps.dsirBucketCounts)
 
   /** Serve the refreshed DSIR model (b, lam) from landed partials —
     * byte-identical to the batch model over the full stream because the
@@ -397,33 +303,21 @@ object DocIngest {
     * smoothing floor the batch derivation gives an empty corpus), so a
     * cold serving path reads a defined model, not an exception.
     */
-  def dsirModelFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    val merged =
-      if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.types.StructField("tc", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("rc", org.apache.spark.sql.types.LongType),
-          )),
-        )
-      else
-        spark.read
-          .parquet(s"$stateDir/batch_*")
-          .groupBy("b")
-          .agg(sum(col("tc")).as("tc"), sum(col("rc")).as("rc"))
-    graft.operators.PipelineOps.dsirLamFrom(spark, merged)
-  }
+  def dsirModelFromState(spark: SparkSession, stateDir: String): DataFrame =
+    graft.operators.PipelineOps.dsirLamFrom(
+      spark,
+      BatchDirs
+        .read(spark, stateDir, "b INT, tc BIGINT, rc BIGINT")
+        .groupBy("b")
+        .agg(sum(col("tc")).as("tc"), sum(col("rc")).as("rc")),
+    )
 
   /** Continuous source-reputation refresh — the domain-grain curation
     * monitor kept live as documents land: per-source (n_docs, sum_chars,
     * sum_uniq) are counts and exact ×10⁶-floored BIGINT sums
     * ([[graft.operators.CurationOps.sourcePartials]] — the SAME first
     * aggregation the declared `source_reputation` runs), so per-batch
-    * partials land as idempotent `batch_<bid>` dirs and merge by
-    * groupBy-sum. Same bid-0 stale-lineage wipe as every additive store.
+    * partials land in a [[BatchDirs]] store and merge by groupBy-sum.
     * State per batch dir is source-cardinality — corpus-independent.
     */
   def startSourcePartials(
@@ -431,23 +325,7 @@ object DocIngest {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.CurationOps
-          .sourcePartials(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(docs, stateDir, checkpointDir)(graft.operators.CurationOps.sourcePartials)
 
   /** Serve the refreshed source-reputation report from landed partials
     * — byte-identical to the declared `source_reputation` over the full
@@ -459,30 +337,19 @@ object DocIngest {
     * mean, which only exists after the merge). Zero committed batches
     * serve the empty report, not an exception.
     */
-  def sourceReputationFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    val merged =
-      if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("n_docs", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sum_chars", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sum_uniq", org.apache.spark.sql.types.LongType),
-          )),
-        )
-      else
-        spark.read
-          .parquet(s"$stateDir/batch_*")
-          .groupBy("source")
-          .agg(
-            sum(col("n_docs")).as("n_docs"),
-            sum(col("sum_chars")).as("sum_chars"),
-            sum(col("sum_uniq")).as("sum_uniq"),
-          )
-    graft.operators.CurationOps.reputationFrom(merged)
-  }
+  def sourceReputationFromState(spark: SparkSession, stateDir: String): DataFrame =
+    graft.operators.CurationOps.reputationFrom(
+      sourceStore(spark, stateDir)
+        .groupBy("source")
+        .agg(
+          sum(col("n_docs")).as("n_docs"),
+          sum(col("sum_chars")).as("sum_chars"),
+          sum(col("sum_uniq")).as("sum_uniq"),
+        ),
+    )
+
+  private def sourceStore(spark: SparkSession, stateDir: String): DataFrame =
+    BatchDirs.read(spark, stateDir, "source STRING, n_docs BIGINT, sum_chars BIGINT, sum_uniq BIGINT")
 
   /** Serve the corpus source-diversity profile from the SAME landed
     * reputation partials — the doc counts are the only input
@@ -491,53 +358,21 @@ object DocIngest {
     * declared query via the shared
     * [[graft.operators.CurationOps.sourceDiversityFrom]] tail).
     */
-  def sourceDiversityFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    val counts =
-      if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.LongType),
-          )),
-        )
-      else
-        spark.read
-          .parquet(s"$stateDir/batch_*")
-          .groupBy("source")
-          .agg(sum(col("n_docs")).as("c"))
-    graft.operators.CurationOps.sourceDiversityFrom(counts)
-  }
+  def sourceDiversityFromState(spark: SparkSession, stateDir: String): DataFrame =
+    graft.operators.CurationOps.sourceDiversityFrom(
+      sourceStore(spark, stateDir).groupBy("source").agg(sum(col("n_docs")).as("c")),
+    )
 
   /** Streaming store for the PSI drift grain: per micro-batch, the doc
     * slice reduces to (source, 64-char bin, count) — additive partials
-    * with the same foreachBatch/Overwrite idempotent-replay contract
-    * and bid-0 stale-lineage wipe as the reputation store. State per
-    * batch dir is sources × ~10 bins.
+    * in a [[BatchDirs]] store. State per batch dir is sources × ~10 bins.
     */
   def startPsiPartials(
       docs: DataFrame,
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.CurationOps
-          .psiBinCounts(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(docs, stateDir, checkpointDir)(graft.operators.CurationOps.psiBinCounts)
 
   /** Serve the `psi_drift` report from the live grain — byte-identical
     * to the declared batch query because the count merge is a plain
@@ -547,25 +382,13 @@ object DocIngest {
     * PSI would be wrong (the null distribution only exists after the
     * merge). Zero committed batches serve the empty report.
     */
-  def psiDriftFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    val merged =
-      if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("bin", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.LongType),
-          )),
-        )
-      else
-        spark.read
-          .parquet(s"$stateDir/batch_*")
-          .groupBy("source", "bin")
-          .agg(sum(col("c")).as("c"))
-    graft.operators.CurationOps.psiFrom(merged)
-  }
+  def psiDriftFromState(spark: SparkSession, stateDir: String): DataFrame =
+    graft.operators.CurationOps.psiFrom(
+      BatchDirs
+        .read(spark, stateDir, "source STRING, bin BIGINT, c BIGINT")
+        .groupBy("source", "bin")
+        .agg(sum(col("c")).as("c")),
+    )
 
   /** Merge the landed vocab partials into the refreshed (w, wc)
     * vocabulary — byte-identical to the one-shot corpus reduction
@@ -576,22 +399,6 @@ object DocIngest {
     * batches serve the empty vocabulary, not a path-not-found
     * exception.
     */
-  def refreshedVocab(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(
-          Seq(
-            org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("wc", org.apache.spark.sql.types.LongType),
-          ),
-        ),
-      )
-    else
-      spark.read
-        .parquet(s"$stateDir/batch_*")
-        .groupBy("w")
-        .agg(sum(col("wc")).as("wc"))
-  }
+  def refreshedVocab(spark: SparkSession, stateDir: String): DataFrame =
+    BatchDirs.read(spark, stateDir, "w STRING, wc BIGINT").groupBy("w").agg(sum(col("wc")).as("wc"))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Ivf
 
@@ -62,24 +62,20 @@ object EmbedIngest {
       checkpointDir: String,
   ): StreamingQuery = {
     val spark = embeds.sparkSession
-    embeds.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val e = batch.select(
-          col("vec_id"),
-          expr("transform(embedding, v -> CAST(v AS DOUBLE))").as("dvec"),
-        )
-        Ivf
-          .assign(spark, e, centroids) // schema-preserving: dvec rides through, no per-batch self-join
-          .select(lit(batchId).as("b"), col("cid"), col("vec_id"), col("dvec"))
-          .write
-          .option("partitionOverwriteMode", "dynamic")
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("b", "cid")
-          .parquet(layoutDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.drive(embeds, checkpointDir) { (batch, batchId) =>
+      val e = batch.select(
+        col("vec_id"),
+        expr("transform(embedding, v -> CAST(v AS DOUBLE))").as("dvec"),
+      )
+      Ivf
+        .assign(spark, e, centroids) // schema-preserving: dvec rides through, no per-batch self-join
+        .select(lit(batchId).as("b"), col("cid"), col("vec_id"), col("dvec"))
+        .write
+        .option("partitionOverwriteMode", "dynamic")
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("b", "cid")
+        .parquet(layoutDir)
+    }
   }
 
   // ---- continuous k-means centroid refresh --------------------------------
@@ -89,13 +85,8 @@ object EmbedIngest {
     * partials under the STANDING centroids (the SHARED
     * [[graft.operators.KMeansOps.centroidPartials]] — the same
     * assignment projection and the same `VecSumAggregator`) and land
-    * them as an idempotent batch dir. Σq and n are ADDITIVE — like the
-    * checksum store and unlike the distinct-merged grains — so the
-    * batch dirs must be an exact partition of the stream: the same
-    * bid-0 wipe as [[EventStream.startChecksumState]] enforces it (a
-    * fresh checkpoint lineage can only enter batch 0 before any later
-    * batch committed, so whatever is in the state dir then is a stale
-    * prior lineage).
+    * them as a [[BatchDirs]] store. Σq and n are ADDITIVE, so the
+    * store's exact partition of the stream is what keeps the merge exact.
     *
     * This is the production "drift refresh" shape: serving keeps the
     * standing centroids; the refresh loop accumulates one FULL Lloyd
@@ -109,23 +100,9 @@ object EmbedIngest {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    embeds.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.KMeansOps
-          .centroidPartials(graft.operators.KMeansOps.quantizeFrame(batch.toDF()), standing)
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(embeds, stateDir, checkpointDir) { batch =>
+      graft.operators.KMeansOps.centroidPartials(graft.operators.KMeansOps.quantizeFrame(batch), standing)
+    }
 
   /** Merge the landed partials into the refreshed centroids —
     * byte-identical to ONE batch Lloyd update over the full stream
@@ -138,20 +115,16 @@ object EmbedIngest {
       spark: SparkSession,
       stateDir: String,
       standing: Seq[Array[Long]],
-  ): Seq[Array[Long]] = {
-    // an empty stream commits zero batch dirs — the refresh is then the
-    // identity (no partials ⇒ every cluster keeps its standing centroid),
-    // not a path-not-found AnalysisException
-    if (listBatchDirs(spark, stateDir).isEmpty) return standing
+  ): Seq[Array[Long]] =
+    // a cold store has no partials ⇒ every cluster keeps its standing centroid
     graft.operators.KMeansOps.mergeCentroidPartials(
-      spark.read
-        .parquet(s"$stateDir/batch_*")
+      BatchDirs
+        .read(spark, stateDir, "cluster BIGINT, s ARRAY<BIGINT>, n BIGINT")
         .collect()
         .map(r => (r.getLong(0).toInt, r.getSeq[Long](1), r.getLong(2)))
         .toSeq,
       standing,
     )
-  }
 
   // ---- continuous covariance/PCA moment refresh ---------------------------
 
@@ -159,10 +132,8 @@ object EmbedIngest {
     * micro-batch, reduce the slice to its exact (Σq, Σqᵢqⱼ, n) moment
     * partials (the SHARED [[graft.operators.KMeansOps.momentPartials]] —
     * the same `CovMomentsAggregator` as the batch queries) and land the
-    * 1-row frame as an idempotent batch dir. The moments are ADDITIVE —
-    * the same algebra as the checksum store and the centroid partials —
-    * so the batch dirs must be an exact partition of the stream: the
-    * identical bid-0 wipe enforces it. Serving the refreshed principal
+    * 1-row frame as a [[BatchDirs]] store (the moments are ADDITIVE,
+    * like the centroid partials). Serving the refreshed principal
     * direction ([[refreshedPrincipal]]) is then pure driver arithmetic
     * over ≤ one ~17 KB row per batch — no corpus rescan, closing the
     * last un-twinned driver-value family (centroids, checksums, grains,
@@ -173,43 +144,24 @@ object EmbedIngest {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    embeds.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.KMeansOps
-          .momentPartials(graft.operators.KMeansOps.quantizeFrame(batch.toDF()))
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(embeds, stateDir, checkpointDir) { batch =>
+      graft.operators.KMeansOps.momentPartials(graft.operators.KMeansOps.quantizeFrame(batch))
+    }
 
   /** Merge the landed moment partials — byte-identical to the one-shot
     * corpus moment pass because addition is the only operation on
-    * either path. `None` when the stream committed zero batches (there
-    * is no "standing" moment to fall back on — the caller decides).
+    * either path. `None` when no partial has landed (there is no
+    * "standing" moment to fall back on — the caller decides).
     */
   def refreshedMoments(
       spark: SparkSession,
       stateDir: String,
   ): Option[(Seq[BigInt], Seq[BigInt], Long)] = {
-    if (listBatchDirs(spark, stateDir).isEmpty) return None
-    Some(
-      graft.operators.KMeansOps.mergeMomentPartials(
-        spark.read
-          .parquet(s"$stateDir/batch_*")
-          .collect()
-          .map(r => (r.getSeq[Long](0), r.getSeq[Long](1), r.getLong(2)))
-          .toSeq,
-      ),
-    )
+    val rows = BatchDirs.read(spark, stateDir, "s ARRAY<BIGINT>, p ARRAY<BIGINT>, n BIGINT").collect()
+    if (rows.isEmpty) None
+    else
+      Some(graft.operators.KMeansOps.mergeMomentPartials(
+        rows.map(r => (r.getSeq[Long](0), r.getSeq[Long](1), r.getLong(2))).toSeq))
   }
 
   /** The refreshed principal direction: merged streamed moments → the
@@ -222,18 +174,4 @@ object EmbedIngest {
     refreshedMoments(spark, stateDir).map { case (s, p, n) =>
       graft.operators.KMeansOps.principalFromMoments(s, p, n)
     }
-
-  /** The committed `batch_*` dirs under a partial-state root (empty when
-    * the stream never committed — both refresh readers guard on this).
-    */
-  private[streaming] def listBatchDirs(spark: SparkSession, stateDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else
-      fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_"))
-        .map(_.getPath.toString)
-        .toSeq
-  }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.10): the streaming twin of
@@ -175,13 +175,11 @@ object EventStream {
 
   /** Durable incremental rollup — the streaming side of the
     * `agg_state_merge` algebra: each micro-batch aggregates to a COMPACT
-    * per-user state (count, DECIMAL sum, min/max µs) and lands it in its
-    * own `batch_<id>` directory with Overwrite, so a crash-replayed
-    * batch REWRITES identical content instead of double-counting
-    * (foreachBatch is at-least-once; Overwrite-per-batch-dir is the
-    * idempotence move `startDurableLabeled` uses for grams). The
-    * merged view is [[mergedState]] — one associative merge over all
-    * batch states, never a rescan of raw events.
+    * per-user state (count, DECIMAL sum, min/max µs) and lands it in a
+    * [[BatchDirs]] store, so neither a crash-replayed batch nor a prior
+    * lineage's dirs are double-counted. The merged view is
+    * [[mergedState]] — one associative merge over all batch states,
+    * never a rescan of raw events.
     *
     * At 100 TB this IS the daily-rollup architecture: history is
     * O(batches × keys) states on cheap storage, per-batch cost is one
@@ -195,37 +193,24 @@ object EventStream {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        batch
-          .select(
-            col("user_id"),
-            col("value").cast("decimal(18,2)").as("v"),
-            unix_micros(col("ts")).as("tus"),
-          )
-          .groupBy("user_id")
-          .agg(
-            count(lit(1)).as("pn"),
-            sum("v").as("pv"),
-            min("tus").as("pmin"),
-            max("tus").as("pmax"),
-          )
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir) { batch =>
+      batch
+        .select(
+          col("user_id"),
+          col("value").cast("decimal(18,2)").as("v"),
+          unix_micros(col("ts")).as("tus"),
+        )
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("pn"), sum("v").as("pv"), min("tus").as("pmin"), max("tus").as("pmax"))
+    }
 
   /** Collapse every persisted batch state with the same associative ops
     * — the read side of [[startStateMerge]], and the compaction step
     * (write the result back as one batch dir).
     */
   def mergedState(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read
-      .parquet(s"$stateDir/batch_*")
+    BatchDirs
+      .read(spark, stateDir, "user_id BIGINT, pn BIGINT, pv DECIMAL(28,2), pmin BIGINT, pmax BIGINT")
       .groupBy("user_id")
       .agg(
         sum("pn").as("n"),
@@ -243,10 +228,8 @@ object EventStream {
     * distinct-per-window to the serving query over that small grain.
     *
     * Each micro-batch reduces its slice to (day, user) and lands it in
-    * its own `batch_<id>` dir with Overwrite — the same
-    * idempotent-replay move as [[startStateMerge]] (foreachBatch is
-    * at-least-once; a crash-replayed batch rewrites identical content).
-    * Cross-batch duplicates are expected and harmless: the serve
+    * a [[BatchDirs]] store. Cross-batch duplicates are expected and
+    * harmless: the serve
     * re-distincts, and compaction (read all dirs, distinct, write one
     * dir) is the same union algebra written back.
     *
@@ -259,18 +242,7 @@ object EventStream {
       grainDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        graft.operators.TemporalOps
-          .toDayUserGrain(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$grainDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, grainDir, checkpointDir)(graft.operators.TemporalOps.toDayUserGrain)
 
   /** Serve the trailing-7-day active-user counts from the persisted
     * grain — byte-identical to the declared batch query because the
@@ -278,9 +250,7 @@ object EventStream {
     * ([[graft.operators.TemporalOps.rollingFromDayUser]]).
     */
   def rollingActiveFromGrain(spark: SparkSession, grainDir: String): DataFrame =
-    graft.operators.TemporalOps.rollingFromDayUser(
-      spark.read.parquet(s"$grainDir/batch_*"),
-    )
+    graft.operators.TemporalOps.rollingFromDayUser(dayUserGrain(spark, grainDir))
 
   /** Serve the cumulative-unique-users growth curve from the SAME
     * persisted grain — byte-identical to the declared batch query
@@ -292,14 +262,14 @@ object EventStream {
     * store serves, closing the sliding-distinct family's twin gap.
     */
   def cumulativeFromGrain(spark: SparkSession, grainDir: String): DataFrame =
-    graft.operators.TemporalOps.cumulativeFromDayUser(
-      spark.read.parquet(s"$grainDir/batch_*"),
-    )
+    graft.operators.TemporalOps.cumulativeFromDayUser(dayUserGrain(spark, grainDir))
+
+  private def dayUserGrain(spark: SparkSession, grainDir: String): DataFrame =
+    BatchDirs.read(spark, grainDir, "day INT, user_id BIGINT")
 
   /** Streaming store for the APPROXIMATE tier: per micro-batch, reduce
-    * the slice to the (day, register) sketch grain and land it as its
-    * own idempotent batch dir — the same foreachBatch/Overwrite replay
-    * contract as [[startDayUserGrain]], but with state bounded by
+    * the slice to the (day, register) sketch grain and land it in a
+    * [[BatchDirs]] store like [[startDayUserGrain]], but with state bounded by
     * days × m (≈ days × 8 KB) instead of days × active users. This is
     * where the sketch tier's mergeability actually PAYS in streaming:
     * register-set union is the merge algebra, so overlapping slices,
@@ -311,18 +281,7 @@ object EventStream {
       grainDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        graft.operators.TemporalOps
-          .toDayBktGrain(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$grainDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, grainDir, checkpointDir)(graft.operators.TemporalOps.toDayBktGrain)
 
   /** Serve both sketch dashboards from the persisted grain pair —
     * byte-identical to the declared batch queries because the
@@ -336,8 +295,8 @@ object EventStream {
       userGrainDir: String,
   ): DataFrame =
     graft.operators.TemporalOps.rollingSketchFrom(
-      spark.read.parquet(s"$bktGrainDir/batch_*"),
-      spark.read.parquet(s"$userGrainDir/batch_*"),
+      dayBktGrain(spark, bktGrainDir),
+      dayUserGrain(spark, userGrainDir),
     )
 
   def cumulativeSketchFromGrains(
@@ -346,14 +305,17 @@ object EventStream {
       userGrainDir: String,
   ): DataFrame =
     graft.operators.TemporalOps.cumulativeSketchFrom(
-      spark.read.parquet(s"$bktGrainDir/batch_*"),
-      spark.read.parquet(s"$userGrainDir/batch_*"),
+      dayBktGrain(spark, bktGrainDir),
+      dayUserGrain(spark, userGrainDir),
     )
+
+  private def dayBktGrain(spark: SparkSession, grainDir: String): DataFrame =
+    BatchDirs.read(spark, grainDir, "day INT, bkt BIGINT")
 
   /** Continuous first-touch attribution: per micro-batch, reduce the
     * slice to the per-user (argmin event, purchased) grain — the SHARED
-    * [[graft.operators.TemporalOps.toFirstTouchGrain]] — and land it as
-    * an idempotent batch dir. Both grain components merge (struct-min /
+    * [[graft.operators.TemporalOps.toFirstTouchGrain]] — and land it in
+    * a [[BatchDirs]] store. Both grain components merge (struct-min /
     * max-OR), so overlapping slices, replays, and compaction are
     * correct by construction: a user's true first event can arrive in
     * ANY batch and the serve's re-merge still finds it — no ordering
@@ -364,18 +326,7 @@ object EventStream {
       grainDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        graft.operators.TemporalOps
-          .toFirstTouchGrain(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$grainDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, grainDir, checkpointDir)(graft.operators.TemporalOps.toFirstTouchGrain)
 
   /** Serve the attribution dashboard from the persisted grain —
     * byte-identical to the declared batch query because the post-grain
@@ -384,32 +335,25 @@ object EventStream {
     */
   def attributionFromGrain(spark: SparkSession, grainDir: String): DataFrame =
     graft.operators.TemporalOps.attributionFromGrain(
-      spark.read.parquet(s"$grainDir/batch_*"),
+      BatchDirs.read(
+        spark,
+        grainDir,
+        "user_id BIGINT, first_us BIGINT, first_id BIGINT, first_type STRING, purchased BIGINT",
+      ),
     )
 
   /** Continuous LAST-touch attribution — the argmax sibling of
     * [[startFirstTouchGrain]] (struct-max over non-purchase events +
     * max-OR purchased flag, both idempotent commutative merges):
     * overlapping slices, replays, and compaction are correct by
-    * construction, no wipe discipline needed.
+    * construction.
     */
   def startLastTouchGrain(
       events: DataFrame,
       grainDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        graft.operators.TemporalOps
-          .toLastTouchGrain(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$grainDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, grainDir, checkpointDir)(graft.operators.TemporalOps.toLastTouchGrain)
 
   /** Serve last-touch attribution from the persisted grain — the serve
     * IS the batch query's post-grain half
@@ -417,13 +361,17 @@ object EventStream {
     */
   def lastTouchFromGrain(spark: SparkSession, grainDir: String): DataFrame =
     graft.operators.TemporalOps.lastTouchFromGrain(
-      spark.read.parquet(s"$grainDir/batch_*"),
+      BatchDirs.read(
+        spark,
+        grainDir,
+        "user_id BIGINT, last_us BIGINT, last_id BIGINT, last_type STRING, purchased BIGINT",
+      ),
     )
 
   /** Continuous anti-entropy: per micro-batch, reduce the slice to its
     * per-feed partial digests (count, Σ rowhash, XOR rowhash — the
     * SHARED [[graft.operators.ScalePatterns.eventsChecksumParts]]
-    * grain) and land them as an idempotent batch dir. Every component
+    * grain) and land them in a [[BatchDirs]] store. Every component
     * is associative+commutative, so the serve is a plain merge over
     * whatever slices exist — replays overwrite, compaction is the
     * merge written back, and a source↔replica comparison is two tiny
@@ -435,37 +383,14 @@ object EventStream {
     * union absorbs overlap), count/Σ/XOR partials are ADDITIVE: the
     * batch dirs must be an exact partition of the stream, or the
     * digest double-counts — the precise corruption an anti-entropy
-    * tool exists to detect. That precondition is enforced, not
-    * documented: a checkpoint lineage starts at batch id 0, and batch
-    * 0 can only (re)run while no later batch has committed, so on
-    * `bid == 0` any existing contents of `stateDir` are by
-    * construction stale partials from a DIFFERENT lineage (a prior
-    * run with its own batching) and are wiped before the first write.
-    * Resuming the same checkpoint never re-enters bid 0 once batch 1
-    * committed, so live state is never dropped.
+    * tool exists to detect. The store's batch-0 wipe guarantees it.
     */
   def startChecksumState(
       events: DataFrame,
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.ScalePatterns
-          .eventsChecksumParts(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir)(graft.operators.ScalePatterns.eventsChecksumParts)
 
   /** Serve the merged digests — byte-identical to the declared
     * `events_checksum` because the merge IS the batch query's
@@ -473,18 +398,16 @@ object EventStream {
     */
   def checksumFromState(spark: SparkSession, stateDir: String): DataFrame =
     graft.operators.ScalePatterns.mergeChecksumParts(
-      spark.read.parquet(s"$stateDir/batch_*"),
+      BatchDirs.read(spark, stateDir, "event_type STRING, pn BIGINT, psum DECIMAL(38,0), pxor BIGINT"),
     )
 
   /** Continuous privacy auditing — the QI × acting-user grain behind
     * `k_anonymity` / `l_diversity` kept live as events land: per
     * micro-batch the slice reduces to
     * ([[graft.operators.CurationOps.qiUserGrain]]) rows whose count
-    * column is ADDITIVE, so the store is the additive batch-dir
-    * pattern (idempotent per-bid overwrite + the bid-0 stale-lineage
-    * wipe — counts, unlike the day-user dedup grain, are NOT
-    * replay-safe without it). Class sizes merge by sum; distinct
-    * sensitive values dedup across grain rows at serve time (set
+    * column is ADDITIVE, landed in a [[BatchDirs]] store. Class sizes
+    * merge by sum; distinct sensitive values dedup across grain rows at
+    * serve time (set
     * semantics — union of slices is exactly the corpus dedup). State
     * per batch dir is QI-class × active-user cardinality of the SLICE,
     * not the corpus.
@@ -494,23 +417,7 @@ object EventStream {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.CurationOps
-          .qiUserGrain(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir)(graft.operators.CurationOps.qiUserGrain)
 
   /** The merged QI class table from landed grain partials — the shared
     * first step of both served audits: per-(class, user) counts sum
@@ -519,34 +426,19 @@ object EventStream {
     * queries run. Zero committed batches serve the empty class table
     * (both audits then emit zero rows — a defined cold read).
     */
-  private def qiGrainFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("day_no", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("vb", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.LongType),
-        )),
-      )
-    else
-      spark.read
-        .parquet(s"$stateDir/batch_*")
-        .groupBy("event_type", "day_no", "vb", "user_id")
-        .agg(sum(col("c")).as("c"))
-  }
+  private def qiGrainFromState(spark: SparkSession, stateDir: String): DataFrame =
+    BatchDirs
+      .read(spark, stateDir, "event_type STRING, day_no BIGINT, vb BIGINT, user_id BIGINT, c BIGINT")
+      .groupBy("event_type", "day_no", "vb", "user_id")
+      .agg(sum(col("c")).as("c"))
 
   private def qiClassesFromState(spark: SparkSession, stateDir: String): DataFrame =
     graft.operators.CurationOps.qiClasses(qiGrainFromState(spark, stateDir))
 
   /** Continuous traffic monitoring — the (event_type, epoch-day) count
     * grain behind `traffic_anomaly` and `dow_seasonality` kept live:
-    * counts are ADDITIVE, so the store follows the additive batch-dir
-    * pattern (per-bid idempotent overwrite + bid-0 stale-lineage wipe)
-    * and both served reports ride the SHARED
+    * counts are ADDITIVE, landed in a [[BatchDirs]] store, and both
+    * served reports ride the SHARED
     * [[graft.operators.TemporalOps.anomalyFrom]] /
     * [[graft.operators.TemporalOps.dowEnvelopeFrom]] derivations over
     * the merged grain — the on-call queue updates per micro-batch with
@@ -557,41 +449,13 @@ object EventStream {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.TemporalOps
-          .typeDayCounts(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir)(graft.operators.TemporalOps.typeDayCounts)
 
-  private def typeDayFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("day_no", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.LongType),
-        )),
-      )
-    else
-      spark.read
-        .parquet(s"$stateDir/batch_*")
-        .groupBy("event_type", "day_no")
-        .agg(sum(col("c")).as("c"))
-  }
+  private def typeDayFromState(spark: SparkSession, stateDir: String): DataFrame =
+    BatchDirs
+      .read(spark, stateDir, "event_type STRING, day_no BIGINT, c BIGINT")
+      .groupBy("event_type", "day_no")
+      .agg(sum(col("c")).as("c"))
 
   /** Serve the `traffic_anomaly` queue from the live grain. */
   def trafficAnomalyFromState(spark: SparkSession, stateDir: String): DataFrame =
@@ -683,8 +547,7 @@ object EventStream {
     *
     * Like the checksum partials, gap moments are NOT re-distincted at
     * serve time: the batch dirs must be an exact partition of the
-    * stream, so the same bid-0 stale-lineage wipe applies (see
-    * [[startChecksumState]] for why it is safe). The grain additionally
+    * stream, which the [[BatchDirs]] store guarantees. The grain also
     * needs slices TIME-CONTIGUOUS per user (event-time-ordered arrival
     * — what a watermarked stream delivers): an interleaved slicing's
     * within-slice gaps are not gaps of the full series and no boundary
@@ -697,42 +560,15 @@ object EventStream {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.TemporalOps
-          .gapGrainParts(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir)(graft.operators.TemporalOps.gapGrainParts)
 
-  private def gapPartsFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("n_events", LongType),
-          StructField("first_us", LongType),
-          StructField("first_eid", LongType),
-          StructField("last_us", LongType),
-          StructField("n_gaps", LongType),
-          StructField("sg", LongType),
-          StructField("sgg", DataTypes.createDecimalType(38, 0)),
-        )),
-      )
-    else spark.read.parquet(s"$stateDir/batch_*")
-  }
+  private def gapPartsFromState(spark: SparkSession, stateDir: String): DataFrame =
+    BatchDirs.read(
+      spark,
+      stateDir,
+      "user_id BIGINT, n_events BIGINT, first_us BIGINT, first_eid BIGINT, last_us BIGINT, " +
+        "n_gaps BIGINT, sg BIGINT, sgg DECIMAL(38,0)",
+    )
 
   /** Serve the `gap_burstiness` band histogram from the live grain —
     * boundary-gap-corrected merge + the shared statistic tail.
@@ -749,56 +585,31 @@ object EventStream {
     * type per user). A per-user time cut severs EXACTLY one transition
     * per straddling user, which the merge re-derives from consecutive
     * slices' boundary rows — the gap grain's precondition and
-    * correction, at the type-pair grain. Same foreachBatch/Overwrite
-    * idempotent-replay contract and bid-0 stale-lineage wipe as the
-    * other grain stores.
+    * correction, at the type-pair grain. Each [[BatchDirs]] batch dir
+    * holds both frames, as `cnt/` and `bnd/`.
     */
   def startTransitionGrain(
       events: DataFrame,
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.TemporalOps
-          .transitionCountsFrom(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid/cnt")
-        graft.operators.TemporalOps
-          .transitionBoundaryGrain(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid/bnd")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.storeSubdirs(events, stateDir, checkpointDir) { batch =>
+      Seq(
+        "/cnt" -> graft.operators.TemporalOps.transitionCountsFrom(batch),
+        "/bnd" -> graft.operators.TemporalOps.transitionBoundaryGrain(batch),
+      )
+    }
 
-  private def transitionCountsFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty) {
-      val cnt = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(
-          StructField("prev", StringType),
-          StructField("next", StringType),
-          StructField("n", LongType),
-        )),
-      )
-      cnt
-    } else
-      graft.operators.TemporalOps.mergeTransitionGrain(
-        spark.read.parquet(s"$stateDir/batch_*/cnt"),
-        spark.read.parquet(s"$stateDir/batch_*/bnd"),
-      )
-  }
+  private def transitionCountsFromState(spark: SparkSession, stateDir: String): DataFrame =
+    graft.operators.TemporalOps.mergeTransitionGrain(
+      BatchDirs.read(spark, stateDir, "prev STRING, next STRING, n BIGINT", "/cnt"),
+      BatchDirs.read(
+        spark,
+        stateDir,
+        "user_id BIGINT, first_us BIGINT, first_eid BIGINT, first_type STRING, last_us BIGINT, last_type STRING",
+        "/bnd",
+      ),
+    )
 
   /** Serve the `event_transitions` share matrix from the live grain. */
   def eventTransitionsFromState(spark: SparkSession, stateDir: String): DataFrame =
@@ -813,33 +624,15 @@ object EventStream {
     * first purchase day) — BOTH conditional MINs, so overlapping or
     * arbitrarily interleaved slices merge exactly (min of slice minima;
     * no boundary correction, no contiguity requirement — unlike the gap
-    * grain, id-parity splits are fully associative here). Same
-    * foreachBatch/Overwrite idempotent-replay contract and bid-0
-    * stale-lineage wipe as the other grain stores; state per batch dir
-    * is user-cardinality.
+    * grain, id-parity splits are fully associative here). State per
+    * [[BatchDirs]] batch dir is user-cardinality.
     */
   def startKmGrain(
       events: DataFrame,
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.TemporalOps
-          .kmUserGrain(batch.toDF())
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir)(graft.operators.TemporalOps.kmUserGrain)
 
   /** Streaming store for the SESSION grain — the round-16 verdict's
     * session-family serve: per micro-batch, the slice reduces to its
@@ -849,53 +642,25 @@ object EventStream {
     * from per-user TIME-CONTIGUOUS slices recombine exactly: a cut
     * severs only the boundary gap, which the fragment-grain merge
     * re-evaluates (the gap grain's precondition and correction, one
-    * grain up). Same foreachBatch/Overwrite idempotent-replay contract
-    * and bid-0 stale-lineage wipe as the other grain stores.
+    * grain up), landed in a [[BatchDirs]] store.
     */
   def startSessionGrain(
       events: DataFrame,
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.TemporalOps
-          .sessionTableFrom(batch.toDF())
-          .select("user_id", "n_events", "start_us", "end_us")
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir) { batch =>
+      graft.operators.TemporalOps.sessionTableFrom(batch).select("user_id", "n_events", "start_us", "end_us")
+    }
 
   /** The merged full-stream session table off the live fragment store —
     * (user_id, sess, n_events, start_us, end_us, duration_us), exactly
     * the batch `sessionize` frame.
     */
-  def sessionsFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val frags =
-      if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row],
-          StructType(Seq(
-            StructField("user_id", LongType),
-            StructField("n_events", LongType),
-            StructField("start_us", LongType),
-            StructField("end_us", LongType),
-          )),
-        )
-      else spark.read.parquet(s"$stateDir/batch_*")
-    graft.operators.TemporalOps.mergeSessionFragments(frags)
-  }
+  def sessionsFromState(spark: SparkSession, stateDir: String): DataFrame =
+    graft.operators.TemporalOps.mergeSessionFragments(
+      BatchDirs.read(spark, stateDir, "user_id BIGINT, n_events BIGINT, start_us BIGINT, end_us BIGINT"),
+    )
 
   /** Serve `session_stats` from the live session grain — identical to
     * the declared batch query because the fragment merge reproduces the
@@ -911,26 +676,11 @@ object EventStream {
     * pipeline IS the batch query's
     * ([[graft.operators.TemporalOps.kaplanMeierFrom]]).
     */
-  private def kmGrainFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("fd", LongType),
-          StructField("pd", LongType),
-        )),
-      )
-    else
-      spark.read
-        .parquet(s"$stateDir/batch_*")
-        .groupBy("user_id")
-        .agg(
-          org.apache.spark.sql.functions.min("fd").as("fd"),
-          org.apache.spark.sql.functions.min("pd").as("pd"),
-        )
-  }
+  private def kmGrainFromState(spark: SparkSession, stateDir: String): DataFrame =
+    BatchDirs
+      .read(spark, stateDir, "user_id BIGINT, fd BIGINT, pd BIGINT")
+      .groupBy("user_id")
+      .agg(min("fd").as("fd"), min("pd").as("pd"))
 
   def kaplanMeierFromState(spark: SparkSession, stateDir: String): DataFrame =
     graft.operators.TemporalOps.kaplanMeierFrom(kmGrainFromState(spark, stateDir))
@@ -966,14 +716,11 @@ object EventStream {
     * `histogram_quantile` sketch: per micro-batch, the
     * (event_type, value) slice reduces to fixed-extent bin partials (the
     * SHARED [[graft.operators.RelationalOps.histogramParts]] grain) and
-    * lands as an idempotent batch dir. The extent is PINNED by the
+    * lands in a [[BatchDirs]] store. The extent is PINNED by the
     * caller — production monitoring fixes its bucket layout up front
     * rather than re-deriving it per window — which is exactly what makes
-    * the bin counts additive and the store a plain merge. Additive
-    * partials need the checksum store's exact-partition discipline, so
-    * the same bid-0 wipe applies (see [[startChecksumState]] for why it
-    * is safe). State is (#types × bins) counters per batch dir —
-    * corpus-independent.
+    * the bin counts additive and the store a plain merge. State is
+    * (#types × bins) counters per batch dir — corpus-independent.
     */
   def startHistogramParts(
       events: DataFrame,
@@ -982,26 +729,12 @@ object EventStream {
       stateDir: String,
       checkpointDir: String,
   ): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        if (bid == 0L) {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) { fs.delete(p, true); () }
-        }
-        graft.operators.RelationalOps
-          .histogramParts(
-            batch.toDF().select(col("event_type").as("pri"), col("value").as("x")),
-            batch.sparkSession.range(1).select(lit(lo).as("lo"), lit(hi).as("hi")),
-          )
-          .write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$stateDir/batch_$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchDirs.store(events, stateDir, checkpointDir) { batch =>
+      graft.operators.RelationalOps.histogramParts(
+        batch.select(col("event_type").as("pri"), col("value").as("x")),
+        batch.sparkSession.range(1).select(lit(lo).as("lo"), lit(hi).as("hi")),
+      )
+    }
 
   /** Serve p50/p90 per event type from the landed bin partials —
     * byte-identical to the batch walk over the same extent because the
@@ -1011,21 +744,11 @@ object EventStream {
     * exception.
     */
   def quantilesFromState(spark: SparkSession, stateDir: String): DataFrame =
-    if (EmbedIngest.listBatchDirs(spark, stateDir).isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(
-          StructField("pri", StringType),
-          StructField("ql", StringType),
-          StructField("est", DoubleType),
-        )),
-      )
-    else
-      graft.operators.RelationalOps.quantilesFromHistogram(
-        graft.operators.RelationalOps.mergeHistogramParts(
-          spark.read.parquet(s"$stateDir/batch_*"),
-        ),
-      )
+    graft.operators.RelationalOps.quantilesFromHistogram(
+      graft.operators.RelationalOps.mergeHistogramParts(
+        BatchDirs.read(spark, stateDir, "pri STRING, bin INT, lo DOUBLE, hi DOUBLE, cnt BIGINT"),
+      ),
+    )
 
   // ---- custom state: per-user sessionization ------------------------------
 

@@ -2241,4 +2241,106 @@ class StreamingSpec extends SparkSpec {
     assert(none.columns.toSeq == Seq("t", "n_risk", "n_events", "surv_e6"))
     assert(none.count() == 0)
   }
+
+  test("a fresh rollup lineage wipes stale partials instead of double-counting them") {
+    import org.apache.spark.sql.functions._
+    // the rollup's (count, sum, min, max) partials hold the same additive
+    // counts as the checksum store: a stale high-numbered batch dir from a
+    // prior lineage must not survive into a fresh run's merged view
+    val streamDir = Files.createTempDirectory("rollup-stale-stream").toString
+    val ev = Tables.events(spark, sfDir)
+    ev.coalesce(1).write.mode("append").parquet(streamDir)
+    val stateDir = Files.createTempDirectory("rollup-stale-state").toString
+    def partials(df: org.apache.spark.sql.DataFrame) =
+      df.select(
+          col("user_id"),
+          col("value").cast("decimal(18,2)").as("v"),
+          unix_micros(col("ts")).as("tus"),
+        )
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("pn"), sum("v").as("pv"), min("tus").as("pmin"), max("tus").as("pmax"))
+    partials(ev.limit(100)).write.parquet(s"$stateDir/batch_7") // a prior lineage's slice
+    val stream = spark.readStream
+      .schema(EventStream.rawSchema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(streamDir)
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val q = EventStream.startStateMerge(
+      stream, stateDir, Files.createTempDirectory("ck-rollup-stale").toString)
+    q.awaitTermination(120000)
+    assert(!q.isActive)
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("user_id"), col("n"), col("total").cast("double"), col("first_us"), col("last_us"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
+        .sortBy(_._1)
+        .toSeq
+    val direct = canon(
+      partials(ev).select(
+        col("user_id"),
+        col("pn").as("n"),
+        col("pv").as("total"),
+        col("pmin").as("first_us"),
+        col("pmax").as("last_us"),
+      ),
+    )
+    val served = canon(EventStream.mergedState(spark, stateDir))
+    assert(direct.nonEmpty)
+    assert(served.map(_._2).sum == ev.count(), "every event is counted exactly once")
+    assert(served == direct,
+      "stale partials from a prior lineage must not survive into a fresh run's merged state")
+  }
+
+  test("every batch-dir reader serves a never-created or empty store without throwing") {
+    val root = Files.createTempDirectory("cold-stores").toString
+    val empty = Files.createTempDirectory("cold-empty").toString
+    val standing = Seq(Array.fill(64)(1000000L), Array.fill(64)(2000000L))
+    val readers: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      "mergedState" -> (EventStream.mergedState(spark, _)),
+      "rollingActiveFromGrain" -> (EventStream.rollingActiveFromGrain(spark, _)),
+      "cumulativeFromGrain" -> (EventStream.cumulativeFromGrain(spark, _)),
+      "rollingSketchFromGrains" -> (d => EventStream.rollingSketchFromGrains(spark, d, d)),
+      "cumulativeSketchFromGrains" -> (d => EventStream.cumulativeSketchFromGrains(spark, d, d)),
+      "attributionFromGrain" -> (EventStream.attributionFromGrain(spark, _)),
+      "lastTouchFromGrain" -> (EventStream.lastTouchFromGrain(spark, _)),
+      "checksumFromState" -> (EventStream.checksumFromState(spark, _)),
+      "kAnonymityFromState" -> (EventStream.kAnonymityFromState(spark, _)),
+      "lDiversityFromState" -> (EventStream.lDiversityFromState(spark, _)),
+      "tClosenessFromState" -> (EventStream.tClosenessFromState(spark, _)),
+      "trafficAnomalyFromState" -> (EventStream.trafficAnomalyFromState(spark, _)),
+      "dowSeasonalityFromState" -> (EventStream.dowSeasonalityFromState(spark, _)),
+      "cusumChangepointFromState" -> (EventStream.cusumChangepointFromState(spark, _)),
+      "expSmoothFromState" -> (EventStream.expSmoothFromState(spark, _)),
+      "forecastBaselinesFromState" -> (EventStream.forecastBaselinesFromState(spark, _)),
+      "maseSesFromState" -> (EventStream.maseSesFromState(spark, _)),
+      "holtFromState" -> (EventStream.holtFromState(spark, _)),
+      "seasonalForecastFromState" -> (EventStream.seasonalForecastFromState(spark, _)),
+      "mannKendallFromState" -> (EventStream.mannKendallFromState(spark, _)),
+      "theilSenFromState" -> (EventStream.theilSenFromState(spark, _)),
+      "acfLag7FromState" -> (EventStream.acfLag7FromState(spark, _)),
+      "pettittFromState" -> (EventStream.pettittFromState(spark, _)),
+      "burstinessFromState" -> (EventStream.burstinessFromState(spark, _)),
+      "eventTransitionsFromState" -> (EventStream.eventTransitionsFromState(spark, _)),
+      "transitionEntropyFromState" -> (EventStream.transitionEntropyFromState(spark, _)),
+      "sessionsFromState" -> (EventStream.sessionsFromState(spark, _)),
+      "sessionStatsFromState" -> (EventStream.sessionStatsFromState(spark, _)),
+      "kaplanMeierFromState" -> (EventStream.kaplanMeierFromState(spark, _)),
+      "nelsonAalenFromState" -> (EventStream.nelsonAalenFromState(spark, _)),
+      "quantilesFromState" -> (EventStream.quantilesFromState(spark, _)),
+      "dsirModelFromState" -> (DocIngest.dsirModelFromState(spark, _)),
+      "sourceReputationFromState" -> (DocIngest.sourceReputationFromState(spark, _)),
+      "sourceDiversityFromState" -> (DocIngest.sourceDiversityFromState(spark, _)),
+      "psiDriftFromState" -> (DocIngest.psiDriftFromState(spark, _)),
+      "refreshedVocab" -> (DocIngest.refreshedVocab(spark, _)),
+    )
+    for (dir <- Seq(s"$root/never", empty)) {
+      readers.foreach { case (name, read) =>
+        val failure = scala.util.Try(read(dir).collect()).failed.toOption
+        assert(failure.isEmpty, s"$name on the cold store $dir threw ${failure.getOrElse("")}")
+      }
+      assert(EmbedIngest.refreshedCentroids(spark, dir, standing).map(_.toSeq) == standing.map(_.toSeq))
+      assert(EmbedIngest.refreshedMoments(spark, dir).isEmpty)
+      assert(EmbedIngest.refreshedPrincipal(spark, dir).isEmpty)
+    }
+  }
 }
