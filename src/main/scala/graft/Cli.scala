@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.plans.{Catalogs, DirectoryPlanner, IdentityPlanner}
@@ -29,6 +31,9 @@ import graft.sinks.DirectoryApplier
   * logs what would happen instead (_scripts.py DRY_RUN), `--no-verify` /
   * `--onefs-user` / `--onefs-password` / `--user-password` are accepted
   * for flag parity (no TLS endpoint exists here; they only shape logging).
+  *
+  * create-users evaluates its catalog-sized identity plan once; the
+  * script, the one-job apply and the dry-run log all read those rows.
   *
   * Exit codes match argparse/catches semantics: 0 ok, 1 caught tool error
   * (cli.py:33-47), 2 usage error.
@@ -145,6 +150,7 @@ object Cli {
 
   /** Identity plan with no pre-existing identities (a fresh zone — the
     * CLI's re-run story goes through the planner's existing-state inputs).
+    * Lazy: create-directories plans its ids inside the directory plan.
     */
   private def identityPlan(spark: SparkSession, c: Config): DataFrame = {
     import spark.implicits._
@@ -163,13 +169,18 @@ object Cli {
       val name = s"${System.currentTimeMillis() / 1000}-${c.zone}-${c.dist}$suffix"
       c.command match {
         case "create-users" =>
-          val plan = identityPlan(spark, c)
+          // the inputs are the literal catalog, so the plan is
+          // catalog-sized: evaluate it once, in seq order, and let the log,
+          // the script and the apply read those rows
+          val lazyPlan = identityPlan(spark, c)
+          val rows = lazyPlan.collect()
           if (c.dry) {
             logger.info(DryRun)
             logger.info(s"A script would have been created at ${c.target}/$name.sh.")
             logger.info("The following actions would have populated it and the target:")
-            plan.collect().foreach(r => logger.info(r.getAs[String]("shell_line")))
+            rows.foreach(r => logger.info(r.getAs[String]("shell_line")))
           } else {
+            val plan = spark.createDataFrame(rows.toSeq.asJava, lazyPlan.schema)
             // the reference applies to the cluster AND writes the replay
             // script (identities.py:224-229); here the live target is the
             // user-db sidecar under TARGET, the script lands beside it

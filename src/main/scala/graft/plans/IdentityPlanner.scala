@@ -72,7 +72,7 @@ object IdentityPlanner {
           .groupBy(identity)
           .exists(_._2.size > 1)
       case _ =>
-        ex.groupBy("name").count().filter(col("count") > 1).limit(1).count() > 0
+        !ex.groupBy("name").count().filter(col("count") > 1).isEmpty
     }
     if (dup) throw new graft.DuplicateIdentityError(kind)
     val joined = demand.join(broadcast(ex), Seq("name"), "left")
@@ -233,7 +233,8 @@ object IdentityPlanner {
 
   /** Script sink (identities.py:224-229): header once, then the plan's
     * shell lines in creation order — the whole file is one deterministic
-    * text artifact.
+    * text artifact, so its lines are one partition sorted in place (a
+    * global sort would add a range exchange only to coalesce it again).
     */
   def scriptLines(plan: DataFrame): DataFrame = {
     val header = plan.sparkSession
@@ -243,10 +244,11 @@ object IdentityPlanner {
       .toDF("seq", "shell_line")
     header
       .unionByName(plan.select(col("seq"), col("shell_line")))
-      .orderBy("seq")
+      .coalesce(1)
+      .sortWithinPartitions("seq")
       .select("shell_line")
   }
 
   def writeScript(plan: DataFrame, path: String): Unit =
-    scriptLines(plan).coalesce(1).write.mode("overwrite").text(path)
+    scriptLines(plan).write.mode("overwrite").text(path)
 }

@@ -76,10 +76,6 @@ object DirectoryApplier {
         .toMap
   }
 
-  /** Apply a `directory_plan` DataFrame onto filesystem root `root`.
-    * Expects the plan's (path, mode_octal, owner, group) columns; `path`
-    * is zone-relative (leading slash) and lands under `root`.
-    */
   /** Post-apply epilogue — the reference's auth-cache flush
     * (onefs.py:1037-1070, invoked exactly once after ALL identities are
     * created, identities.py:185-186): applied state must become visible
@@ -94,6 +90,10 @@ object DirectoryApplier {
   def flushTargetCaches(plan: DataFrame, root: String): Unit =
     plan.sparkSession.catalog.refreshByPath(root)
 
+  /** Apply a `directory_plan` DataFrame onto filesystem root `root`.
+    * Expects the plan's (path, mode_octal, owner, group) columns; `path`
+    * is zone-relative (leading slash) and lands under `root`.
+    */
   def applyPlan(
       plan: DataFrame,
       root: String,

@@ -6,7 +6,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{array_position, col, monotonically_increasing_id, typedLit}
 
 /** The live apply path for `identity_plan` — the users-tool analog of
   * [[DirectoryApplier]], closing the reference's last effect-level
@@ -41,17 +42,21 @@ import org.apache.spark.sql.DataFrame
   *    `.authcache_epoch` counter in the db so the flush itself is
   *    observable.
   *
-  * Phases apply in the reference's creation order — groups, users,
-  * memberships, proxy users (iterate_identities, identities.py:284-309) —
-  * because later phases read earlier phases' state (pgid resolution,
-  * membership referential checks). WITHIN a phase rows are independent and
-  * distribute through [[RetryingSink.foreachRowWithRetryStateful]]; each
-  * row's mutation serializes on the db's exclusive lock (a JVM-level mutex
-  * plus a `FileLock` for cross-process safety) — the serialization point a
-  * REST endpoint provides server-side. The db is catalog-sized (tens of
-  * rows per distribution), so the lock is never a data-scale bottleneck:
-  * data-scale work stays in the planner's DataFrames; this sink only lands
-  * the tiny effect set.
+  * Rows apply in the reference's creation order — groups, users,
+  * memberships, proxy users (iterate_identities, identities.py:284-309),
+  * then `seq` (input order when the plan has no `seq`) — because later
+  * rows read earlier rows' state (pgid resolution, membership referential
+  * checks). The whole apply is ONE Spark job of ONE task through
+  * [[RetryingSink.foreachRowWithRetryStateful]], so any plan, lazy or
+  * local, is evaluated once; each row's mutation still takes the db's
+  * exclusive lock (a JVM-level mutex plus a `FileLock` for cross-process
+  * safety) — the serialization point a REST endpoint provides
+  * server-side. A transient error retries the row; a Spark task retry
+  * re-runs the whole apply, which is safe because every effect is
+  * check-then-apply. The db is catalog-sized (tens of rows per
+  * distribution), so the single task is never a data-scale bottleneck:
+  * data-scale work stays in the planner's DataFrames; this sink only
+  * lands the tiny effect set.
   */
 object IdentityApplier {
 
@@ -136,9 +141,80 @@ object IdentityApplier {
     if (Files.exists(f)) new String(Files.readAllBytes(f), UTF_8).trim.toLong else 0L
   }
 
+  /** The four effects in creation order (identities.py:284-309): the sort
+    * rank of each plan action and the stats counter its applied rows bump.
+    */
+  private val Phases = Seq("create_group", "create_user", "add_member", "create_proxy_user")
+
+  /** Per-row set-only record of what the effect OBSERVED PERFORMING,
+    * threaded across retry attempts; `action` picks the counter it commits to.
+    */
+  private final class RowDeltas { var action = ""; var applied = false; var burned = 0L }
+
+  // groups (identities.py:124-160)
+  private def createGroup(row: Row, db: Path, deltas: RowDeltas): Unit = {
+    val name = row.getAs[String]("name")
+    val g = readGroups(db)
+    if (!g.contains(name) && !deltas.applied) {
+      val taken = g.values.toSet
+      var gid = row.getAs[Long]("id")
+      while (taken.contains(gid)) { gid += 1; deltas.burned += 1 }
+      writeGroups(db, g.updated(name, gid))
+      deltas.applied = true
+    }
+  }
+
+  // users; pgid resolved from the TARGET (identities.py:268-281)
+  private def createUser(row: Row, db: Path, deltas: RowDeltas): Unit = {
+    val name = row.getAs[String]("name")
+    val u = readUsers(db)
+    if (!u.contains(name) && !deltas.applied) {
+      val pgroup = row.getAs[String]("arg")
+      val pgid = readGroups(db).getOrElse(
+        pgroup,
+        throw new UnknownIdentityError(s"primary group '$pgroup' of user '$name' not in db"),
+      )
+      val taken = u.values.map(_._1).toSet
+      var uid = row.getAs[Long]("id")
+      while (taken.contains(uid)) { uid += 1; deltas.burned += 1 }
+      writeUsers(db, u.updated(name, (uid, pgid)))
+      deltas.applied = true
+    }
+  }
+
+  // memberships, already-in-group tolerated (identities.py:100-112)
+  private def addMember(row: Row, db: Path, deltas: RowDeltas): Unit = {
+    val user = row.getAs[String]("name")
+    val group = row.getAs[String]("arg")
+    if (!readUsers(db).contains(user))
+      throw new UnknownIdentityError(s"membership references unknown user '$user'")
+    if (!readGroups(db).contains(group))
+      throw new UnknownIdentityError(s"membership references unknown group '$group'")
+    val f = db.resolve("members.db")
+    val cur = readLines(f)
+    val line = s"$user:$group"
+    if (!cur.contains(line) && !deltas.applied) {
+      writeLines(f, cur :+ line)
+      deltas.applied = true
+    }
+  }
+
+  // proxy users, duplicate returns WITHOUT update (identities.py:216-223)
+  private def createProxyUser(row: Row, db: Path, deltas: RowDeltas): Unit = {
+    val name = row.getAs[String]("name")
+    val f = db.resolve("proxy.db")
+    val cur = readLines(f)
+    if (!cur.exists(_.startsWith(s"$name=")) && !deltas.applied) {
+      writeLines(f, cur :+ s"$name=${row.getAs[String]("arg")}")
+      deltas.applied = true
+    }
+  }
+
   /** Apply an `identity_plan` DataFrame onto the user-db at `dbDir`.
-    * Expects the plan's (action, name, arg, id) columns; phases run in
-    * creation order, rows within a phase distribute with per-row retry.
+    * Expects the plan's (action, name, arg, id) columns and uses `seq`
+    * when present; rows of other actions are ignored. One job of one task
+    * applies every row in (phase, seq) order with per-row retry, then the
+    * auth-cache epilogue fires once.
     */
   def applyPlan(
       plan: DataFrame,
@@ -147,101 +223,46 @@ object IdentityApplier {
       backoffMs: Long = 10L,
   ): ApplyStats = {
     val sc = plan.sparkSession.sparkContext
-    val groups = sc.longAccumulator("graft.apply.groups")
-    val users = sc.longAccumulator("graft.apply.users")
-    val members = sc.longAccumulator("graft.apply.members")
-    val proxies = sc.longAccumulator("graft.apply.proxies")
+    val counters = Phases.map(a => a -> sc.longAccumulator(s"graft.apply.$a")).toMap
     val burns = sc.longAccumulator("graft.apply.burns")
     val dbStr = Paths.get(dbDir).toAbsolutePath.normalize().toString
 
-    final class RowDeltas { var applied = false; var burned = 0L }
-
-    // One task per phase, rows in plan (seq) order: every mutation takes
-    // the whole-db lock anyway, so parallel tasks would only race for it —
-    // and under a collision the burn outcome would then depend on task
+    // One task, rows in (phase, seq) order: every mutation takes the
+    // whole-db lock anyway, so parallel tasks would only race for it — and
+    // under a collision the burn outcome would then depend on task
     // scheduling, diverging from the sequential reference and from the
     // replay script written beside the db. The plan is catalog-sized;
-    // sequential apply is the faithful (and equally fast) choice.
-    def phase(action: String)(
-        effect: (org.apache.spark.sql.Row, Path, RowDeltas) => Unit,
-    )(commit: RowDeltas => Unit): Unit = {
-      val filtered = plan.filter(plan("action") === action)
-      val rows =
-        if (plan.columns.contains("seq"))
-          filtered.select("seq", "name", "arg", "id").coalesce(1).sortWithinPartitions("seq")
-        else filtered.select("name", "arg", "id").coalesce(1)
-      RetryingSink.foreachRowWithRetryStateful(
-        rows,
-        maxRetries,
-        backoffMs,
-      )(() => new RowDeltas) { (row, deltas) =>
+    // sequential apply is the faithful (and equally fast) choice. The
+    // input-order tiebreak is taken before coalesce merges partitions.
+    val order = if (plan.columns.contains("seq")) col("seq") else monotonically_increasing_id()
+    val rows = plan
+      .filter(col("action").isin(Phases: _*))
+      .select(
+        array_position(typedLit(Phases), col("action")).as("phase"),
+        order.as("ord"),
+        col("action"),
+        col("name"),
+        col("arg"),
+        col("id"),
+      )
+      .coalesce(1)
+      .sortWithinPartitions("phase", "ord")
+    RetryingSink.foreachRowWithRetryStateful(rows, maxRetries, backoffMs)(() => new RowDeltas) {
+      (row, deltas) =>
         val db = Paths.get(dbStr)
-        withDbLock(db)(effect(row, db, deltas))
-      }(commit)
-    }
+        deltas.action = row.getAs[String]("action")
+        withDbLock(db)(deltas.action match {
+          case "create_group" => createGroup(row, db, deltas)
+          case "create_user" => createUser(row, db, deltas)
+          case "add_member" => addMember(row, db, deltas)
+          case "create_proxy_user" => createProxyUser(row, db, deltas)
+        })
+    } { d => if (d.applied) counters(d.action).add(1L); if (d.burned > 0) burns.add(d.burned) }
 
-    // phase 1 — groups (identities.py:124-160)
-    phase("create_group") { (row, db, deltas) =>
-      val name = row.getAs[String]("name")
-      val g = readGroups(db)
-      if (!g.contains(name) && !deltas.applied) {
-        val taken = g.values.toSet
-        var gid = row.getAs[Long]("id")
-        while (taken.contains(gid)) { gid += 1; deltas.burned += 1 }
-        writeGroups(db, g.updated(name, gid))
-        deltas.applied = true
-      }
-    } { d => if (d.applied) groups.add(1L); if (d.burned > 0) burns.add(d.burned) }
-
-    // phase 2 — users; pgid resolved from the TARGET (identities.py:268-281)
-    phase("create_user") { (row, db, deltas) =>
-      val name = row.getAs[String]("name")
-      val u = readUsers(db)
-      if (!u.contains(name) && !deltas.applied) {
-        val pgroup = row.getAs[String]("arg")
-        val pgid = readGroups(db).getOrElse(
-          pgroup,
-          throw new UnknownIdentityError(s"primary group '$pgroup' of user '$name' not in db"),
-        )
-        val taken = u.values.map(_._1).toSet
-        var uid = row.getAs[Long]("id")
-        while (taken.contains(uid)) { uid += 1; deltas.burned += 1 }
-        writeUsers(db, u.updated(name, (uid, pgid)))
-        deltas.applied = true
-      }
-    } { d => if (d.applied) users.add(1L); if (d.burned > 0) burns.add(d.burned) }
-
-    // phase 3 — memberships, already-in-group tolerated (identities.py:100-112)
-    phase("add_member") { (row, db, deltas) =>
-      val user = row.getAs[String]("name")
-      val group = row.getAs[String]("arg")
-      if (!readUsers(db).contains(user))
-        throw new UnknownIdentityError(s"membership references unknown user '$user'")
-      if (!readGroups(db).contains(group))
-        throw new UnknownIdentityError(s"membership references unknown group '$group'")
-      val f = db.resolve("members.db")
-      val cur = readLines(f)
-      val line = s"$user:$group"
-      if (!cur.contains(line) && !deltas.applied) {
-        writeLines(f, cur :+ line)
-        deltas.applied = true
-      }
-    } { d => if (d.applied) members.add(1L) }
-
-    // phase 4 — proxy users, duplicate returns WITHOUT update (identities.py:216-223)
-    phase("create_proxy_user") { (row, db, deltas) =>
-      val name = row.getAs[String]("name")
-      val f = db.resolve("proxy.db")
-      val cur = readLines(f)
-      if (!cur.exists(_.startsWith(s"$name=")) && !deltas.applied) {
-        writeLines(f, cur :+ s"$name=${row.getAs[String]("arg")}")
-        deltas.applied = true
-      }
-    } { d => if (d.applied) proxies.add(1L) }
-
-    // C6 epilogue: exactly once per apply, strictly after every phase
+    // C6 epilogue: exactly once per apply, strictly after every row
     bumpAuthEpoch(Paths.get(dbStr))
-    ApplyStats(groups.value, users.value, members.value, proxies.value, burns.value)
+    val Seq(groups, users, members, proxies) = Phases.map(counters(_).sum)
+    ApplyStats(groups, users, members, proxies, burns.sum)
   }
 
   /** Read-back helpers for specs and the CLI log line. */

@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -88,35 +85,7 @@ class CacheLifecycleSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  /** Jobs started in job group `group` while `body` runs, counted once the
-    * listener has seen no new one for a second.
-    */
-  private def jobsIn(group: String)(body: => Unit): Int = {
-    val started = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) started.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var (last, quiet) = (-1, 0)
-      while (quiet < 10) {
-        Thread.sleep(100)
-        val now = started.get
-        quiet = if (now == last) quiet + 1 else 0
-        last = now
-      }
-      started.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("4 threads asking for the Lloyd centroids on one session build them once") {
-    def inGroup[T](g: String)(f: => T): T = {
-      spark.sparkContext.setJobGroup(g, g)
-      try f
-      finally spark.sparkContext.clearJobGroup()
-    }
     SubstrateCache.evictSession(spark)
     val single = jobsIn("lloyd-one")(inGroup("lloyd-one")(operators.KMeansOps.lloydCentroids(spark, dA)))
     assert(single > 0)

@@ -70,6 +70,51 @@ class CliSpec extends SparkSpec {
     assert(graft.sinks.IdentityApplier.authEpoch(db) == epoch + 1)
   }
 
+  private def freshZonePlan(dist: String, zone: String, cluster: String) = {
+    import spark.implicits._
+    val empty = Seq.empty[(String, Long)].toDF("name", "id")
+    graft.plans.IdentityPlanner.planIdentities(
+      spark, dist, zone, graft.plans.Catalogs.normalizeSuffix(cluster), 1025L, 1025L, empty, empty)
+  }
+
+  test("create-users evaluates its identity plan once: one plan collect + script + apply") {
+    val target = tmp("graft-cli-jobs")
+    val cli = jobsIn("cli-create-users")(inGroup("cli-create-users") {
+      assert(Cli.run(Seq("create-users", "--dist", "hdp", "--zone", "z2",
+        "--append-cluster-name", "cl2", "--quiet", target), spark) == 0)
+    })
+    val collect = jobsIn("cli-plan-collect")(inGroup("cli-plan-collect") {
+      freshZonePlan("hdp", "z2", "cl2").collect()
+    })
+    assert(collect > 0)
+    assert(cli <= collect + 2, s"create-users ran $cli jobs; one plan collect runs $collect")
+  }
+
+  test("create-users' script and user db match the lazy plan's byte for byte") {
+    import scala.jdk.CollectionConverters._
+    def files(dir: String): Map[String, Seq[Byte]] =
+      Files.list(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+    def scriptText(dir: String): Seq[Byte] =
+      files(dir).filter(_._1.startsWith("part-")).toSeq.sortBy(_._1).flatMap(_._2)
+
+    val target = tmp("graft-cli-bytes")
+    assert(Cli.run(Seq("create-users", "--dist", "cdp", "--zone", "z3",
+      "--append-cluster-name", "cl3", "--quiet", target), spark) == 0)
+    val script = Files.list(Paths.get(target)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".sh")).getOrElse(fail(s"no .sh artifact in $target"))
+
+    val other = tmp("graft-cli-lazy")
+    val plan = freshZonePlan("cdp", "z3", "cl3")
+    graft.plans.IdentityPlanner.writeScript(plan, s"$other/plan.sh")
+    graft.sinks.IdentityApplier.applyPlan(plan, s"$other/userdb")
+
+    assert(scriptText(script.toString).nonEmpty)
+    assert(scriptText(script.toString) == scriptText(s"$other/plan.sh"))
+    assert(files(s"$target/userdb").keySet.contains("members.db"))
+    assert(files(s"$target/userdb") == files(s"$other/userdb"))
+  }
+
   test("create-directories applies; second run is a no-op") {
     val target = tmp("graft-cli-dirs")
     val log = s"$target/../cli-dirs.log"

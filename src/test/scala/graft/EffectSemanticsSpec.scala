@@ -253,6 +253,47 @@ class EffectSemanticsSpec extends SparkSpec {
     assert(again.total == 0 && again.burns == 0, again.toString)
   }
 
+  test("rows out of phase order over 3 partitions apply exactly like the ordered plan") {
+    import graft.sinks.IdentityApplier
+    def state(db: String) = (
+      IdentityApplier.groupsIn(db), IdentityApplier.usersIn(db), IdentityApplier.membersIn(db),
+      IdentityApplier.proxiesIn(db), IdentityApplier.authEpoch(db))
+    // a member row before its user and group rows, one row per partition
+    // (no seq: input order breaks ties within a phase)
+    val rows = Seq(
+      ("add_member", "alice", "hive", -1L),
+      ("create_user", "alice", "hive", 3000L),
+      ("create_group", "hive", "", 2000L),
+    )
+    val ordered = rows.reverse.toDF("action", "name", "arg", "id")
+    val scattered = spark.sparkContext.parallelize(rows, 3).toDF("action", "name", "arg", "id")
+    assert(scattered.rdd.getNumPartitions == 3)
+    // the squatters of the burn test: gid 2000 and uids 3000/3001 taken
+    def applied(plan: org.apache.spark.sql.DataFrame) = {
+      val db = java.nio.file.Files.createTempDirectory("graft-scatter").toString
+      IdentityApplier.applyPlan(
+        Seq(("create_group", "squatter", "", 2000L), ("create_group", "pg", "", 1999L),
+          ("create_user", "ghost1", "pg", 3000L), ("create_user", "ghost2", "pg", 3001L))
+          .toDF("action", "name", "arg", "id"),
+        db, backoffMs = 1L)
+      (IdentityApplier.applyPlan(plan, db, backoffMs = 1L), state(db))
+    }
+    val want = applied(ordered)
+    assert(want._1 == IdentityApplier.ApplyStats(1, 1, 1, 0, 3), want._1.toString)
+    assert(applied(scattered) == want)
+
+    // a seq-ordered identity plan, reversed and repartitioned: same stats, same db
+    val plan = SparkEntry.queries("identity_plan")(spark, sfDir)
+    val reversed = plan.orderBy(desc("seq")).repartition(3)
+    def fresh(p: org.apache.spark.sql.DataFrame) = {
+      val db = java.nio.file.Files.createTempDirectory("graft-scatter-seq").toString
+      (IdentityApplier.applyPlan(p, db, backoffMs = 1L), state(db))
+    }
+    val seqWant = fresh(plan)
+    assert(seqWant._1.members > 0 && seqWant._1.proxies > 0, seqWant._1.toString)
+    assert(fresh(reversed) == seqWant)
+  }
+
   test("proxy duplicates are tolerated without update; unknown references are permanent errors") {
     import graft.sinks.IdentityApplier
     val db = java.nio.file.Files.createTempDirectory("graft-proxy").toString

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,4 +34,34 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir: String = TestSpark.sfDir
+
+  /** Runs `f` with job group `g` set on this thread. */
+  def inGroup[T](g: String)(f: => T): T = {
+    spark.sparkContext.setJobGroup(g, g)
+    try f
+    finally spark.sparkContext.clearJobGroup()
+  }
+
+  /** Jobs started in job group `group` while `body` runs, counted once the
+    * listener has seen no new one for a second.
+    */
+  def jobsIn(group: String)(body: => Unit): Int = {
+    val started = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var (last, quiet) = (-1, 0)
+      while (quiet < 10) {
+        Thread.sleep(100)
+        val now = started.get
+        quiet = if (now == last) quiet + 1 else 0
+        last = now
+      }
+      started.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
