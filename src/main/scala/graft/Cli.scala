@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.plans.{Catalogs, DirectoryPlanner, IdentityPlanner}
@@ -32,8 +30,9 @@ import graft.sinks.DirectoryApplier
   * `--onefs-user` / `--onefs-password` / `--user-password` are accepted
   * for flag parity (no TLS endpoint exists here; they only shape logging).
   *
-  * create-users evaluates its catalog-sized identity plan once; the
-  * script, the one-job apply and the dry-run log all read those rows.
+  * Both commands plan ids on the driver (a fresh zone has no state to
+  * query): create-users runs one job for the script and one for the
+  * apply, create-directories two broadcasts and the apply.
   *
   * Exit codes match argparse/catches semantics: 0 ok, 1 caught tool error
   * (cli.py:33-47), 2 usage error.
@@ -150,7 +149,8 @@ object Cli {
 
   /** Identity plan with no pre-existing identities (a fresh zone — the
     * CLI's re-run story goes through the planner's existing-state inputs).
-    * Lazy: create-directories plans its ids inside the directory plan.
+    * A local frame: with empty state the planner runs no Spark job, and
+    * the log, the script, the apply and the directory plan all read it.
     */
   private def identityPlan(spark: SparkSession, c: Config): DataFrame = {
     import spark.implicits._
@@ -169,18 +169,13 @@ object Cli {
       val name = s"${System.currentTimeMillis() / 1000}-${c.zone}-${c.dist}$suffix"
       c.command match {
         case "create-users" =>
-          // the inputs are the literal catalog, so the plan is
-          // catalog-sized: evaluate it once, in seq order, and let the log,
-          // the script and the apply read those rows
-          val lazyPlan = identityPlan(spark, c)
-          val rows = lazyPlan.collect()
+          val plan = identityPlan(spark, c)
           if (c.dry) {
             logger.info(DryRun)
             logger.info(s"A script would have been created at ${c.target}/$name.sh.")
             logger.info("The following actions would have populated it and the target:")
-            rows.foreach(r => logger.info(r.getAs[String]("shell_line")))
+            plan.collect().foreach(r => logger.info(r.getAs[String]("shell_line")))
           } else {
-            val plan = spark.createDataFrame(rows.toSeq.asJava, lazyPlan.schema)
             // the reference applies to the cluster AND writes the replay
             // script (identities.py:224-229); here the live target is the
             // user-db sidecar under TARGET, the script lands beside it

@@ -14,7 +14,9 @@ object DirectoryPlanner {
   type HdfsRootDirectoryException = graft.HdfsRootDirectoryError
 
   /** Zone-relative rebase (directories.py:47-63): validate roots, strip the
-    * zone prefix from the HDFS root, join each catalog path under it.
+    * zone prefix from the HDFS root, join each catalog path under it. The
+    * plan is catalog-sized, so it is one partition sorted in place by
+    * `seq` (a global sort would add a range-sample job and a shuffle).
     */
   def planDirectories(
       spark: SparkSession,
@@ -54,7 +56,8 @@ object DirectoryPlanner {
         format_string("chmod %s %s", conv($"mode".cast("string"), 10, 8), $"rebased").as("cmd_chmod"),
         format_string("chown %s:%s %s", $"owner", $"group", $"rebased").as("cmd_chown"),
       )
-      .orderBy("seq")
+      .coalesce(1)
+      .sortWithinPartitions("seq")
   }
 
   /** J5 referential integrity (tests/test_directories.py:6-14): every

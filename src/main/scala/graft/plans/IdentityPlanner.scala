@@ -1,41 +1,133 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The provisioning planner — reference parity with `isilon_create_users`
   * in `--dry` mode (identities.py:162-198, _scripts.py:81-131), Spark-first.
   *
-  * Everything is a pure DataFrame program producing an ordered *plan*
-  * (phase, seq, action, name, arg, id, shell_line); applying it is a sink
-  * (script text / REST calls), mirroring the reference's plan/effect
-  * separation via callback injection (identities.py:162-186). The existing
-  * users/groups tables arrive as DataFrames: at scale they are parquet
-  * snapshots of cluster state; the catalog side is literal and tiny, so
-  * every join against existing state broadcasts the catalog, never
-  * shuffling the state table.
+  * The product is an ordered *plan* (phase, seq, action, name, arg, id,
+  * shell_line); applying it is a sink (script text / REST calls),
+  * mirroring the reference's plan/effect separation via callback
+  * injection (identities.py:162-186). The existing users/groups tables
+  * arrive as DataFrames: at scale they are parquet snapshots of cluster
+  * state. The demand is the literal catalog, tens of rows.
   *
-  * ID allocation = the collision-avoiding rank-join (candidate pool ⟶
-  * anti-join taken ids ⟶ rank-to-rank join against ranked demand), proven
-  * equivalent to the reference's burn-in-encounter-order while-loop
-  * (identities.py:126-139, 233-254) in AllocationSpec.
+  * So Spark answers only the questions the existing state can answer, in
+  * two queries over both kinds at once, whose results are bounded by the
+  * demand rather than the state (nd = demand rows, need = a kind's demand
+  * rows):
+  *
+  *  1. names: one `groupBy(kind, name)` returns every duplicated name and
+  *     the existing id of every demand name, cut at nd + 1 rows. At most
+  *     nd rows name demand, so a cut result still shows a duplicate.
+  *  2. islands: the maximal runs of taken ids ≥ the kind's start
+  *     (gaps-and-islands: `id − dense_rank()` is constant along a run),
+  *     at most need + 1 per kind. Each island after the first is preceded
+  *     by a free id, so the first need + 1 cover need free ids.
+  *
+  * The allocation is the reference's while-loop (identities.py:126-139,
+  * 233-254), run on the driver over the catalog: demand in `seq` order,
+  * each new name takes the next id that lies in no island. AllocationSpec
+  * checks it against a literal loop. With empty local state both queries
+  * fold to empty relations and launch no job.
   */
 object IdentityPlanner {
+
+  /** One kind's state as the walk needs it: the existing ids of demand
+    * names (a null id counts as absent) and the islands of taken ids
+    * ≥ start as sorted, inclusive (lo, hi) runs.
+    */
+  private final case class KindState(ids: Map[String, Long], islands: IndexedSeq[(Long, Long)])
+
+  /** One kind's demand: its existing state, its start id and the names of
+    * its demand rows in `seq` order.
+    */
+  private final case class Demand(kind: String, existing: DataFrame, start: Long, names: Seq[String])
+
+  /** The two state queries of the object doc, for every kind at once.
+    * Fails with [[graft.DuplicateIdentityError]] on a duplicated name.
+    */
+  private def stateOf(demand: Seq[Demand]): Map[String, KindState] = {
+    val tagged = demand
+      .map(d => d.existing.select(lit(d.kind).as("kind"), col("name"), col("id").cast("long").as("id")))
+      .reduce(_ unionByName _)
+    def perKind(f: Demand => Column): Column =
+      demand.foldLeft(lit(null)) { (c, d) => when(col("kind") === d.kind, f(d)).otherwise(c) }
+
+    val names = tagged
+      .groupBy("kind", "name")
+      .agg(count(lit(1)).as("n"), first("id", ignoreNulls = true).as("id"))
+      .filter(col("n") > 1 || perKind(d => col("name").isin(d.names.distinct: _*)))
+      .limit(demand.map(_.names.size).sum + 1)
+      .collect()
+    names.find(_.getLong(2) > 1).foreach(r => throw new graft.DuplicateIdentityError(r.getString(0)))
+
+    val islands = tagged
+      .filter(col("id") >= perKind(d => lit(d.start)))
+      .withColumn("run", col("id") - dense_rank().over(Window.partitionBy("kind").orderBy("id")))
+      .groupBy("kind", "run")
+      .agg(min("id").as("lo"), max("id").as("hi"))
+      .withColumn("k", row_number().over(Window.partitionBy("kind").orderBy("lo")))
+      .filter(col("k") <= perKind(d => lit(d.names.size + 1L)))
+      .select("kind", "lo", "hi")
+      .collect()
+
+    demand.map { d =>
+      d.kind -> KindState(
+        names.iterator
+          .filter(r => r.getString(0) == d.kind && r.getLong(2) == 1 && !r.isNullAt(3))
+          .map(r => r.getString(1) -> r.getLong(3))
+          .toMap,
+        islands.iterator.filter(_.getString(0) == d.kind).map(r => (r.getLong(1), r.getLong(2))).toIndexedSeq.sorted,
+      )
+    }.toMap
+  }
+
+  /** The allocation walk: per demand name in `seq` order, (its existing id,
+    * true) or (the next id ≥ start in no island, false). With
+    * `burnOnExisting` an existing name consumes an id too.
+    */
+  private def walk(d: Demand, st: KindState, burnOnExisting: Boolean): Seq[(Long, Boolean)] = {
+    var next = d.start
+    var i = 0
+    def take(): Long = {
+      while (i < st.islands.size && st.islands(i)._2 < next) i += 1
+      if (i < st.islands.size && st.islands(i)._1 <= next) next = st.islands(i)._2 + 1
+      next += 1
+      next - 1
+    }
+    d.names.map { n =>
+      st.ids.get(n) match {
+        case Some(id) => if (burnOnExisting) take(); (id, true)
+        case None => (take(), false)
+      }
+    }
+  }
 
   /** Resolve ids for one entity kind: existing names keep their id
     * (create-or-lookup, identities.py:137-149, 251-263); new names get
     * contiguous ids from `start`, skipping any id already taken.
     *
-    * @param demand   (name, seq) creation demand, seq = creation order
-    * @param existing (name, id) current state
+    * @param demand   (name, seq) creation demand, seq = creation order.
+    *                 Collected to the driver: demand is catalog-sized by
+    *                 contract (large demand goes through
+    *                 [[allocateIdsSharded]]).
+    * @param existing (name, id) current state, any size. Spark answers the
+    *                 two state queries of the object doc over it: at most
+    *                 nd + 1 name rows and need + 1 islands come back, and
+    *                 the allocation walk runs on the driver.
     * @param kind     entity kind for error messages ("user"/"group")
-    * @return (name, seq, id, existed)
+    * @return (name, seq, id, existed), a local frame in `seq` order
     *
     * Fails with [[graft.DuplicateIdentityError]] when an existing name maps
     * to more than one id — the reference's "duplicate users (e.g. local and
     * LDAP)?" uniqueness assertion (onefs.py:1079-1082, 1274-1277); a silent
-    * left join would duplicate demand rows instead.
+    * lookup would pick one of them instead.
     *
     * Counter-burn semantics: the live reference consumes `next_uid`/
     * `next_gid` *before* discovering the name already exists
@@ -45,7 +137,7 @@ object IdentityPlanner {
     * names pack contiguously, which is what a plan-first engine wants
     * (re-running a plan against state it already created must not drift
     * ids). Pass `burnOnExisting = true` for reference-live parity: every
-    * demand row consumes a rank in the free list, and the ids ranked to
+    * demand row consumes the next free id, and the ids consumed by
     * existing names are discarded (burned).
     */
   def resolveIds(
@@ -55,47 +147,13 @@ object IdentityPlanner {
       kind: String = "identity",
       burnOnExisting: Boolean = false,
   ): DataFrame = {
-    val ex = existing.select(col("name"), col("id").cast("long").as("eid"))
-    // Uniqueness assert: for driver-local state (literal catalogs, the CLI's
-    // empty frames) check in memory — the two Spark jobs the distributed
-    // count costs are pure overhead there; real (scanned) state keeps the
-    // distributed check.
-    val dup = existing.queryExecution.optimizedPlan match {
-      // must mirror the distributed groupBy exactly: case-insensitive
-      // column resolution, and nulls form a (duplicable) group too
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.output.exists(_.name.equalsIgnoreCase("name")) =>
-        val nameIdx = l.output.indexWhere(_.name.equalsIgnoreCase("name"))
-        l.data.iterator
-          .map(r => if (r.isNullAt(nameIdx)) null else r.getString(nameIdx))
-          .toSeq
-          .groupBy(identity)
-          .exists(_._2.size > 1)
-      case _ =>
-        !ex.groupBy("name").count().filter(col("count") > 1).isEmpty
-    }
-    if (dup) throw new graft.DuplicateIdentityError(kind)
-    val joined = demand.join(broadcast(ex), Seq("name"), "left")
-    val hi = demand
-      .agg(count(lit(1)).as("nd"))
-      .crossJoin(ex.agg(count(lit(1)).as("ne")))
-      .select((lit(start) + col("nd") + col("ne")).as("hi"))
-    val pool = hi.select(explode(sequence(lit(start), col("hi"))).as("id"))
-    val free = pool
-      .join(ex.select(col("eid").as("id")), Seq("id"), "left_anti")
-      .withColumn("rn", row_number().over(Window.orderBy("id")))
-    // burn mode ranks every demand row (existing names consume-and-discard
-    // their rank's id); default ranks only new names (packed allocation)
-    val toRank = if (burnOnExisting) joined else joined.filter(col("eid").isNull)
-    val ranked = toRank.withColumn("rn", row_number().over(Window.orderBy("seq")))
-    val allocated = ranked
-      .join(free, Seq("rn"))
-      .filter(col("eid").isNull)
-      .select(col("name"), col("seq"), col("id"), lit(false).as("existed"))
-    val kept = joined
-      .filter(col("eid").isNotNull)
-      .select(col("name"), col("seq"), col("eid").as("id"), lit(true).as("existed"))
-    allocated.unionByName(kept)
+    val wanted = demand.select(col("name"), col("seq"))
+    val rows = wanted.collect().sortBy(_.get(1).asInstanceOf[Number].longValue)
+    val d = Demand(kind, existing, start, rows.map(_.getString(0)).toSeq)
+    val ids = walk(d, stateOf(Seq(d))(kind), burnOnExisting)
+    val out = rows.toSeq.zip(ids).map { case (r, (id, existed)) => Row(r.get(0), r.get(1), id, existed) }
+    val schema = wanted.schema.add("id", LongType, nullable = false).add("existed", BooleanType, nullable = false)
+    demand.sparkSession.createDataFrame(out.asJava, schema)
   }
 
   /** The 100 TB variant of resolveIds' allocation: each shard allocates
@@ -171,10 +229,24 @@ object IdentityPlanner {
       )
   }
 
-  /** Full identity plan for a distribution. Output ordered by seq:
+  private val PlanSchema = StructType(
+    Seq(
+      StructField("phase", IntegerType, nullable = false),
+      StructField("seq", IntegerType, nullable = false),
+      StructField("action", StringType),
+      StructField("name", StringType),
+      StructField("arg", StringType),
+      StructField("id", LongType),
+      StructField("shell_line", StringType),
+    ),
+  )
+
+  /** Full identity plan for a distribution, a local frame ordered by seq:
     * (phase, seq, action, name, arg, id, shell_line) — shell_line replays
     * the plan on Linux (identities.py:122, 159, 280); proxy users have no
-    * shell analog and render as comments.
+    * shell analog and render as comments. Spark runs the two state
+    * queries of the object doc for both kinds; the rows are built on the
+    * driver from the catalog.
     */
   def planIdentities(
       spark: SparkSession,
@@ -186,49 +258,31 @@ object IdentityPlanner {
       existingUsers: DataFrame, // name, id
       existingGroups: DataFrame, // name, id
   ): DataFrame = {
-    import spark.implicits._
-    val actions = Catalogs.actionsFor(dist, zone, suffix).toDF()
-
-    val groupDemand = actions.filter($"action" === "create_group").select($"name", $"seq")
-    val groups = resolveIds(groupDemand, existingGroups, startGid, "group")
-      .select($"name", $"seq", $"id".as("gid"))
-
-    val userDemand = actions.filter($"action" === "create_user").select($"name", $"seq")
-    val users = resolveIds(userDemand, existingUsers, startUid, "user")
-      .select($"name", $"seq", $"id".as("uid"))
-
+    val actions = Catalogs.actionsFor(dist, zone, suffix).sortBy(_.seq)
+    def demandOf(kind: String, existing: DataFrame, start: Long) =
+      Demand(kind, existing, start, actions.filter(_.action == s"create_$kind").map(_.name))
+    val demand = Seq(demandOf("group", existingGroups, startGid), demandOf("user", existingUsers, startUid))
+    val st = stateOf(demand)
+    val Seq(gids, uids) = demand.map(d => d.names.zip(walk(d, st(d.kind), burnOnExisting = false).map(_._1)))
     // useradd needs the (resolved) gid of the user's primary group
-    // (identities.py:268-281; onefs.py primary_group_of_user lookup).
-    val pgroups = groups.select($"name".as("pgname"), $"gid".as("pgid"))
-
-    actions
-      .join(groups.withColumnRenamed("gid", "g_id"), Seq("name", "seq"), "left")
-      .join(users.withColumnRenamed("uid", "u_id"), Seq("name", "seq"), "left")
-      .join(
-        broadcast(pgroups),
-        $"action" === "create_user" && $"arg" === $"pgname",
-        "left",
-      )
-      .select(
-        $"phase",
-        $"seq",
-        $"action",
-        $"name",
-        $"arg",
-        when($"action" === "create_group", $"g_id")
-          .when($"action" === "create_user", $"u_id")
-          .cast("long")
-          .as("id"),
-        when($"action" === "create_group", format_string("groupadd --gid %d %s", $"g_id", $"name"))
-          .when(
-            $"action" === "create_user",
-            format_string("useradd --uid %d --gid %d %s", $"u_id", $"pgid", $"name"),
-          )
-          .when($"action" === "add_member", format_string("usermod -a -G %s %s", $"arg", $"name"))
-          .otherwise(concat(lit("# proxyuser "), $"name", lit(": "), $"arg"))
-          .as("shell_line"),
-      )
-      .orderBy("seq")
+    // (identities.py:268-281; onefs.py primary_group_of_user lookup)
+    val pgid = gids.toMap
+    val (gi, ui) = (gids.iterator.map(_._2), uids.iterator.map(_._2))
+    val rows = actions.map { a =>
+      // a missing gid renders as "null", as Spark's format_string does
+      val (id, line) = a.action match {
+        case "create_group" =>
+          val g = Long.box(gi.next())
+          (g, "groupadd --gid %d %s".format(g, a.name))
+        case "create_user" =>
+          val u = Long.box(ui.next())
+          (u, "useradd --uid %d --gid %d %s".format(u, pgid.get(a.arg).map(Long.box).orNull, a.name))
+        case "add_member" => (null, s"usermod -a -G ${a.arg} ${a.name}")
+        case _ => (null, s"# proxyuser ${a.name}: ${a.arg}")
+      }
+      Row(a.phase, a.seq, a.action, a.name, a.arg, id, line)
+    }
+    spark.createDataFrame(rows.asJava, PlanSchema)
   }
 
   /** Script sink (identities.py:224-229): header once, then the plan's

@@ -7,7 +7,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 /** SURVEY.md §7 risk 3: the set-oriented collision-avoiding allocator
   * (candidate pool → anti-join taken → rank-to-rank join) must assign
   * exactly the ids the reference's while-loop assigns
-  * (identities.py:126-139: burn colliding ids in encounter order).
+  * (identities.py:126-139: burn colliding ids in encounter order), and so
+  * must `IdentityPlanner.resolveIds`, whose driver walk reads only the
+  * bounded islands of taken ids.
   */
 class AllocationSpec extends SparkSpec {
 
@@ -96,6 +98,48 @@ class AllocationSpec extends SparkSpec {
         "d4" -> 5001L, "d5" -> 1027L, "d6" -> 1028L,
       ),
     )
+  }
+
+  test("resolveIds equals the while-loop in both modes (ScalaCheck)") {
+    import spark.implicits._
+    val start = 1025L
+    // taken ids: a dense run, many single-id islands, ids below start;
+    // existing rows: squatters, squatters with null ids, and demand names
+    // that already exist (some with null ids, which count as absent)
+    val gen = for {
+      n <- Gen.choose(0, 30)
+      names = (0 until n).map(i => f"d$i%03d")
+      runLo <- Gen.choose(start - 5, start + 40)
+      runLen <- Gen.choose(0, 25)
+      singles <- Gen.listOf(Gen.choose(0L, 40L).map(k => start + 2 * k))
+      below <- Gen.listOf(Gen.choose(1L, start - 1))
+      nullSquatters <- Gen.choose(0, 3)
+      known <- Gen.someOf(names)
+      knownIds <- Gen.listOfN(known.size, Gen.option(Gen.choose(start - 10, start + 120)))
+    } yield {
+      val squatters = ((runLo until runLo + runLen) ++ singles ++ below).distinct
+      val existing = squatters.zipWithIndex.map { case (id, i) => (s"s$i", Option(id)) } ++
+        (0 until nullSquatters).map(i => (s"n$i", Option.empty[Long])) ++
+        known.toSeq.zip(knownIds)
+      (names, existing)
+    }
+    val prop = Prop.forAllNoShrink(gen) { case (names, existing) =>
+      val taken = existing.flatMap(_._2).toSet
+      val kept = existing.collect { case (n, Some(id)) if names.contains(n) => n -> id }.toMap
+      // demand rows arrive out of seq order; the walk takes them in seq order
+      val demand = names.zipWithIndex.reverse.toDF("name", "seq")
+      def resolved(burn: Boolean) = graft.plans.IdentityPlanner
+        .resolveIds(demand, existing.toDF("name", "id"), start, burnOnExisting = burn)
+        .collect()
+        .map(r => r.getAs[String]("name") -> (r.getAs[Long]("id"), r.getAs[Boolean]("existed")))
+        .toMap
+      def expected(alloc: Map[String, Long]) =
+        (alloc ++ kept).map { case (n, id) => n -> (id, kept.contains(n)) }
+      resolved(burn = false) == expected(loopAlloc(names.filterNot(kept.contains), taken, start)) &&
+      resolved(burn = true) == expected(loopAlloc(names, taken, start))
+    }
+    val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50).withWorkers(1), prop)
+    assert(result.passed, result.status.toString)
   }
 
   test("id_allocation is contiguous from 1025 in sort order") {

@@ -42,6 +42,26 @@ class PlannerScaleSpec extends SparkSpec {
     info(f"planned CDH against 200k existing identities in $secs%.1f s")
   }
 
+  test("planIdentities against 200k sparse squatters takes the free id of each gap") {
+    // 200k users/groups squatting every other id from 1025: 200k one-id
+    // islands, of which the walk needs only the first few
+    def squatters(prefix: String) = spark
+      .range(0, 200000)
+      .select(concat(lit(prefix), col("id")).as("name"), (col("id") * 2 + 1025L).as("id"))
+    val t0 = System.nanoTime()
+    val plan = IdentityPlanner
+      .planIdentities(spark, "cdh", "z1", "cl1", 1025L, 1025L, squatters("u"), squatters("g"))
+      .collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    for (action <- Seq("create_user", "create_group")) {
+      val ids = plan.filter(_.getAs[String]("action") == action).sortBy(_.getAs[Int]("seq")).map(_.getAs[Long]("id"))
+      assert(ids.nonEmpty)
+      assert(ids.toSeq == ids.indices.map(k => 1026L + 2 * k), s"$action ids must fill the gaps in order")
+    }
+    assert(secs < 120.0, s"200k-squatter planning took ${secs}s")
+    info(f"planned CDH against 200k sparse squatters in $secs%.1f s")
+  }
+
   test("sharded allocation survives >64 taken ids inside one shard's pool window") {
     // 500 taken ids densely packed at the front of shard 0's range: the old
     // fixed +64 slack dropped demand rows here; pool sizing must count them
