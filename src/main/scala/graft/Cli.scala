@@ -30,9 +30,9 @@ import graft.sinks.DirectoryApplier
   * `--onefs-user` / `--onefs-password` / `--user-password` are accepted
   * for flag parity (no TLS endpoint exists here; they only shape logging).
   *
-  * Both commands plan ids on the driver (a fresh zone has no state to
-  * query): create-users runs one job for the script and one for the
-  * apply, create-directories two broadcasts and the apply.
+  * Both commands plan and apply on the driver (a fresh zone has no state
+  * to query, and the plans are catalog-sized): create-users runs one Spark
+  * job, the script write, and create-directories none.
   *
   * Exit codes match argparse/catches semantics: 0 ok, 1 caught tool error
   * (cli.py:33-47), 2 usage error.
@@ -80,6 +80,8 @@ object Cli {
       case v :: tail => (v, tail)
       case Nil => throw UsageError(s"$flag expects a value")
     }
+    def long(flag: String, v: String): Long =
+      v.toLongOption.getOrElse(throw UsageError(s"$flag expects an integer, got '$v'"))
     while (rest.nonEmpty) {
       rest match {
         case "--zone" :: t => val (v, t2) = value("--zone", t); c = c.copy(zone = v); rest = t2
@@ -90,9 +92,9 @@ object Cli {
           val (v, t2) = value("--append-cluster-name", t)
           c = c.copy(appendClusterName = Some(v)); rest = t2
         case "--start-uid" :: t =>
-          val (v, t2) = value("--start-uid", t); c = c.copy(startUid = v.toLong); rest = t2
+          val (v, t2) = value("--start-uid", t); c = c.copy(startUid = long("--start-uid", v)); rest = t2
         case "--start-gid" :: t =>
-          val (v, t2) = value("--start-gid", t); c = c.copy(startGid = v.toLong); rest = t2
+          val (v, t2) = value("--start-gid", t); c = c.copy(startGid = long("--start-gid", v)); rest = t2
         case "--user-password" :: t =>
           val (v, t2) = value("--user-password", t); c = c.copy(userPassword = Some(v)); rest = t2
         case "--no-verify" :: t => c = c.copy(noVerify = true); rest = t
@@ -190,17 +192,16 @@ object Cli {
         case "create-directories" =>
           // resolve ids the way the reference queries them back from the
           // live cluster: the identity planner's allocations for this zone
-          val ids = identityPlan(spark, c)
-          val users = ids.filter(ids("action") === "create_user").select(
-            ids("name"), ids("id").as("uid"))
-          val groups = ids.filter(ids("action") === "create_group").select(
-            ids("name"), ids("id").as("gid"))
+          val ids = identityPlan(spark, c).collect()
+          def idsOf(action: String): Map[String, Long] = ids.collect {
+            case r if r.getAs[String]("action") == action => r.getAs[String]("name") -> r.getAs[Long]("id")
+          }.toMap
           val plan = DirectoryPlanner.planDirectories(
             spark, c.dist, suffix,
             zonePath = s"/ifs/zones/${c.zone}",
             hdfsRoot = s"/ifs/zones/${c.zone}/hadoop",
-            resolvedUsers = users,
-            resolvedGroups = groups,
+            uids = idsOf("create_user"),
+            gids = idsOf("create_group"),
           )
           if (c.dry) {
             logger.info(DryRun)
@@ -219,16 +220,6 @@ object Cli {
       case VersionRequested() => println(s"graft v$Version"); 0
       case UsageError(m) => System.err.println(s"usage error: $m"); 2
       case e: GraftError => System.err.println(s"[ERROR] ${e.getMessage}"); 1
-      case e: org.apache.spark.SparkException =>
-        // a GraftError raised inside a job surfaces wrapped — unwrap it for
-        // the reference's catches() exit-1 contract, rethrow anything else
-        Iterator
-          .iterate[Throwable](e)(_.getCause)
-          .takeWhile(_ != null)
-          .collectFirst { case g: GraftError => g } match {
-          case Some(g) => System.err.println(s"[ERROR] ${g.getMessage}"); 1
-          case None => throw e
-        }
     }
 
   def main(args: Array[String]): Unit = {

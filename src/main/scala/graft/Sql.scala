@@ -92,17 +92,10 @@ object Sql {
       val path = s"$sfDir/$n.parquet"
       val projection =
         if (n != "events") "*"
-        else {
-          import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-          val cols = spark.read.parquet(path).schema.fields.map { f =>
-            (f.name, f.dataType) match {
-              case ("ts", LongType) => "timestamp_micros(ts div 1000) AS ts"
-              case ("ts", TimestampNTZType) => "CAST(ts AS TIMESTAMP) AS ts"
-              case (name, _) => name
-            }
-          }
-          cols.mkString(", ")
-        }
+        else
+          spark.read.parquet(path).schema.fields.map { f =>
+            if (f.name == "ts") Tables.eventsTs(f.dataType).fold(f.name)(e => s"$e AS ts") else f.name
+          }.mkString(", ")
       spark.sql(
         s"CREATE OR REPLACE VIEW $database.$n AS SELECT $projection FROM parquet.`$path`")
     }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType}
 
 /** Loaders for the driver testdata tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -35,19 +37,18 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn(
-          "ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn(
-          "ts",
-          org.apache.spark.sql.functions.col("ts").cast(
-            org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    eventsTs(raw.schema("ts").dataType).fold(raw)(e => raw.withColumn("ts", expr(e)))
+  }
+
+  /** The SQL expression that normalizes an events `ts` column of physical
+    * type `t` to plain TIMESTAMP (see [[events]]), None when it already is
+    * one. The one owner of that decision: [[events]] applies it, and
+    * [[Sql.registerPersistent]] splices it into its view text.
+    */
+  def eventsTs(t: DataType): Option[String] = t match {
+    case LongType => Some("timestamp_micros(ts div 1000)")
+    case TimestampNTZType => Some("CAST(ts AS TIMESTAMP)")
+    case _ => None
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")

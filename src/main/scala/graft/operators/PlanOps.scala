@@ -111,7 +111,6 @@ object PlanOps extends QueryModule {
   private val directoryPlan = DeclaredQuery(
     "directory_plan",
     (s, d) => {
-      import s.implicits._
       val _ = d
       DirectoryPlanner.planDirectories(
         s,
@@ -119,8 +118,8 @@ object PlanOps extends QueryModule {
         Suffix,
         zonePath = "/ifs/zones/z1",
         hdfsRoot = "/ifs/zones/z1/hadoop",
-        resolvedUsers = dirUsers.toDF("name", "uid"),
-        resolvedGroups = dirGroups.toDF("name", "gid"),
+        uids = dirUsers.toMap,
+        gids = dirGroups.toMap,
       )
     }, {
       val dirRows = Catalogs

@@ -1,7 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Directory-provisioning planner — parity with `isilon_create_directories`
   * `--dry` (directories.py:41-96). Pure plan DataFrame: rebased path, octal
@@ -13,10 +16,28 @@ object DirectoryPlanner {
   /** directories.py:29-30, 54-57: refusing to manage /ifs is fatal. */
   type HdfsRootDirectoryException = graft.HdfsRootDirectoryError
 
+  // `directory_plan`'s output schema: the nullability is written into its
+  // parquet (seq and cmd_* REQUIRED), so it is stated, not inferred
+  private val PlanSchema = StructType(
+    Seq(
+      StructField("seq", IntegerType, nullable = false),
+      StructField("path", StringType),
+      StructField("owner", StringType),
+      StructField("group", StringType),
+      StructField("mode_octal", StringType),
+      StructField("uid", LongType),
+      StructField("gid", LongType),
+      StructField("cmd_mkdir", StringType, nullable = false),
+      StructField("cmd_chmod", StringType, nullable = false),
+      StructField("cmd_chown", StringType, nullable = false),
+    ),
+  )
+
   /** Zone-relative rebase (directories.py:47-63): validate roots, strip the
     * zone prefix from the HDFS root, join each catalog path under it. The
-    * plan is catalog-sized, so it is one partition sorted in place by
-    * `seq` (a global sort would add a range-sample job and a shuffle).
+    * plan is catalog-sized, so it is built on the driver from the catalog
+    * and the two id maps and returned as a local frame in `seq` order; an
+    * owner or group missing from its map gets a null id.
     */
   def planDirectories(
       spark: SparkSession,
@@ -24,10 +45,9 @@ object DirectoryPlanner {
       identitySuffix: String,
       zonePath: String,
       hdfsRoot: String,
-      resolvedUsers: DataFrame, // name, uid
-      resolvedGroups: DataFrame, // name, gid
+      uids: Map[String, Long],
+      gids: Map[String, Long],
   ): DataFrame = {
-    import spark.implicits._
     val sep = "/"
     val zoneRoot = zonePath.replaceAll(s"$sep+$$", "")
     val root = hdfsRoot.replaceAll(s"$sep+$$", "")
@@ -35,29 +55,15 @@ object DirectoryPlanner {
     require(root.startsWith(zoneRoot), s"HDFS root $root must live under the zone root $zoneRoot")
     val zoneHdfs = root.substring(zoneRoot.length)
 
-    val dirs = Catalogs.directoriesFor(dist, Catalogs.normalizeSuffix(identitySuffix)).toDF()
-    dirs
-      .withColumn(
-        "rebased",
-        concat(lit(zoneHdfs), lit(sep), regexp_replace($"path", "^/+", "")),
-      )
-      .withColumn("mode_octal", conv($"mode".cast("string"), 10, 8))
-      .join(broadcast(resolvedUsers.select($"name".as("owner"), $"uid")), Seq("owner"), "left")
-      .join(broadcast(resolvedGroups.select($"name".as("group"), $"gid")), Seq("group"), "left")
-      .select(
-        $"seq",
-        $"rebased".as("path"),
-        $"owner",
-        $"group",
-        $"mode_octal",
-        $"uid".cast("long").as("uid"),
-        $"gid".cast("long").as("gid"),
-        format_string("mkdir %s %s", $"rebased", conv($"mode".cast("string"), 10, 8)).as("cmd_mkdir"),
-        format_string("chmod %s %s", conv($"mode".cast("string"), 10, 8), $"rebased").as("cmd_chmod"),
-        format_string("chown %s:%s %s", $"owner", $"group", $"rebased").as("cmd_chown"),
-      )
-      .coalesce(1)
-      .sortWithinPartitions("seq")
+    def id(ids: Map[String, Long], name: String): java.lang.Long = ids.get(name).map(Long.box).orNull
+    val dirs = Catalogs.directoriesFor(dist, Catalogs.normalizeSuffix(identitySuffix)).sortBy(_.seq)
+    val rows = dirs.map { d =>
+      val path = s"$zoneHdfs$sep${d.path.replaceAll("^/+", "")}"
+      val mode = Integer.toOctalString(d.mode)
+      Row(d.seq, path, d.owner, d.group, mode, id(uids, d.owner), id(gids, d.group),
+        s"mkdir $path $mode", s"chmod $mode $path", s"chown ${d.owner}:${d.group} $path")
+    }
+    spark.createDataFrame(rows.asJava, PlanSchema)
   }
 
   /** J5 referential integrity (tests/test_directories.py:6-14): every

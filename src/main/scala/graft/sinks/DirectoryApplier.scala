@@ -17,19 +17,17 @@ import org.apache.spark.sql.DataFrame
   *
   * Idempotence is observable, not assumed: every effect is
   * check-then-apply, and only effects that *changed* state count in
-  * [[ApplyStats]] (via accumulators, so the contract holds distributed).
-  * Re-applying an applied plan therefore reports zero actions — the
-  * reference's re-run semantics (mkdir already-exists warning, chmod/chown
-  * to identical values) proven at the effect level, not just the plan
-  * level.
+  * [[ApplyStats]]. Re-applying an applied plan therefore reports zero
+  * actions — the reference's re-run semantics (mkdir already-exists
+  * warning, chmod/chown to identical values) proven at the effect level,
+  * not just the plan level.
   *
-  * Ordering: the reference applies rows sequentially so parents precede
-  * children; a distributed apply has no global order, so mkdir uses
-  * create-parents semantics (`Files.createDirectories`) and every row's
-  * own metadata write touches only that row's path — tasks never contend
-  * on the same file. Rows go through [[RetryingSink.foreachRowWithRetryStateful]],
-  * so a transient target error retries per-row without restarting the
-  * task.
+  * Ordering: like the reference, rows apply sequentially in plan order
+  * (the planner's `seq`), so parents precede children; mkdir still uses
+  * create-parents semantics (`Files.createDirectories`), so a plan whose
+  * parent row comes later, or is absent, applies too. Rows go through
+  * [[RetryingSink.foreachRowWithRetryStateful]], so a transient target
+  * error retries per row without restarting the apply.
   */
 object DirectoryApplier {
 
@@ -92,7 +90,9 @@ object DirectoryApplier {
 
   /** Apply a `directory_plan` DataFrame onto filesystem root `root`.
     * Expects the plan's (path, mode_octal, owner, group) columns; `path`
-    * is zone-relative (leading slash) and lands under `root`.
+    * is zone-relative (leading slash) and lands under `root`. The plan is
+    * catalog-sized: it is collected once (a local plan collects without a
+    * Spark job) and applied on the driver.
     */
   def applyPlan(
       plan: DataFrame,
@@ -101,13 +101,9 @@ object DirectoryApplier {
       backoffMs: Long = 10L,
       epilogue: Option[(DataFrame, String) => Unit] = None,
   ): ApplyStats = {
-    val sc = plan.sparkSession.sparkContext
-    val mkdirs = sc.longAccumulator("graft.apply.mkdirs")
-    val chmods = sc.longAccumulator("graft.apply.chmods")
-    val chowns = sc.longAccumulator("graft.apply.chowns")
-    val rows = plan.select("path", "mode_octal", "owner", "group")
-    // java.nio Path is not serializable — ship the normalized string
-    val rootStr = Paths.get(root).toAbsolutePath.normalize().toString
+    var mkdirs, chmods, chowns = 0L
+    val rows = plan.select("path", "mode_octal", "owner", "group").collect().toSeq
+    val rootPath = Paths.get(root).toAbsolutePath.normalize()
     // Per-row set-only flags, threaded ACROSS retry attempts: an effect
     // performed on an attempt that later failed transiently stays
     // recorded (the retry sees it already applied and would otherwise
@@ -116,7 +112,6 @@ object DirectoryApplier {
     RetryingSink.foreachRowWithRetryStateful(rows, maxRetries, backoffMs)(() =>
       new RowDeltas,
     ) { (row, deltas) =>
-      val rootPath = Paths.get(rootStr)
       val rel = row.getAs[String]("path").dropWhile(_ == '/')
       val modeOctal = row.getAs[String]("mode_octal")
       val owner = row.getAs[String]("owner")
@@ -151,13 +146,12 @@ object DirectoryApplier {
       if (meta != Map("mode" -> modeOctal, "own" -> wantOwn))
         Files.write(dir.resolve(MetaFile), newMeta.getBytes(UTF_8))
     } { deltas =>
-      if (deltas.mkdir) mkdirs.add(1L)
-      if (deltas.chmod) chmods.add(1L)
-      if (deltas.chown) chowns.add(1L)
+      if (deltas.mkdir) mkdirs += 1
+      if (deltas.chmod) chmods += 1
+      if (deltas.chown) chowns += 1
     }
     // C6 epilogue: fires exactly once per apply, strictly after every row
-    // (foreachPartition blocked until all partitions completed)
-    epilogue.getOrElse(flushTargetCaches _)(plan, rootStr)
-    ApplyStats(mkdirs.value, chmods.value, chowns.value)
+    epilogue.getOrElse(flushTargetCaches _)(plan, rootPath.toString)
+    ApplyStats(mkdirs, chmods, chowns)
   }
 }

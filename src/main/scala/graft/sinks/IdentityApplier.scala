@@ -7,7 +7,6 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{array_position, col, monotonically_increasing_id, typedLit}
 
 /** The live apply path for `identity_plan` — the users-tool analog of
   * [[DirectoryApplier]], closing the reference's last effect-level
@@ -46,17 +45,16 @@ import org.apache.spark.sql.functions.{array_position, col, monotonically_increa
   * memberships, proxy users (iterate_identities, identities.py:284-309),
   * then `seq` (input order when the plan has no `seq`) — because later
   * rows read earlier rows' state (pgid resolution, membership referential
-  * checks). The whole apply is ONE Spark job of ONE task through
-  * [[RetryingSink.foreachRowWithRetryStateful]], so any plan, lazy or
-  * local, is evaluated once; each row's mutation still takes the db's
-  * exclusive lock (a JVM-level mutex plus a `FileLock` for cross-process
-  * safety) — the serialization point a REST endpoint provides
-  * server-side. A transient error retries the row; a Spark task retry
-  * re-runs the whole apply, which is safe because every effect is
-  * check-then-apply. The db is catalog-sized (tens of rows per
-  * distribution), so the single task is never a data-scale bottleneck:
-  * data-scale work stays in the planner's DataFrames; this sink only
-  * lands the tiny effect set.
+  * checks). The plan is catalog-sized (tens of rows per distribution): it
+  * is collected once (a local plan collects without a Spark job) and
+  * applied on the driver through
+  * [[RetryingSink.foreachRowWithRetryStateful]]; data-scale work stays in
+  * the planner's DataFrames, this sink only lands the tiny effect set.
+  * Each row's mutation still takes the db's exclusive lock (a JVM-level
+  * mutex plus a `FileLock` for cross-process safety) — the serialization
+  * point a REST endpoint provides server-side. A transient error retries
+  * the row; re-running a whole apply is safe because every effect is
+  * check-then-apply.
   */
 object IdentityApplier {
 
@@ -74,7 +72,7 @@ object IdentityApplier {
   final class UnknownIdentityError(message: String) extends RuntimeException(message)
 
   // One JVM-level mutex per db path: FileLock is per-process (overlapping
-  // locks from two tasks in one executor JVM throw instead of blocking),
+  // locks from two threads in one JVM throw instead of blocking),
   // so same-JVM writers serialize here and cross-process writers on the
   // FileLock beneath.
   private val jvmLocks = TrieMap.empty[String, Object]
@@ -131,13 +129,15 @@ object IdentityApplier {
     * so concurrent applies cannot lose a flush record.
     */
   def bumpAuthEpoch(db: Path): Unit = withDbLock(db) {
-    val f = db.resolve(".authcache_epoch")
-    val cur = if (Files.exists(f)) new String(Files.readAllBytes(f), UTF_8).trim.toLong else 0L
-    Files.write(f, (cur + 1L).toString.getBytes(UTF_8))
+    Files.write(db.resolve(EpochFile), (readEpoch(db) + 1L).toString.getBytes(UTF_8))
   }
 
-  def authEpoch(dbDir: String): Long = {
-    val f = Paths.get(dbDir).resolve(".authcache_epoch")
+  def authEpoch(dbDir: String): Long = readEpoch(Paths.get(dbDir))
+
+  private val EpochFile = ".authcache_epoch"
+
+  private def readEpoch(db: Path): Long = {
+    val f = db.resolve(EpochFile)
     if (Files.exists(f)) new String(Files.readAllBytes(f), UTF_8).trim.toLong else 0L
   }
 
@@ -212,9 +212,9 @@ object IdentityApplier {
 
   /** Apply an `identity_plan` DataFrame onto the user-db at `dbDir`.
     * Expects the plan's (action, name, arg, id) columns and uses `seq`
-    * when present; rows of other actions are ignored. One job of one task
-    * applies every row in (phase, seq) order with per-row retry, then the
-    * auth-cache epilogue fires once.
+    * when present; rows of other actions are ignored. The catalog-sized
+    * plan is collected once and every row applies in (phase, seq) order
+    * with per-row retry, then the auth-cache epilogue fires once.
     */
   def applyPlan(
       plan: DataFrame,
@@ -222,34 +222,22 @@ object IdentityApplier {
       maxRetries: Int = 5,
       backoffMs: Long = 10L,
   ): ApplyStats = {
-    val sc = plan.sparkSession.sparkContext
-    val counters = Phases.map(a => a -> sc.longAccumulator(s"graft.apply.$a")).toMap
-    val burns = sc.longAccumulator("graft.apply.burns")
-    val dbStr = Paths.get(dbDir).toAbsolutePath.normalize().toString
+    val applied = Array.fill(Phases.size)(0L)
+    var burns = 0L
+    val db = Paths.get(dbDir).toAbsolutePath.normalize()
 
-    // One task, rows in (phase, seq) order: every mutation takes the
-    // whole-db lock anyway, so parallel tasks would only race for it — and
-    // under a collision the burn outcome would then depend on task
-    // scheduling, diverging from the sequential reference and from the
-    // replay script written beside the db. The plan is catalog-sized;
-    // sequential apply is the faithful (and equally fast) choice. The
-    // input-order tiebreak is taken before coalesce merges partitions.
-    val order = if (plan.columns.contains("seq")) col("seq") else monotonically_increasing_id()
-    val rows = plan
-      .filter(col("action").isin(Phases: _*))
-      .select(
-        array_position(typedLit(Phases), col("action")).as("phase"),
-        order.as("ord"),
-        col("action"),
-        col("name"),
-        col("arg"),
-        col("id"),
-      )
-      .coalesce(1)
-      .sortWithinPartitions("phase", "ord")
-    RetryingSink.foreachRowWithRetryStateful(rows, maxRetries, backoffMs)(() => new RowDeltas) {
+    // Rows in (phase, seq) order, sequentially: every mutation takes the
+    // whole-db lock anyway, and under a collision the burn outcome depends
+    // on the order, which must match the sequential reference and the
+    // replay script written beside the db. sortBy is stable, so without
+    // `seq` rows keep their input order within a phase.
+    val rows = plan.collect().toSeq.filter(r => Phases.contains(r.getAs[String]("action")))
+    val phase = (r: Row) => Phases.indexOf(r.getAs[String]("action"))
+    val ordered =
+      if (plan.columns.contains("seq")) rows.sortBy(r => (phase(r), r.getAs[Number]("seq").longValue))
+      else rows.sortBy(phase)
+    RetryingSink.foreachRowWithRetryStateful(ordered, maxRetries, backoffMs)(() => new RowDeltas) {
       (row, deltas) =>
-        val db = Paths.get(dbStr)
         deltas.action = row.getAs[String]("action")
         withDbLock(db)(deltas.action match {
           case "create_group" => createGroup(row, db, deltas)
@@ -257,12 +245,12 @@ object IdentityApplier {
           case "add_member" => addMember(row, db, deltas)
           case "create_proxy_user" => createProxyUser(row, db, deltas)
         })
-    } { d => if (d.applied) counters(d.action).add(1L); if (d.burned > 0) burns.add(d.burned) }
+    } { d => if (d.applied) applied(Phases.indexOf(d.action)) += 1; burns += d.burned }
 
     // C6 epilogue: exactly once per apply, strictly after every row
-    bumpAuthEpoch(Paths.get(dbStr))
-    val Seq(groups, users, members, proxies) = Phases.map(counters(_).sum)
-    ApplyStats(groups, users, members, proxies, burns.sum)
+    bumpAuthEpoch(db)
+    val Seq(groups, users, members, proxies) = applied.toSeq
+    ApplyStats(groups, users, members, proxies, burns)
   }
 
   /** Read-back helpers for specs and the CLI log line. */

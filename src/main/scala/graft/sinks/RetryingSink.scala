@@ -1,16 +1,13 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row}
-
 /** Effect-side retry semantics (reference `accesses_onefs` decorator,
   * onefs.py:566-596): transient errors retry with a fixed backoff,
   * permanent errors propagate. In this engine the *plan* is pure; a sink
-  * like this is where plan rows become REST calls/side effects, one
-  * partition per task (foreachPartition — connection reuse per task).
+  * like this is where plan rows become REST calls/side effects, one row
+  * at a time in the order given, like the reference's apply loops.
   *
-  * At scale: retries are per-row inside the task, so one flaky endpoint
-  * doesn't restart a whole task; Spark task retry remains the outer
-  * safety net for crashes.
+  * Retries are per row, so one flaky endpoint doesn't restart the whole
+  * apply.
   */
 object RetryingSink {
 
@@ -19,16 +16,16 @@ object RetryingSink {
     */
   final class TransientError(message: String) extends RuntimeException(message)
 
-  /** Apply `effect` to every plan row, retrying TransientError up to
+  /** Apply `effect` to every row, retrying TransientError up to
     * `maxRetries` times with `backoffMs` sleeps (the reference retries
-    * forever; a bound is the distributed-good-citizen version).
+    * forever; a bound is the good-citizen version).
     */
-  def foreachRowWithRetry(
-      plan: DataFrame,
+  def foreachRowWithRetry[R](
+      rows: Iterable[R],
       maxRetries: Int = 5,
       backoffMs: Long = 2000L,
-  )(effect: Row => Unit): Unit =
-    foreachRowWithRetryStateful[Unit](plan, maxRetries, backoffMs)(() => ())((row, _) =>
+  )(effect: R => Unit): Unit =
+    foreachRowWithRetryStateful[R, Unit](rows, maxRetries, backoffMs)(() => ())((row, _) =>
       effect(row),
     )(_ => ())
 
@@ -40,26 +37,24 @@ object RetryingSink {
     * (commit happens once) nor undercount (a retry that finds the
     * effect already applied doesn't erase the first attempt's record).
     */
-  def foreachRowWithRetryStateful[A](
-      plan: DataFrame,
+  def foreachRowWithRetryStateful[R, A](
+      rows: Iterable[R],
       maxRetries: Int = 5,
       backoffMs: Long = 2000L,
-  )(init: () => A)(effect: (Row, A) => Unit)(commit: A => Unit): Unit =
-    plan.foreachPartition { rows: Iterator[Row] =>
-      rows.foreach { row =>
-        val state = init()
-        var attempt = 0
-        var done = false
-        while (!done) {
-          try { effect(row, state); done = true }
-          catch {
-            case e: TransientError =>
-              attempt += 1
-              if (attempt > maxRetries) throw e
-              Thread.sleep(backoffMs)
-          }
+  )(init: () => A)(effect: (R, A) => Unit)(commit: A => Unit): Unit =
+    rows.foreach { row =>
+      val state = init()
+      var attempt = 0
+      var done = false
+      while (!done) {
+        try { effect(row, state); done = true }
+        catch {
+          case e: TransientError =>
+            attempt += 1
+            if (attempt > maxRetries) throw e
+            Thread.sleep(backoffMs)
         }
-        commit(state)
       }
+      commit(state)
     }
 }

@@ -87,12 +87,12 @@ class CliSpec extends SparkSpec {
       assert(Cli.run(Seq("create-users", "--dist", "hdp", "--zone", "z2",
         "--append-cluster-name", "cl2", "--quiet", tmp("graft-cli-jobs")), spark) == 0)
     })
-    assert(users <= 2, s"create-users ran $users jobs; the script and the apply need one each")
+    assert(users <= 1, s"create-users ran $users jobs; only the script write needs one")
     val dirs = jobsIn("cli-create-dirs")(inGroup("cli-create-dirs") {
       assert(Cli.run(Seq("create-directories", "--dist", "hdp", "--zone", "z2",
         "--append-cluster-name", "cl2", "--quiet", tmp("graft-cli-jobs")), spark) == 0)
     })
-    assert(dirs <= 3, s"create-directories ran $dirs jobs; two id broadcasts and the apply need one each")
+    assert(dirs == 0, s"create-directories ran $dirs jobs; planning and applying need none")
   }
 
   test("create-users' script and user db match the lazy plan's byte for byte") {
@@ -150,6 +150,8 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Seq("frobnicate"), spark) == 2)
     assert(Cli.run(Seq("create-users", "--zone", "z", "--dist", "cdh"), spark) == 2)
     assert(Cli.run(Seq("create-users", "--dist", "cdh", "t"), spark) == 2)
+    assert(Cli.run(Seq("create-users", "--zone", "z", "--dist", "cdh", "--start-uid", "x1", "t"), spark) == 2)
+    assert(Cli.run(Seq("create-users", "--zone", "z", "--dist", "cdh", "--start-gid", "1.5", "t"), spark) == 2)
   }
 
   test("StageProbe rejects a missing query list, unknown queries and bad reps with its usage") {

@@ -97,8 +97,8 @@ class PlannerSpec extends SparkSpec {
     intercept[DirectoryPlanner.HdfsRootDirectoryException] {
       DirectoryPlanner.planDirectories(
         spark, "cdh", "", "/ifs", "/ifs",
-        Seq(("hdfs", 1L)).toDF("name", "uid"),
-        Seq(("hadoop", 1L)).toDF("name", "gid"),
+        Map("hdfs" -> 1L),
+        Map("hadoop" -> 1L),
       )
     }
   }
