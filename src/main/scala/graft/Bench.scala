@@ -1,6 +1,27 @@
 package graft
 object Bench {
+  private val Usage =
+    "usage: graft.Bench  (env SPARK_GRAFT_SF_DIR=<sfDir>, SPARK_GRAFT_ONLY=name,name to run a subset," +
+      " SPARK_GRAFT_REPS=n timed passes, n >= 1, default 3)"
+
+  /** (the SPARK_GRAFT_ONLY subset, the SPARK_GRAFT_REPS count), or the
+    * message to print before exiting 2.
+    */
+  private[graft] def parseEnv(
+      only: Option[String],
+      reps: Option[String],
+  ): Either[String, (Option[Set[String]], Int)] = {
+    val names = only.map(_.split(",").toSet.filter(_.nonEmpty))
+    val unknown = names.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+    val n = reps.fold(Option(3))(_.toIntOption).filter(_ > 0)
+    if (names.exists(_.isEmpty)) Left(s"SPARK_GRAFT_ONLY names no query\n$Usage")
+    else if (unknown.nonEmpty) Left(s"unknown query in SPARK_GRAFT_ONLY: ${unknown.toSeq.sorted.mkString(",")}\n$Usage")
+    else n.toRight(s"SPARK_GRAFT_REPS must be a positive integer\n$Usage").map((names, _))
+  }
+
   def main(args: Array[String]): Unit = {
+    val (only, reps) = parseEnv(sys.env.get("SPARK_GRAFT_ONLY"), sys.env.get("SPARK_GRAFT_REPS"))
+      .fold({ msg => System.err.println(msg); sys.exit(2) }, identity)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
@@ -18,8 +39,6 @@ object Bench {
     // back-to-back reps per query, so a transient external-load spike —
     // this box shows occasional 50%+ ones — cannot own every rep of one
     // query; minutes apart, the min sees at least one quiet pass.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val suite = SparkEntry.queries.toSeq
       .sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -6,16 +6,21 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one registry for everything built once per (session, dataset) and
-  * shared by the queries over it. Three kinds of entry:
+  * shared by the queries over it. Four kinds of entry:
   *
   *  - FRAMES ([[substrate]], [[substrateColumnar]]): dedup shingle and pair
   *    tables, MinHash/SimHash signatures, LSH codes, kNN edges,
   *    intermediate tables a plan reads several times (`skipgram_pmi`'s
   *    pair census, `audience_overlap`'s memberships).
+  *  - persisted RDDs ([[rdd]]): the hash-partitioned adjacency of the
+  *    symmetric rank engine, which its co-partitioned rounds join without
+  *    a shuffle. Frames and RDDs are the substrates: [[liveCount]],
+  *    [[liveDatasets]] and [[buildSeconds]] count both.
   *  - driver VALUES ([[value]]): counts that size a recurrence, and the
   *    k·D-bounded results of driver loops (Lloyd centroids, PCA moments
   *    and directions) that several declared queries share.
@@ -30,13 +35,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * first evicts every entry the session holds for another dataset, and
   * every entry of a stopped session: memory and disk stay bounded by one
   * dataset's working set however many scale factors a long-lived JVM
-  * walks through. Eviction releases a frame's blocks, deletes a layout's
-  * directory and drops its catalog tables; layouts still live at JVM exit
-  * are deleted by one shutdown hook. An entry is never released while its
-  * dataset is live, so a consumer running on another thread never loses
-  * its blocks or files mid-read.
+  * walks through. Eviction releases a frame's or an RDD's blocks, deletes
+  * a layout's directory and drops its catalog tables; layouts still live
+  * at JVM exit are deleted by one shutdown hook. An entry is never
+  * released while its dataset is live, so a consumer running on another
+  * thread never loses its blocks or files mid-read.
   *
-  * Each frame records its build seconds ([[buildSeconds]], summed by
+  * Each substrate records its build seconds ([[buildSeconds]], summed by
   * graftbench's traced run as `substrate.build_s`); leaf substrates also
   * record the physical plan that built them ([[buildPlan]]).
   *
@@ -48,12 +53,13 @@ object SubstrateCache {
 
   private type Key = (SparkSession, String, String)
 
-  /** A cached frame, driver value or layout handle; the plan that built a
-    * leaf; a layout's directory and the catalog tables registered over
-    * it; and the build's wall seconds.
+  /** A cached frame, persisted RDD, driver value or layout handle; the
+    * plan that built a leaf; a layout's directory and the catalog tables
+    * registered over it; and the build's wall seconds.
     */
   private final case class Entry(
       frame: Option[DataFrame] = None,
+      rdd: Option[RDD[_]] = None,
       value: Any = null,
       plan: Option[String] = None,
       dir: Option[Path] = None,
@@ -71,9 +77,11 @@ object SubstrateCache {
 
   sys.addShutdownHook(entries.values.flatMap(_.dir).foreach(deleteTree))
 
-  /** Build seconds per frame tag for (session, dataset). */
+  private def isSubstrate(e: Entry): Boolean = e.frame.isDefined || e.rdd.isDefined
+
+  /** Build seconds per substrate tag for (session, dataset). */
   def buildSeconds(s: SparkSession, d: String): Map[String, Double] =
-    entries.collect { case ((ss, dd, tag), e) if (ss eq s) && dd == d && e.frame.isDefined => tag -> e.secs }.toMap
+    entries.collect { case ((ss, dd, tag), e) if (ss eq s) && dd == d && isSubstrate(e) => tag -> e.secs }.toMap
 
   /** The physical plan that built leaf substrate `tag`, if it was built
     * (and not evicted) in this session. Spec/audit hook.
@@ -141,6 +149,21 @@ object SubstrateCache {
       Entry(frame = Some(df))
     }.frame.get
 
+  /** Get-or-build a persisted RDD for (session, dataset) with a driver
+    * value computed alongside it. `build` returns the RDD, persisted and
+    * materialized by the action that computes the value (its `count()`,
+    * say). Use for state an RDD loop reads every round: the RDD keeps its
+    * partitioner, so a join with a co-partitioned RDD is narrow, which no
+    * frame leaf or columnar pin offers an RDD loop.
+    */
+  def rdd[R <: RDD[_], T](s: SparkSession, d: String, tag: String)(build: => (R, T)): (R, T) = {
+    val e = getOrBuild(s, d, tag) {
+      val (r, v) = build
+      Entry(rdd = Some(r), value = v)
+    }
+    (e.rdd.get.asInstanceOf[R], e.value.asInstanceOf[T])
+  }
+
   /** Get-or-compute a driver value for (session, dataset): a count, or a
     * driver loop's result. It is immutable while the working set lives,
     * so computing it once removes the driver jobs (or the whole Lloyd
@@ -191,10 +214,11 @@ object SubstrateCache {
   /** Drop every entry of session `s` (call on session stop). */
   def evictSession(s: SparkSession): Unit = evictWhere(_._1 eq s)
 
-  /** Drop every entry (and lock) whose key matches: release a frame's
-    * blocks and drop a layout's tables unless the context is already
-    * stopped (they died with it; dropping the entry keeps the strong key
-    * from pinning the session on the heap), and delete a layout's files.
+  /** Drop every entry (and lock) whose key matches: release a frame's or
+    * an RDD's blocks and drop a layout's tables unless the context is
+    * already stopped (they died with it; dropping the entry keeps the
+    * strong key from pinning the session on the heap), and delete a
+    * layout's files.
     */
   private def evictWhere(pred: Key => Boolean): Unit = {
     locks.keySet.filter(pred).foreach(locks.remove)
@@ -202,6 +226,7 @@ object SubstrateCache {
       entries.remove(k).foreach { e =>
         if (!k._1.sparkContext.isStopped) {
           e.frame.foreach(release(_, blocking = true))
+          e.rdd.foreach(_.unpersist(blocking = true))
           e.tables.foreach(t => k._1.sql(s"DROP TABLE IF EXISTS $t"))
         }
         e.dir.foreach(deleteTree)
@@ -211,9 +236,9 @@ object SubstrateCache {
 
   /** Datasets this session currently holds substrates for (spec hook). */
   def liveDatasets(s: SparkSession): Set[String] =
-    entries.collect { case ((ss, d, _), e) if (ss eq s) && e.frame.isDefined => d }.toSet
+    entries.collect { case ((ss, d, _), e) if (ss eq s) && isSubstrate(e) => d }.toSet
 
   /** Live substrate count for a session (spec hook). */
   def liveCount(s: SparkSession): Int =
-    entries.count { case ((ss, _, _), e) => (ss eq s) && e.frame.isDefined }
+    entries.count { case ((ss, _, _), e) => (ss eq s) && isSubstrate(e) }
 }

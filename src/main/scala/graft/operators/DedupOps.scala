@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.Tables._
 
 /** Near-duplicate detection over `documents` (north-star dedup surface):
@@ -1195,76 +1199,75 @@ object DedupOps extends QueryModule {
 
   /** The symmetric rank engine behind `fuzzy_pagerank`, `knn_pagerank`
     * and `textrank_keywords`: weighted PageRank over the undirected edge
-    * frame `edges` (a, b, w), one row per pair. The symmetrized edge table
-    * is built once per (session, dataset) under `tag` and its node count
-    * is cached as `tag:n`. Returns unordered (node, r).
+    * frame `edges` (a, b, w), one row per pair. The adjacency (both
+    * directions of every pair, grouped by source node into [[Adj]]) is
+    * the one shuffle of the graph: it is hash-partitioned on
+    * `spark.sql.shuffle.partitions` and pinned under `tag` once per
+    * (session, dataset), with its node count and the node type (`a`'s:
+    * long for the supplier and vector graphs, string for the term graph).
+    * Each call runs the [[pagerankSymmetric]] rounds over it and returns
+    * unordered (node, r): on a cache hit, one Spark job of [[PrIters]] + 1
+    * stages.
     */
   private[graft] def symmetricRank(s: SparkSession, d: String, tag: String)(
       edges: => DataFrame,
   ): DataFrame = {
-    // COLUMNAR pin, not the leaf: a checkpoint leaf advertises
-    // UnknownPartitioning and every round would re-exchange the edge table
-    // on da (the round-17 after-plans proved it); InMemoryRelation keeps
-    // the repartition(da), so the loop's largest frame never re-enters an
-    // exchange — at 100 TB that is 5 graph-sized shuffles removed. The
-    // frame is narrow and its build lineage shallow.
-    val ewd = graft.SubstrateCache.substrateColumnar(s, d, tag)(symmetricEdges(edges))
-    val n = graft.SubstrateCache.value(s, d, tag + ":n")(ewd.select(col("da")).distinct().count())
-    pagerankSymmetric(ewd, PrIters, Some(n))
+    val (adj, (n, nodeType)) = graft.SubstrateCache.rdd(s, d, tag) {
+      val e = edges
+      val adj = e
+        .select("a", "b", "w")
+        .rdd
+        .flatMap { r => Iterator((r.get(0), (r.get(1), r.getLong(2))), (r.get(1), (r.get(0), r.getLong(2)))) }
+        .groupByKey(new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions").toInt))
+        .mapValues { out =>
+          val (dst, w) = out.toArray.unzip
+          (dst, w, w.sum)
+        }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (adj, (adj.count(), e.schema("a").dataType))
+    }
+    val schema = StructType(Seq(StructField("node", nodeType), StructField("r", LongType)))
+    s.createDataFrame(pagerankSymmetric(adj, n).map { case (v, r) => Row(v, r) }, schema)
   }
 
-  /** Both directions of every undirected (a, b, w) pair as (da, db, w),
-    * with the weighted out-degree `wdeg = Σ w` of `da`, hash-partitioned on
-    * the loop's join key. The degree is a window over da, so its one
-    * shuffle is also the repartition(da): no degree join, whose build side
-    * flips with the frame's width and then needs its own exchange.
+  /** A node's out-edges in the symmetric graph: neighbors, their weights
+    * and the weighted out-degree `wdeg = Σ w`.
     */
-  private[graft] def symmetricEdges(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sym = edges
-      .select(col("a").as("da"), col("b").as("db"), col("w"))
-      .unionByName(edges.select(col("b").as("da"), col("a").as("db"), col("w")))
-    sym.withColumn("wdeg", sum("w").over(Window.partitionBy("da"))).repartition(col("da"))
-  }
+  private type Adj = (Array[Any], Array[Long], Long)
 
-  /** The weighted symmetric PageRank loop over a [[symmetricEdges]] table
-    * (da, db, w, wdeg): r'(b) = base + 85·(Σ_a (r(a) DIV wdeg(a))·w(a,b))
-    * DIV 100. Each term is ≤ r(a) because w(a,b) ≤ wdeg(a), so the sum is
-    * bounded by Σr ≈ 10¹² — BIGINT-safe at any graph size, unlike the
-    * naive r·w ordering whose product crosses 2⁶³ once weights reach 10⁷.
-    * With w = 1 it is the unweighted recurrence. Because both directions
-    * of every pair are present, every node has out-degree ≥ 1 (no
-    * dangling mass) and in-degree ≥ 1 (the contribution aggregation
-    * covers all nodes), so the loop skips both the dangling term and the
-    * per-round node re-join. A DIRECTED edge list silently leaks rank
-    * mass here — use [[pagerank]], which carries the dangling term. An
-    * empty graph short-circuits to an empty (node, r) frame.
+  /** The [[PrIters]] weighted symmetric PageRank rounds over a
+    * [[symmetricRank]] adjacency of `n` nodes:
+    * r'(b) = base + 85·(Σ_a (r(a) DIV wdeg(a))·w(a,b)) DIV 100. Each
+    * term is ≤ r(a) because w(a,b) ≤ wdeg(a), so the sum is bounded by
+    * Σr ≈ 10¹² — Long-safe at any graph size, unlike the naive r·w
+    * ordering whose product crosses 2⁶³ once weights reach 10⁷. With
+    * w = 1 it is the unweighted recurrence. Because both directions of
+    * every pair are present, every node has out-degree ≥ 1 (no dangling
+    * mass) and in-degree ≥ 1 (the contribution sums cover all nodes), so
+    * the rounds skip both the dangling term and a node re-join. A
+    * DIRECTED edge list silently leaks rank mass here — use [[pagerank]],
+    * which carries the dangling term. An empty graph has no ranks.
+    *
+    * The ranks share the adjacency's partitioner, so each round's join
+    * is narrow and its one shuffle is the `reduceByKey` of the
+    * contributions (map-side combined, node-sized): the adjacency never
+    * moves, nothing is broadcast, and the rounds are one lazy RDD whose
+    * collect is one job of [[PrIters]] + 1 stages.
     */
-  private[graft] def pagerankSymmetric(
-      ewd: DataFrame,
-      iters: Int = PrIters,
-      nKnown: Option[Long] = None,
-  ): DataFrame = {
-    val nodes = ewd.select(col("da").as("node")).distinct()
-    // n is one scalar job on the node set (graph-sized, not corpus-sized)
-    // — folding it into literals removes a broadcast join per round.
-    // Substrate-backed callers pass the cached count (nKnown) so the
-    // job runs once per session/dataset instead of once per invocation.
-    val n = nKnown.getOrElse(nodes.count())
-    if (n == 0) return nodes.select(col("node"), lit(0L).as("r"))
+  private def pagerankSymmetric(adj: RDD[(Any, Adj)], n: Long): RDD[(Any, Long)] = {
+    if (n == 0) return adj.mapValues(_ => 0L)
+    val parts = adj.partitioner.get
     val base = (15L * PrScale) / (100L * n)
-    // FIXED iteration count ⇒ bounded lineage (depth `iters`), so the whole
-    // loop stays ONE lazy plan — no per-round checkpoint materialization.
-    // The CC fixpoint checkpoints because its round count is unbounded;
-    // a data-independent loop doesn't need the lesson.
-    var ranks = nodes.select(col("node"), lit(PrScale / n).as("r"))
-    for (_ <- 1 to iters) {
-      ranks = ewd
-        .join(ranks, ewd("da") === ranks("node"))
-        .select(col("db").as("node"), expr("(r DIV wdeg) * w").as("c"))
-        .groupBy("node")
-        .agg(sum(col("c")).as("sc"))
-        .select(col("node"), (lit(base) + expr("(85 * sc) DIV 100")).as("r"))
+    var ranks = adj.mapValues(_ => PrScale / n)
+    for (_ <- 1 to PrIters) {
+      ranks = adj
+        .join(ranks, parts)
+        .flatMap { case (_, ((dst, w, wdeg), r)) =>
+          val q = r / wdeg
+          dst.indices.iterator.map(i => (dst(i), q * w(i)))
+        }
+        .reduceByKey(parts, _ + _)
+        .mapValues(sc => base + (85L * sc) / 100L)
     }
     ranks
   }
@@ -1376,7 +1379,7 @@ object DedupOps extends QueryModule {
     * the distributed engine pays 5 rounds of join+agg+left-join tiny-stage
     * churn that dominated the bench (transition_pagerank 4.3 s at sf0.1)
     * while the graph itself never exceeds a few hundred rows. Corpus-sized
-    * graphs (fuzzy_pagerank) stay on [[pagerank]].
+    * graphs (fuzzy_pagerank) stay distributed, on [[symmetricRank]].
     */
   private[graft] def pagerankLocal(
       edges: Seq[(String, String)],

@@ -2335,20 +2335,24 @@ object SimilarityOps extends QueryModule {
     * folds), this graph is CORPUS-sized — so it runs on the distributed
     * symmetric engine ([[graft.operators.DedupOps.symmetricRank]] with
     * unit weights: exact ×10¹² integer ranks, floor division, 5 fixed
-    * rounds = one lazy bounded-lineage plan), which is exactly the
-    * engine-selection boundary the centrality scaladocs state, exercised
-    * from the other side.
+    * rounds), which is exactly the engine-selection boundary the
+    * centrality scaladocs state, exercised from the other side.
     *
-    * Scale: per round one node-keyed hash join + agg over n·k-bounded
-    * edges. Degrees are cell-bounded, so no skew salting is needed.
+    * Scale: the n·k-bounded adjacency is hash-partitioned and pinned once
+    * per dataset; each round is a narrow join with the co-partitioned
+    * ranks and one node-keyed `reduceByKey`, so only node-sized
+    * contribution sums cross the network. Degrees are cell-bounded, so no
+    * skew salting is needed.
     */
   private val knnPagerank = DeclaredQuery(
     "knn_pagerank",
     (s, d) => {
-      val ue = knnEdgesScaled(s, d)
-        .select(least(col("src"), col("nbr")).as("a"), greatest(col("src"), col("nbr")).as("b"))
-        .distinct()
-      DedupOps.symmetricRank(s, d, "rank-edges:knn")(ue.withColumn("w", lit(1L))).orderBy("node")
+      DedupOps.symmetricRank(s, d, "rank-edges:knn") {
+        knnEdgesScaled(s, d)
+          .select(least(col("src"), col("nbr")).as("a"), greatest(col("src"), col("nbr")).as("b"))
+          .distinct()
+          .withColumn("w", lit(1L))
+      }.orderBy("node")
     }, {
       val steps = DedupOps.rankRoundsDuck("se", "deg")(p => s" sum($p.r // deg.deg)")
       // `se`, not `e`: the knnScaledDuckCtes prefix already owns `e`

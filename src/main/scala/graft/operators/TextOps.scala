@@ -1568,9 +1568,11 @@ object TextOps extends QueryModule {
     * Scale: the graph is bigram-vocabulary-bounded (Heaps-law sublinear,
     * never corpus-sized); pair aggregation is one map-side-combined
     * groupBy off the doc scan (zip_with over shifted slices — no
-    * per-index lambda); each of the 5 fixed iterations is one node-keyed
-    * join + agg over the vocabulary-sized edge list (at 10⁹-term vocab
-    * you'd key on a 64-bit term hash instead of the string).
+    * per-index lambda); the vocabulary-sized adjacency is hash-partitioned
+    * and pinned once, and each of the 5 fixed rounds is a narrow join
+    * with the co-partitioned ranks plus one term-keyed `reduceByKey` (at
+    * 10⁹-term vocab you'd key on a 64-bit term hash instead of the
+    * string).
     */
   private val TrMinCo = 3
   private val TrTopK = 10

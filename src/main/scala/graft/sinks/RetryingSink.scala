@@ -18,24 +18,14 @@ object RetryingSink {
 
   /** Apply `effect` to every row, retrying TransientError up to
     * `maxRetries` times with `backoffMs` sleeps (the reference retries
-    * forever; a bound is the good-citizen version).
-    */
-  def foreachRowWithRetry[R](
-      rows: Iterable[R],
-      maxRetries: Int = 5,
-      backoffMs: Long = 2000L,
-  )(effect: R => Unit): Unit =
-    foreachRowWithRetryStateful[R, Unit](rows, maxRetries, backoffMs)(() => ())((row, _) =>
-      effect(row),
-    )(_ => ())
-
-  /** Retry variant that threads a mutable per-row state through every
-    * attempt and commits it exactly once after the row succeeds. The
-    * state is where the effect records what it OBSERVED PERFORMING
-    * (set-only flags): an effect applied on an attempt that later threw
-    * a TransientError stays recorded, so stats neither double-count
-    * (commit happens once) nor undercount (a retry that finds the
-    * effect already applied doesn't erase the first attempt's record).
+    * forever; a bound is the good-citizen version). A mutable per-row
+    * state is threaded through every attempt and committed exactly once
+    * after the row succeeds. The state is where the effect records what
+    * it OBSERVED PERFORMING (set-only flags): an effect applied on an
+    * attempt that later threw a TransientError stays recorded, so stats
+    * neither double-count (commit happens once) nor undercount (a retry
+    * that finds the effect already applied doesn't erase the first
+    * attempt's record).
     */
   def foreachRowWithRetryStateful[R, A](
       rows: Iterable[R],

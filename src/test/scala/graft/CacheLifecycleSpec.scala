@@ -29,6 +29,7 @@ class CacheLifecycleSpec extends SparkSpec {
     SparkEntry.queries("ngram_jaccard")(spark, dA).count()
     SparkEntry.queries("minhash_near_dup")(spark, dA).count()
     SparkEntry.queries("ivf_ann")(spark, dA).count()
+    SparkEntry.queries("fuzzy_pagerank")(spark, dA).count()
     assert(probe(dA) == 7L && probe(dA) == 7L && scalarBuilds == 1, "a scalar is computed once")
     val countA = SubstrateCache.liveCount(spark)
     val rddsA = spark.sparkContext.getPersistentRDDs.size
@@ -42,6 +43,7 @@ class CacheLifecycleSpec extends SparkSpec {
     SparkEntry.queries("ngram_jaccard")(spark, dB).count()
     SparkEntry.queries("minhash_near_dup")(spark, dB).count()
     SparkEntry.queries("ivf_ann")(spark, dB).count()
+    SparkEntry.queries("fuzzy_pagerank")(spark, dB).count()
     assert(SubstrateCache.liveDatasets(spark) == Set(dB))
     assert(SubstrateCache.liveCount(spark) == countA, "same working-set size")
     assert(SubstrateCache.buildPlan(spark, dB, "minhash-banded").isDefined)

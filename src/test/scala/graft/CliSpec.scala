@@ -189,4 +189,17 @@ class CliSpec extends SparkSpec {
     assert(Verify.parseArgs(Array("/d", "/o"), Some("skipgram_pmi,audience_overlap")) ==
       Right(("/d", "/o", Some(Set("skipgram_pmi", "audience_overlap")))))
   }
+
+  test("Bench rejects unknown SPARK_GRAFT_ONLY entries and bad SPARK_GRAFT_REPS with its usage") {
+    val usage = "usage: graft.Bench"
+    val unknown = Bench.parseEnv(Some("skipgram_pmi,no_such_query"), None)
+    assert(unknown.left.exists(m => m.contains("unknown query in SPARK_GRAFT_ONLY: no_such_query") && m.contains(usage)),
+      unknown)
+    assert(Bench.parseEnv(Some(","), None).left.exists(_.contains(usage)))
+    for (reps <- Seq("0", "-1", "two", ""))
+      assert(Bench.parseEnv(None, Some(reps)).left.exists(_.contains(usage)), reps)
+    assert(Bench.parseEnv(None, None) == Right((None, 3)))
+    assert(Bench.parseEnv(Some("skipgram_pmi,audience_overlap"), Some("2")) ==
+      Right((Some(Set("skipgram_pmi", "audience_overlap")), 2)))
+  }
 }

@@ -49,20 +49,20 @@ class EffectSemanticsSpec extends SparkSpec {
   test("C1: transient failures retry and succeed; permanent failures propagate") {
     val plan = spark.range(0, 20).toDF("id").collect().toSeq
     EffectSemanticsSpec.attempts.clear()
-    RetryingSink.foreachRowWithRetry(plan, maxRetries = 3, backoffMs = 1L) { row =>
+    RetryingSink.foreachRowWithRetryStateful(plan, maxRetries = 3, backoffMs = 1L)(() => ()) { (row, _) =>
       val id = row.getLong(0)
       val attempts = EffectSemanticsSpec.attempts // static: same JVM in local mode
       attempts.add(id)
       // every 5th row fails once (count occurrences so the retry succeeds)
       if (id % 5 == 0 && java.util.Collections.frequency(attempts, id) == 1)
         throw new RetryingSink.TransientError(s"flaky $id")
-    }
+    }(_ => ())
     assert(EffectSemanticsSpec.attempts.size == 24, "20 rows + 4 retried")
 
     intercept[Exception] {
-      RetryingSink.foreachRowWithRetry(plan, maxRetries = 2, backoffMs = 1L) { _ =>
+      RetryingSink.foreachRowWithRetryStateful(plan, maxRetries = 2, backoffMs = 1L)(() => ()) { (_, _) =>
         throw new RetryingSink.TransientError("always down")
-      }
+      }(_ => ())
     }
   }
 

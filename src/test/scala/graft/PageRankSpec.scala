@@ -27,11 +27,11 @@ class PageRankSpec extends SparkSpec {
     * coverage is lost here because we still iterate all nodes with
     * sc = 0) — used only to measure the leak.
     */
-  private def seqPagerank(
-      edges: Seq[(Long, Long, Long)],
+  private def seqPagerank[V: Ordering](
+      edges: Seq[(V, V, Long)],
       iters: Int,
       dangling: Boolean,
-  ): Map[Long, Long] = {
+  ): Map[V, Long] = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
     val n = nodes.size.toLong
     val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._3).sum }
@@ -87,8 +87,7 @@ class PageRankSpec extends SparkSpec {
   test("symmetric graph: general pagerank reduces to the symmetric fast path") {
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (3L, 1L))
     val sym = pairs ++ pairs.map(_.swap)
-    val ewd = DedupOps.symmetricEdges(unit(pairs).toDF("a", "b", "w"))
-    val fast = ranksOf(DedupOps.pagerankSymmetric(ewd, iters = 5))
+    val fast = ranksOf(DedupOps.symmetricRank(spark, sfDir, "rank-edges:spec-unit")(unit(pairs).toDF("a", "b", "w")))
     val general = ranksOf(DedupOps.pagerank(sym.toDF("src", "dst"), iters = 5))
     val want = seqPagerank(unit(sym), iters = 5, dangling = true)
     assert(fast == want, "symmetric engine with w = 1 must match the sequential reference")
@@ -101,15 +100,27 @@ class PageRankSpec extends SparkSpec {
     val pairs = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 5L), (1L, 4L, 7L), (5L, 6L, 2L))
     val sym = pairs ++ pairs.map { case (a, b, w) => (b, a, w) }
     val want = seqPagerank(sym, iters = 5, dangling = true)
-    val pure = ranksOf(DedupOps.pagerankSymmetric(DedupOps.symmetricEdges(pairs.toDF("a", "b", "w"))))
-    assert(pure == want, s"weighted engine diverged: $pure vs $want")
-    assert(want != seqPagerank(unit(sym.map(e => (e._1, e._2))), iters = 5, dangling = true))
-    // the pinned entry point (edge table + node count cached under the tag)
-    // serves the same ranks, on the first call and on a cache hit
     val tag = "rank-edges:spec-weighted"
     val edges = pairs.toDF("a", "b", "w")
-    assert(ranksOf(DedupOps.symmetricRank(spark, sfDir, tag)(edges)) == want)
-    assert(ranksOf(DedupOps.symmetricRank(spark, sfDir, tag)(edges)) == want)
+    val pure = ranksOf(DedupOps.symmetricRank(spark, sfDir, tag)(edges))
+    assert(pure == want, s"weighted engine diverged: $pure vs $want")
+    assert(want != seqPagerank(unit(sym.map(e => (e._1, e._2))), iters = 5, dangling = true))
+    // a cache hit reads the pinned adjacency and node count: the rounds
+    // are one job, one stage per round plus the result stage
+    var hit = Map.empty[Long, Long]
+    val (jobs, stages) = jobsAndStagesIn("pagerank-hit") {
+      hit = inGroup("pagerank-hit")(ranksOf(DedupOps.symmetricRank(spark, sfDir, tag)(fail("rebuilt"))))
+    }
+    assert(hit == want)
+    assert((jobs, stages) == ((1, DedupOps.PrIters + 1)), s"cache hit ran $jobs jobs of $stages stages")
+
+    // string nodes (textrank's term graph): the node type follows the edges
+    val terms = Seq(("alpha", "beta", 4L), ("beta", "gamma", 1L), ("gamma", "alpha", 2L), ("delta", "alpha", 6L),
+      ("eps", "zeta", 3L))
+    val termWant = seqPagerank(terms ++ terms.map { case (a, b, w) => (b, a, w) }, iters = 5, dangling = true)
+    val termRanks = DedupOps.symmetricRank(spark, sfDir, "rank-edges:spec-terms")(terms.toDF("a", "b", "w"))
+    assert(termRanks.schema("node").dataType == org.apache.spark.sql.types.StringType)
+    assert(termRanks.collect().map(r => r.getAs[String]("node") -> r.getAs[Long]("r")).toMap == termWant)
   }
 
   test("driver fold (pagerankLocal) is bit-identical to the distributed engine") {
@@ -131,8 +142,7 @@ class PageRankSpec extends SparkSpec {
   test("empty graph short-circuits to an empty frame instead of dividing by zero") {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(DedupOps.pagerank(empty).count() == 0L)
-    val emptyEwd = DedupOps.symmetricEdges(Seq.empty[(Long, Long, Long)].toDF("a", "b", "w"))
-    val out = DedupOps.pagerankSymmetric(emptyEwd)
+    val out = DedupOps.symmetricRank(spark, sfDir, "rank-edges:spec-empty")(Seq.empty[(Long, Long, Long)].toDF("a", "b", "w"))
     assert(out.count() == 0L)
     assert(out.columns.toSeq == Seq("node", "r"))
   }

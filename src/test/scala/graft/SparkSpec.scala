@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,23 +45,32 @@ abstract class SparkSpec extends AnyFunSuite {
   /** Jobs started in job group `group` while `body` runs, counted once the
     * listener has seen no new one for a second.
     */
-  def jobsIn(group: String)(body: => Unit): Int = {
-    val started = new AtomicInteger
+  def jobsIn(group: String)(body: => Unit): Int = jobsAndStagesIn(group)(body)._1
+
+  /** Jobs started and stages submitted in job group `group` while `body`
+    * runs, counted once the listener has seen neither grow for a second. A
+    * stage a job skips (its shuffle output or cached RDD already exists) is
+    * never submitted, so it is not counted.
+    */
+  def jobsAndStagesIn(group: String)(body: => Unit): (Int, Int) = {
+    val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
+    def ours(p: java.util.Properties): Boolean = p != null && p.getProperty("spark.jobGroup.id") == group
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) started.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      var (last, quiet) = (-1, 0)
+      var (last, quiet) = ((-1, -1), 0)
       while (quiet < 10) {
         Thread.sleep(100)
-        val now = started.get
+        val now = (jobs.get, stages.get)
         quiet = if (now == last) quiet + 1 else 0
         last = now
       }
-      started.get
+      last
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }
